@@ -1,31 +1,32 @@
 package graft
 
-/** ML-fit benchmark lane (r19 verdict task 7): the headline bench
-  * (graft.Bench) deliberately excludes every query with an iterative
-  * training fit upstream (ALS / LDA / W2V / GMM / the classifier zoo /
-  * subword-tokenizer training / IVF-PQ index builds), so a fit-cost
-  * regression was invisible cross-round — those queries were timed only
-  * incidentally inside specs. This main times exactly that family.
+/** ML-fit benchmark lane: the headline bench (graft.Bench) excludes
+  * every query with an iterative training fit upstream (ALS / LDA / W2V /
+  * GMM / the classifier zoo / subword-tokenizer training / IVF-PQ index
+  * builds), so without this lane a fit-cost regression would only be
+  * timed incidentally inside specs. This main times exactly that family.
   *
-  * The query set is derived, not hand-listed: every registered
-  * SparkEntry query NOT in Bench.Headline — self-maintaining, so a
-  * future ML query is timed here the day it is registered (the
-  * InventorySpec discipline applied to benching).
+  * The query set is derived, not hand-listed: every registered query in
+  * the `Ml` lane, so a future ML query is timed here the day it is
+  * registered.
   *
   * ONE COLD PASS, no reps: ModelCache memoizes every fit per
   * (session, dir), so a second rep would time memoized reads, not the
   * fit — and the fit IS the metric of this lane. Cold single-shot
   * numbers carry ±2× machine noise; the lane exists to catch order-of-
-  * magnitude fit regressions cross-round, not ±20% drift (SCALING.md
-  * records the discipline). Execution order is alphabetical and
-  * deterministic; shared substrates (the memoized LDA corpus, the PQ
-  * codebooks, cleaned tokens) are charged to their first consumer,
-  * exactly like the headline run's convention.
+  * magnitude fit regressions, not ±20% drift (SCALING.md records the
+  * discipline). Execution order is alphabetical and deterministic;
+  * shared substrates (the memoized LDA corpus, the PQ codebooks, cleaned
+  * tokens) are charged to their first consumer, exactly like the
+  * headline run's convention.
+  *
+  * A query that throws is left out of the per-query map and `ml_total`,
+  * counted and named in both stdout lines, and makes the main exit
+  * non-zero.
   *
   * Output: the Bench JSON shape (one full line + a compact slowest-10
   * line), sidecar BENCH_ML_QUERIES.json (override with
-  * SPARK_GRAFT_BENCH_OUT); the round artifact convention is to commit
-  * the sidecar as BENCH_ML_r{N}.json. */
+  * SPARK_GRAFT_BENCH_OUT). */
 object BenchMl {
 
   def main(args: Array[String]): Unit = {
@@ -33,8 +34,7 @@ object BenchMl {
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val qs = SparkEntry.queries
-    val headline = Bench.Headline.toSet
-    val names = qs.keys.toSeq.filterNot(headline).sorted
+    val names = SparkEntry.lane(Ml).sorted
     val times = scala.collection.mutable.Map.empty[String, Double]
     val errs = scala.collection.mutable.Map.empty[String, String]
     for (name <- names) {
@@ -43,29 +43,34 @@ object BenchMl {
         qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         times(name) = (System.nanoTime() - t0) / 1e9
       } catch { case scala.util.control.NonFatal(e) =>
-        // NonFatal only (r20 ADVICE): an OutOfMemoryError/LinkageError
-        // must abort the lane — timing later queries in a corrupted JVM
-        // silently skews every subsequent number
+        // NonFatal only: an OutOfMemoryError/LinkageError must abort the
+        // lane — timing later queries in a corrupted JVM silently skews
+        // every subsequent number
         errs(name) = e.getClass.getSimpleName
       }
     }
-    val results = names.map(n => n -> times.getOrElse(n, -1.0))
+    val results = names.filter(times.contains).map(n => n -> times(n))
     val qjson = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = times.values.sum
     val errJson = errs.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"ml_total","value":$total,"unit":"sec","stat":"cold-single-shot","queries":$qjson,"errors":$errJson,"sf":"$sfDir"}"""
+    val failed = s""""n_errors":${errs.size},"errors":$errJson"""
+    val line = s"""{"metric":"ml_total","value":$total,"unit":"sec","stat":"cold-single-shot","queries":$qjson,$failed,"sf":"$sfDir"}"""
     println(line)
     val slowest = results.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"ml_total","value":$total,"unit":"sec","stat":"cold-single-shot","n_queries":${results.size},"n_errors":${errs.size},"queries":$slowest,"queries_note":"slowest-10 of ${results.size}; full map in BENCH_ML_QUERIES.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"ml_total","value":$total,"unit":"sec","stat":"cold-single-shot","n_queries":${results.size},"queries":$slowest,"queries_note":"slowest-10 of ${results.size}; full map in BENCH_ML_QUERIES.json",$failed,"sf":"$sfDir"}""")
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_ML_QUERIES.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
+    catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"bench-ml: could not write $out: $e") }
     spark.stop()
+    if (errs.nonEmpty) {
+      System.err.println(s"bench-ml: ${errs.size} queries failed: ${errs.keys.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -4,8 +4,8 @@ import graft.operators._
 import graft.sources.NQuads
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the operator
-  * inventory; each module contributes (queries, DuckDB oracle SQL). */
+/** The public query surface — see SURVEY.md §2 for the operator inventory; each
+  * module contributes its registry of queries (see [[QueryModule]]). */
 object SparkEntry {
 
   val modules: Seq[QueryModule] = Seq(
@@ -22,12 +22,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TextPrep.qDictionary(spark, "/root/testdata/sf0.001")
 
+  /** Every registered query, in module order. */
+  def registry: Seq[Q] = modules.flatMap(_.registry)
+
+  /** Names of the queries in one bench lane, in registry order. */
+  def lane(l: Lane): Seq[String] = registry.filter(_.lane == l).map(_.name)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_.queries).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys → weaker rows-only check. */
+  /** For each `Oracle`-gated query, equivalent ANSI SQL runnable by
+    * DuckDB on the same parquet tables. The other queries get a
+    * rows-only check, anchored by their `Cert`. */
   def oracleSql: Map[String, String] =
-    modules.flatMap(_.oracles).toMap
+    registry.collect { case Q(name, _, Oracle(sql), _) => name -> sql }.toMap
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -249,15 +249,9 @@ object Bpe extends QueryModule {
          TRUE AS roundtrip_ok, TRUE AS bounds_ok, TRUE AS merges_ok
        FROM t"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bpe" -> (qBpe _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_bpe_encode_audit" -> (qBpeEncodeAudit _),
-    "q_bpe_audit" -> (qBpeAudit _))
-
-  // The merge table itself stays rows-only (data-derived); the tokenizer
-  // contract certificates are the SQL-checkable pieces.
-  override def oracles: Map[String, String] = Map(
-    "q_bpe_audit" -> qBpeAuditSql,
-    "q_bpe_encode_audit" -> qBpeEncodeAuditSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_bpe", qBpe, Cert("q_bpe_audit")),
+    Q("q_bpe_encode", qBpeEncode, Cert("q_bpe_encode_audit")),
+    Q("q_bpe_encode_audit", qBpeEncodeAudit, Oracle(qBpeEncodeAuditSql), Ml),
+    Q("q_bpe_audit", qBpeAudit, Oracle(qBpeAuditSql), Ml))
 }

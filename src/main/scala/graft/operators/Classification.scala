@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.ml.classification._
 import org.apache.spark.ml.feature.StandardScaler
@@ -1206,42 +1206,30 @@ object Classification extends QueryModule {
          TRUE AS monotone_ok, TRUE AS range_ok, TRUE AS mass_preserved_ok
        FROM j"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_isotonic" -> (qIsotonic _),
-    "q_isotonic_audit" -> (qIsotonicAudit _),
-    "q_features_audit" -> (qFeaturesAudit _),
-    "q_classify_audit" -> (qClassifyAudit _),
-    "q_cv_audit" -> (qCvAudit _),
-    "q_classify_lr" -> (qClassifyLr _),
-    "q_classify_excluded" -> (qClassifyExcluded _),
-    "q_classify_svc" -> (qClassifySvc _),
-    "q_classify_rbf" -> (qClassifyRbf _),
-    "q_rbf_audit" -> (qRbfAudit _),
-    "q_classify_sgdh" -> (qClassifySgdHuber _),
-    "q_classify_nb" -> (qClassifyNb _),
-    "q_classify_rf" -> (qClassifyRf _),
-    "q_classify_gbt" -> (qClassifyGbt _),
-    "q_classify_dt" -> (qClassifyDt _),
-    "q_classify_mlp" -> (qClassifyMlp _),
-    "q_classify_knn" -> (qClassifyKnn _),
-    "q_classify_lr_us" -> (qClassifyLrUndersample _),
-    "q_classify_smote" -> (qClassifySmote _),
-    "q_clf_param_sweep" -> (qClfParamSweep _),
-    "q_clf_param_sweep_audit" -> (qClfParamSweepAudit _),
-    "q_bayes_sweep" -> (qBayesSweep _),
-    "q_bayes_audit" -> (qBayesAudit _),
-    "q_cv_train" -> (qCvTrain _),
-    "q_features" -> (qFeatures _))
-
-  // Iterative-ML training stays rows-only; the PAVA conservation
-  // certificate is the one SQL-checkable contract (q_minhash_audit rule).
-  override def oracles: Map[String, String] = Map(
-    "q_rbf_audit" -> qRbfAuditSql,
-    "q_isotonic_audit" -> qIsotonicAuditSql,
-    "q_features_audit" -> qFeaturesAuditSql,
-    "q_classify_audit" -> qClassifyAuditSql,
-    "q_classify_excluded" -> qClassifyExcludedSql,
-    "q_cv_audit" -> qCvAuditSql,
-    "q_clf_param_sweep_audit" -> qClfParamSweepAuditSql,
-    "q_bayes_audit" -> qBayesAuditSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_isotonic", qIsotonic, Cert("q_isotonic_audit"), Ml),
+    Q("q_isotonic_audit", qIsotonicAudit, Oracle(qIsotonicAuditSql), Ml),
+    Q("q_features_audit", qFeaturesAudit, Oracle(qFeaturesAuditSql), Ml),
+    Q("q_classify_audit", qClassifyAudit, Oracle(qClassifyAuditSql), Ml),
+    Q("q_cv_audit", qCvAudit, Oracle(qCvAuditSql), Ml),
+    Q("q_classify_lr", qClassifyLr, Cert("q_classify_audit"), Ml),
+    Q("q_classify_excluded", qClassifyExcluded, Oracle(qClassifyExcludedSql), Ml),
+    Q("q_classify_svc", qClassifySvc, Cert("q_classify_audit"), Ml),
+    Q("q_classify_rbf", qClassifyRbf, Cert("q_rbf_audit"), Ml),
+    Q("q_rbf_audit", qRbfAudit, Oracle(qRbfAuditSql), Ml),
+    Q("q_classify_sgdh", qClassifySgdHuber, Cert("q_classify_audit"), Ml),
+    Q("q_classify_nb", qClassifyNb, Cert("q_classify_audit"), Ml),
+    Q("q_classify_rf", qClassifyRf, Cert("q_classify_audit"), Ml),
+    Q("q_classify_gbt", qClassifyGbt, Cert("q_classify_audit"), Ml),
+    Q("q_classify_dt", qClassifyDt, Cert("q_classify_audit"), Ml),
+    Q("q_classify_mlp", qClassifyMlp, Cert("q_classify_audit"), Ml),
+    Q("q_classify_knn", qClassifyKnn, Cert("q_classify_audit"), Ml),
+    Q("q_classify_lr_us", qClassifyLrUndersample, Cert("q_classify_audit"), Ml),
+    Q("q_classify_smote", qClassifySmote, Cert("q_classify_audit"), Ml),
+    Q("q_clf_param_sweep", qClfParamSweep, Cert("q_clf_param_sweep_audit"), Ml),
+    Q("q_clf_param_sweep_audit", qClfParamSweepAudit, Oracle(qClfParamSweepAuditSql), Ml),
+    Q("q_bayes_sweep", qBayesSweep, Cert("q_bayes_audit"), Ml),
+    Q("q_bayes_audit", qBayesAudit, Oracle(qBayesAuditSql), Ml),
+    Q("q_cv_train", qCvTrain, Cert("q_cv_audit"), Ml),
+    Q("q_features", qFeatures, Cert("q_features_audit"), Ml))
 }

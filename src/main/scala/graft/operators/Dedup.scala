@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import graft.functions.TextFns
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -3046,91 +3046,50 @@ object Dedup extends QueryModule {
        FROM deg d LEFT JOIN k$KCoreRounds k ON d.a = k.a"""
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_assortativity" -> (qAssortativity _),
-    "q_kcore" -> (qKcore _),
-    "q_modularity" -> (qModularity _),
-    "q_rouge_pairs" -> (qRougePairs _),
-    "q_dedup_rate_curve" -> (qDedupRateCurve _),
-    "q_lsh_plan" -> (qLshPlan _),
-    "q_rate_knee" -> (qRateKnee _),
-    "q_lsh_plan_audit" -> (qLshPlanAudit _),
-    "q_bleu_pairs" -> (qBleuPairs _),
-    "q_splice_pairs" -> (qSplicePairs _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_jaccard" -> (qDedupJaccard _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_jaccard_prefix" -> (qJaccardPrefix _),
-    "q_novelty" -> (qNovelty _),
-    "q_bfs_depth" -> (qBfsDepth _),
-    "q_containment" -> (qContainment _),
-    "q_dedup_cosine" -> (qDedupCosine _),
-    "q_dedup_cosine_lsh" -> (qDedupCosineLsh _),
-    "q_dedup_semantic" -> (qDedupSemantic _),
-    "q_semantic_audit" -> (qSemanticAudit _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_minhash_audit" -> (qMinhashAudit _),
-    "q_simhash_audit" -> (qSimhashAudit _),
-    "q_cosine_lsh_audit" -> (qCosineLshAudit _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_decon_semantic" -> (qDeconSemantic _),
-    "q_source_overlap" -> (qSourceOverlap _),
-    "q_dup_spans" -> (qDupSpans _),
-    "q_exact_substr" -> (qExactSubstr _),
-    "q_exact_substr_spans" -> (qExactSubstrSpans _),
-    "q_source_verbatim" -> (qSourceVerbatim _),
-    "q_span_scrub" -> (qSpanScrub _),
-    "q_span_scrub_exact" -> (qSpanScrubExact _),
-    "q_split_leakfree" -> (qSplitLeakfree _),
-    "q_split_incremental" -> (qSplitIncremental _),
-    "q_canonical_incremental" -> (qCanonicalIncremental _),
-    "q_line_dedup" -> (qLineDedup _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_canonical" -> (qDedupCanonical _),
-    "q_graph_stats" -> (qGraphStats _),
-    "q_local_clustering" -> (qLocalClustering _),
-    "q_pagerank" -> (qPagerank _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_modularity" -> qModularitySql,
-    "q_kcore" -> qKcoreSql,
-    "q_assortativity" -> qAssortativitySql,
-    "q_rouge_pairs" -> qRougePairsSql,
-    "q_dedup_rate_curve" -> qDedupRateCurveSql,
-    "q_lsh_plan" -> qLshPlanSql,
-    "q_rate_knee" -> qRateKneeSql,
-    "q_lsh_plan_audit" -> qLshPlanAuditSql,
-    "q_bleu_pairs" -> qBleuPairsSql,
-    "q_splice_pairs" -> qSplicePairsSql,
-    "q_dedup_exact" -> qDedupExactSql,
-    "q_dedup_jaccard" -> qDedupJaccardSql,
-    "q_dedup_incremental" -> qDedupJaccardSql, // the full recompute IS the gate
-    "q_jaccard_prefix" -> qJaccardPrefixSql,
-    "q_novelty" -> qNoveltySql,
-    "q_bfs_depth" -> qBfsDepthSql,
-    "q_minhash_audit" -> qMinhashAuditSql,
-    "q_simhash_audit" -> qSimhashAuditSql,
-    "q_cosine_lsh_audit" -> qCosineLshAuditSql,
-    "q_semantic_audit" -> qSemanticAuditSql,
-    "q_containment" -> qContainmentSql,
-    "q_dedup_cosine" -> qDedupCosineSql,
-    "q_decontaminate" -> qDecontaminateSql,
-    "q_decon_semantic" -> qDeconSemanticSql,
-    "q_source_overlap" -> qSourceOverlapSql,
-    "q_dup_spans" -> qDupSpansSql,
-    "q_exact_substr" -> qExactSubstrSql,
-    "q_exact_substr_spans" -> qExactSubstrSpansSql,
-    "q_source_verbatim" -> qSourceVerbatimSql,
-    "q_span_scrub" -> qSpanScrubSql,
-    "q_span_scrub_exact" -> qSpanScrubExactSql,
-    "q_split_leakfree" -> qSplitLeakfreeSql,
-    "q_split_incremental" -> qSplitLeakfreeSql,
-    "q_canonical_incremental" -> qDedupCanonicalSql,
-    "q_line_dedup" -> qLineDedupSql,
-    "q_dedup_clusters" -> qDedupClustersSql,
-    "q_dedup_canonical" -> qDedupCanonicalSql,
-    "q_graph_stats" -> qGraphStatsSql,
-    "q_local_clustering" -> qLocalClusteringSql,
-    "q_pagerank" -> qPagerankSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_assortativity", qAssortativity, Oracle(qAssortativitySql)),
+    Q("q_kcore", qKcore, Oracle(qKcoreSql)),
+    Q("q_modularity", qModularity, Oracle(qModularitySql)),
+    Q("q_rouge_pairs", qRougePairs, Oracle(qRougePairsSql)),
+    Q("q_dedup_rate_curve", qDedupRateCurve, Oracle(qDedupRateCurveSql)),
+    Q("q_lsh_plan", qLshPlan, Oracle(qLshPlanSql)),
+    Q("q_rate_knee", qRateKnee, Oracle(qRateKneeSql)),
+    Q("q_lsh_plan_audit", qLshPlanAudit, Oracle(qLshPlanAuditSql)),
+    Q("q_bleu_pairs", qBleuPairs, Oracle(qBleuPairsSql)),
+    Q("q_splice_pairs", qSplicePairs, Oracle(qSplicePairsSql)),
+    Q("q_dedup_exact", qDedupExact, Oracle(qDedupExactSql)),
+    Q("q_dedup_jaccard", qDedupJaccard, Oracle(qDedupJaccardSql)),
+    // the full recompute IS the gate
+    Q("q_dedup_incremental", qDedupIncremental, Oracle(qDedupJaccardSql)),
+    Q("q_jaccard_prefix", qJaccardPrefix, Oracle(qJaccardPrefixSql)),
+    Q("q_novelty", qNovelty, Oracle(qNoveltySql)),
+    Q("q_bfs_depth", qBfsDepth, Oracle(qBfsDepthSql)),
+    Q("q_containment", qContainment, Oracle(qContainmentSql)),
+    Q("q_dedup_cosine", qDedupCosine, Oracle(qDedupCosineSql)),
+    Q("q_dedup_cosine_lsh", qDedupCosineLsh, Cert("q_cosine_lsh_audit")),
+    Q("q_dedup_semantic", qDedupSemantic, Cert("q_semantic_audit"), Ml),
+    Q("q_semantic_audit", qSemanticAudit, Oracle(qSemanticAuditSql), Ml),
+    Q("q_dedup_minhash", qDedupMinhash, Cert("q_minhash_audit")),
+    Q("q_minhash_audit", qMinhashAudit, Oracle(qMinhashAuditSql)),
+    Q("q_simhash_audit", qSimhashAudit, Oracle(qSimhashAuditSql)),
+    Q("q_cosine_lsh_audit", qCosineLshAudit, Oracle(qCosineLshAuditSql)),
+    Q("q_dedup_simhash", qDedupSimhash, Cert("q_simhash_audit")),
+    Q("q_decontaminate", qDecontaminate, Oracle(qDecontaminateSql)),
+    Q("q_decon_semantic", qDeconSemantic, Oracle(qDeconSemanticSql)),
+    Q("q_source_overlap", qSourceOverlap, Oracle(qSourceOverlapSql)),
+    Q("q_dup_spans", qDupSpans, Oracle(qDupSpansSql)),
+    Q("q_exact_substr", qExactSubstr, Oracle(qExactSubstrSql)),
+    Q("q_exact_substr_spans", qExactSubstrSpans, Oracle(qExactSubstrSpansSql)),
+    Q("q_source_verbatim", qSourceVerbatim, Oracle(qSourceVerbatimSql)),
+    Q("q_span_scrub", qSpanScrub, Oracle(qSpanScrubSql)),
+    Q("q_span_scrub_exact", qSpanScrubExact, Oracle(qSpanScrubExactSql)),
+    Q("q_split_leakfree", qSplitLeakfree, Oracle(qSplitLeakfreeSql)),
+    Q("q_split_incremental", qSplitIncremental, Oracle(qSplitLeakfreeSql)),
+    Q("q_canonical_incremental", qCanonicalIncremental, Oracle(qDedupCanonicalSql)),
+    Q("q_line_dedup", qLineDedup, Oracle(qLineDedupSql)),
+    Q("q_dedup_clusters", qDedupClusters, Oracle(qDedupClustersSql)),
+    Q("q_dedup_canonical", qDedupCanonical, Oracle(qDedupCanonicalSql)),
+    Q("q_graph_stats", qGraphStats, Oracle(qGraphStatsSql)),
+    Q("q_local_clustering", qLocalClustering, Oracle(qLocalClusteringSql)),
+    Q("q_pagerank", qPagerank, Oracle(qPagerankSql)))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import graft.functions.{TextFns, VectorMath}
 import org.apache.spark.ml.feature.{Word2Vec, Word2VecModel}
 import org.apache.spark.ml.functions.vector_to_array
@@ -148,10 +148,7 @@ object Embeddings extends QueryModule {
        FROM v"""
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_w2v" -> (qW2v _),
-    "q_w2v_audit" -> (qW2vAudit _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_w2v_audit" -> qW2vAuditSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_w2v", qW2v, Cert("q_w2v_audit"), Ml),
+    Q("q_w2v_audit", qW2vAudit, Oracle(qW2vAuditSql), Ml))
 }

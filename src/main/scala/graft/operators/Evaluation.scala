@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Ml, Oracle, Q, QueryModule}
 import graft.functions.JaroWinkler
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -50,7 +50,7 @@ object Evaluation extends QueryModule {
   private val qEvalMetricsSql = {
     s"""WITH pred AS (
          SELECT p.doc_id, p.pred_lang = 'en' AS pred, d.lang = 'en' AS gold
-         FROM (${TextAnalysis.oracles("q_lang_id")}) p
+         FROM (${TextAnalysis.qLangIdSql}) p
          JOIN documents d ON p.doc_id = d.doc_id),
        cm AS (
          SELECT
@@ -89,7 +89,7 @@ object Evaluation extends QueryModule {
   private val qKappaSql =
     s"""WITH pred AS (
          SELECT p.doc_id, p.pred_lang = 'en' AS pred, d.lang = 'en' AS gold
-         FROM (${TextAnalysis.oracles("q_lang_id")}) p
+         FROM (${TextAnalysis.qLangIdSql}) p
          JOIN documents d ON p.doc_id = d.doc_id),
        cm AS (
          SELECT
@@ -505,25 +505,14 @@ object Evaluation extends QueryModule {
            / (n_pos * n_neg) * 2 - 1, 6) AS gini
        FROM a"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_eval_metrics" -> (qEvalMetrics _),
-    "q_gold_standard" -> (qGoldStandard _),
-    "q_jaro_winkler" -> (qJaroWinkler _),
-    "q_kappa" -> (qKappa _),
-    "q_auc" -> (qAuc _),
-    "q_er_blocking" -> (qErBlocking _),
-    "q_er_sorted" -> (qErSorted _),
-    "q_fellegi" -> (qFellegi _),
-    "q_cv_folds" -> (qCvFolds _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_eval_metrics" -> qEvalMetricsSql,
-    "q_gold_standard" -> qGoldStandardSql,
-    "q_jaro_winkler" -> qJaroWinklerSql,
-    "q_kappa" -> qKappaSql,
-    "q_auc" -> qAucSql,
-    "q_er_blocking" -> qErBlockingSql,
-    "q_er_sorted" -> qErSortedSql,
-    "q_fellegi" -> qFellegiSql,
-    "q_cv_folds" -> qCvFoldsSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_eval_metrics", qEvalMetrics, Oracle(qEvalMetricsSql)),
+    Q("q_gold_standard", qGoldStandard, Oracle(qGoldStandardSql)),
+    Q("q_jaro_winkler", qJaroWinkler, Oracle(qJaroWinklerSql)),
+    Q("q_kappa", qKappa, Oracle(qKappaSql)),
+    Q("q_auc", qAuc, Oracle(qAucSql)),
+    Q("q_er_blocking", qErBlocking, Oracle(qErBlockingSql)),
+    Q("q_er_sorted", qErSorted, Oracle(qErSortedSql)),
+    Q("q_fellegi", qFellegi, Oracle(qFellegiSql)),
+    Q("q_cv_folds", qCvFolds, Oracle(qCvFoldsSql), Ml))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -911,31 +911,17 @@ object Inference extends QueryModule {
        FROM t"""
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_holm" -> (qHolm _),
-    "q_mcc" -> (qMcc _),
-    "q_mcnemar" -> (qMcnemar _),
-    "q_sprt" -> (qSprt _),
-    "q_conformal" -> (qConformal _),
-    "q_cliffs_delta" -> (qCliffsDelta _),
-    "q_cohens_d" -> (qCohensD _),
-    "q_theil_sen" -> (qTheilSen _),
-    "q_mann_kendall" -> (qMannKendall _),
-    "q_by_fdr" -> (qByFdr _),
-    "q_bh_fdr" -> (qBhFdr _),
-    "q_page_hinkley" -> (qPageHinkley _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_holm" -> qHolmSql,
-    "q_mcc" -> qMccSql,
-    "q_mcnemar" -> qMcnemarSql,
-    "q_sprt" -> qSprtSql,
-    "q_conformal" -> qConformalSql,
-    "q_cliffs_delta" -> qCliffsDeltaSql,
-    "q_cohens_d" -> qCohensDSql,
-    "q_theil_sen" -> qTheilSenSql,
-    "q_mann_kendall" -> qMannKendallSql,
-    "q_by_fdr" -> qByFdrSql,
-    "q_bh_fdr" -> qBhFdrSql,
-    "q_page_hinkley" -> qPageHinkleySql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_holm", qHolm, Oracle(qHolmSql)),
+    Q("q_mcc", qMcc, Oracle(qMccSql)),
+    Q("q_mcnemar", qMcnemar, Oracle(qMcnemarSql)),
+    Q("q_sprt", qSprt, Oracle(qSprtSql)),
+    Q("q_conformal", qConformal, Oracle(qConformalSql)),
+    Q("q_cliffs_delta", qCliffsDelta, Oracle(qCliffsDeltaSql)),
+    Q("q_cohens_d", qCohensD, Oracle(qCohensDSql)),
+    Q("q_theil_sen", qTheilSen, Oracle(qTheilSenSql)),
+    Q("q_mann_kendall", qMannKendall, Oracle(qMannKendallSql)),
+    Q("q_by_fdr", qByFdr, Oracle(qByFdrSql)),
+    Q("q_bh_fdr", qBhFdr, Oracle(qBhFdrSql)),
+    Q("q_page_hinkley", qPageHinkley, Oracle(qPageHinkleySql)))
 }

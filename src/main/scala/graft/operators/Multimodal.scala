@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -302,13 +302,8 @@ object Multimodal extends QueryModule {
        WHERE bit_count(xor(a.sig, b.sig)) <= $SigMaxHamming"""
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_multimodal" -> (qMultimodal _),
-    "q_multimodal_frames" -> (qMultimodalFrames _),
-    "q_media_phash" -> (qMediaPhash _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_multimodal" -> qMultimodalSql,
-    "q_multimodal_frames" -> qMultimodalFramesSql,
-    "q_media_phash" -> qMediaPhashSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_multimodal", qMultimodal, Oracle(qMultimodalSql)),
+    Q("q_multimodal_frames", qMultimodalFrames, Oracle(qMultimodalFramesSql)),
+    Q("q_media_phash", qMediaPhash, Oracle(qMediaPhashSql)))
 }

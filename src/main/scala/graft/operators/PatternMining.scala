@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -183,13 +183,8 @@ object PatternMining extends QueryModule {
        SELECT pattern, freq FROM hits, tot
        WHERE freq >= CAST(ceil(CAST(0.1 AS DOUBLE) * tot.n) AS BIGINT)"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_freq_itemsets" -> (qFreqItemsets _),
-    "q_assoc_rules" -> (qAssocRules _),
-    "q_seq_patterns" -> (qSeqPatterns _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_freq_itemsets" -> qFreqItemsetsSql,
-    "q_assoc_rules" -> qAssocRulesSql,
-    "q_seq_patterns" -> qSeqPatternsSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_freq_itemsets", qFreqItemsets, Oracle(qFreqItemsetsSql)),
+    Q("q_assoc_rules", qAssocRules, Oracle(qAssocRulesSql)),
+    Q("q_seq_patterns", qSeqPatterns, Oracle(qSeqPatternsSql)))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import graft.functions.JaroWinkler
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -331,18 +331,11 @@ object PolysemyEval extends QueryModule {
          TRUE AS metrics_ok
        FROM j"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_polysemy_eval" -> (qPolysemyEval _),
-    "q_polysemy_eval_audit" -> (qPolysemyEvalAudit _),
-    "q_param_sweep" -> (qParamSweep _),
-    "q_param_sweep_audit" -> (qParamSweepAudit _),
-    "q_polysemy_bayes" -> (qPolysemyBayes _),
-    "q_polysemy_bayes_audit" -> (qPolysemyBayesAudit _))
-
-  // LDA-upstream posteriors stay rows-only; the accounting certificate is
-  // the SQL-checkable contract.
-  override def oracles: Map[String, String] = Map(
-    "q_polysemy_eval_audit" -> qPolysemyEvalAuditSql,
-    "q_param_sweep_audit" -> qParamSweepAuditSql,
-    "q_polysemy_bayes_audit" -> qPolysemyBayesAuditSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_polysemy_eval", qPolysemyEval, Cert("q_polysemy_eval_audit"), Ml),
+    Q("q_polysemy_eval_audit", qPolysemyEvalAudit, Oracle(qPolysemyEvalAuditSql), Ml),
+    Q("q_param_sweep", qParamSweep, Cert("q_param_sweep_audit"), Ml),
+    Q("q_param_sweep_audit", qParamSweepAudit, Oracle(qParamSweepAuditSql), Ml),
+    Q("q_polysemy_bayes", qPolysemyBayes, Cert("q_polysemy_bayes_audit"), Ml),
+    Q("q_polysemy_bayes_audit", qPolysemyBayesAudit, Oracle(qPolysemyBayesAuditSql), Ml))
 }

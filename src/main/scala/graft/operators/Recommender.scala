@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -339,13 +339,9 @@ object Recommender extends QueryModule {
          TRUE AS separation_ok, TRUE AS align_ok
        FROM t"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_als" -> (qAls _),
-    "q_als_foldin" -> (qAlsFoldin _),
-    "q_als_foldin_audit" -> (qAlsFoldinAudit _),
-    "q_als_audit" -> (qAlsAudit _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_als_audit" -> qAlsAuditSql,
-    "q_als_foldin_audit" -> qAlsFoldinAuditSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_als", qAls, Cert("q_als_audit"), Ml),
+    Q("q_als_foldin", qAlsFoldin, Cert("q_als_foldin_audit"), Ml),
+    Q("q_als_foldin_audit", qAlsFoldinAudit, Oracle(qAlsFoldinAuditSql), Ml),
+    Q("q_als_audit", qAlsAudit, Oracle(qAlsAuditSql), Ml))
 }

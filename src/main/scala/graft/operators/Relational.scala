@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -2754,129 +2754,67 @@ object Relational extends QueryModule {
          round(CAST(count(*) AS DOUBLE) / n_total, 6) AS share
        FROM best CROSS JOIN tot GROUP BY streak_days, n_total"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_skyline" -> (qSkyline _),
-    "q1_agg" -> (q1Agg _),
-    "q6_agg" -> (q6Agg _),
-    "q18_having" -> (q18Having _),
-    "q3_join" -> (q3Join _),
-    "q5_join" -> (q5Join _),
-    "q_window" -> (qWindow _),
-    "q_window_funcs" -> (qWindowFuncs _),
-    "q_setops" -> (qSetops _),
-    "q_moving_avg" -> (qMovingAvg _),
-    "q_events_window" -> (qEventsWindow _),
-    "q_events_props" -> (qEventsProps _),
-    "q_antijoin" -> (qAntijoin _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_asof_native" -> (qAsofNative _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_pivot" -> (qPivot _),
-    "q_anomaly" -> (qAnomaly _),
-    "q_ntile" -> (qNtile _),
-    "q_ntile_approx" -> (qNtileApproxGate _),
-    "q_compact" -> (qCompact _),
-    "q_merge_upsert" -> (qMergeUpsert _),
-    "q_merge_files" -> (qMergeFiles _),
-    "q_merge_cdf" -> (qMergeCdf _),
-    "q_scd2" -> (qScd2 _),
-    "q_wau" -> (qWau _),
-    "q_events_hop" -> (qEventsHop _),
-    "q_gapfill" -> (qGapfill _),
-    "q_topk" -> (qTopk _),
-    "q_sessionize" -> (qSessionize _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_rollup" -> (qRollup _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_range_frame" -> (qRangeFrame _),
-    "q_cube" -> (qCube _),
-    "q_copurchase" -> (qCopurchase _),
-    "q_hits" -> (qHits _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_percentiles_approx" -> (qPercentilesApproxGate _),
-    "q_events_json" -> (qEventsJson _),
-    "q_retention" -> (qRetention _),
-    "q_funnel" -> (qFunnel _),
-    "q_funnel_steps" -> (qFunnelSteps _),
-    "q_session_stats" -> (qSessionStats _),
-    "q_item_sim" -> (qItemSim _),
-    "q_link_pred" -> (qLinkPred _),
-    "q_connected_components" -> (qConnectedComponents _),
-    "q_cc_incremental" -> (qCcIncremental _),
-    "q_concurrency" -> (qConcurrency _),
-    "q_abc" -> (qAbc _),
-    "q_new_vs_returning" -> (qNewVsReturning _),
-    "q_funnel_time" -> (qFunnelTime _),
-    "q_rfm" -> (qRfm _),
-    "q_cohort_revenue" -> (qCohortRevenue _),
-    "q_streaks" -> (qStreaks _),
-    "q_paths" -> (qPaths _),
-    "q_growth_accounting" -> (qGrowthAccounting _),
-    "q_setops_bag" -> (qSetopsBag _),
-    "q_audience_overlap" -> (qAudienceOverlap _),
-    "q_pattern_match" -> (qPatternMatch _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_percentiles_approx" -> qPercentilesApproxSql,
-    "q_ntile_approx" -> qNtileApproxSql,
-    "q1_agg" -> q1Sql,
-    "q6_agg" -> q6Sql,
-    "q18_having" -> q18Sql,
-    "q3_join" -> q3Sql,
-    "q5_join" -> q5Sql,
-    "q_skyline" -> qSkylineSql,
-    "q_window" -> qWindowSql,
-    "q_window_funcs" -> qWindowFuncsSql,
-    "q_setops" -> qSetopsSql,
-    "q_moving_avg" -> qMovingAvgSql,
-    "q_events_window" -> qEventsWindowSql,
-    "q_events_props" -> qEventsPropsSql,
-    "q_antijoin" -> qAntijoinSql,
-    "q_asof_join" -> qAsofJoinSql,
-    "q_asof_native" -> qAsofJoinSql,
-    "q_range_join" -> qRangeJoinSql,
-    "q_pivot" -> qPivotSql,
-    "q_anomaly" -> qAnomalySql,
-    "q_ntile" -> qNtileSql,
-    "q_compact" -> qCompactSql,
-    "q_merge_upsert" -> qMergeUpsertSql,
-    "q_merge_files" -> qMergeUpsertSql,
-    "q_merge_cdf" -> qMergeCdfSql,
-    "q_scd2" -> qScd2Sql,
-    "q_wau" -> qWauSql,
-    "q_events_hop" -> qEventsHopSql,
-    "q_gapfill" -> qGapfillSql,
-    "q_topk" -> qTopkSql,
-    "q_sessionize" -> qSessionizeSql,
-    "q_salted_join" -> qSaltedJoinSql,
-    "q_rollup" -> qRollupSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_range_frame" -> qRangeFrameSql,
-    "q_cube" -> qCubeSql,
-    "q_copurchase" -> qCopurchaseSql,
-    "q_hits" -> qHitsSql,
-    "q_unpivot" -> qUnpivotSql,
-    "q_percentiles" -> qPercentilesSql,
-    "q_events_json" -> qEventsJsonSql,
-    "q_retention" -> qRetentionSql,
-    "q_funnel" -> qFunnelSql,
-    "q_funnel_steps" -> qFunnelStepsSql,
-    "q_session_stats" -> qSessionStatsSql,
-    "q_item_sim" -> qItemSimSql,
-    "q_link_pred" -> qLinkPredSql,
-    "q_connected_components" -> qConnectedComponentsSql,
-    "q_cc_incremental" -> qConnectedComponentsSql, // the full-recompute closure IS the gate
-    "q_concurrency" -> qConcurrencySql,
-    "q_abc" -> qAbcSql,
-    "q_new_vs_returning" -> qNewVsReturningSql,
-    "q_funnel_time" -> qFunnelTimeSql,
-    "q_rfm" -> qRfmSql,
-    "q_cohort_revenue" -> qCohortRevenueSql,
-    "q_streaks" -> qStreaksSql,
-    "q_paths" -> qPathsSql,
-    "q_growth_accounting" -> qGrowthAccountingSql,
-    "q_setops_bag" -> qSetopsBagSql,
-    "q_audience_overlap" -> qAudienceOverlapSql,
-    "q_pattern_match" -> qPatternMatchSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_skyline", qSkyline, Oracle(qSkylineSql)),
+    Q("q1_agg", q1Agg, Oracle(q1Sql)),
+    Q("q6_agg", q6Agg, Oracle(q6Sql)),
+    Q("q18_having", q18Having, Oracle(q18Sql)),
+    Q("q3_join", q3Join, Oracle(q3Sql)),
+    Q("q5_join", q5Join, Oracle(q5Sql)),
+    Q("q_window", qWindow, Oracle(qWindowSql)),
+    Q("q_window_funcs", qWindowFuncs, Oracle(qWindowFuncsSql)),
+    Q("q_setops", qSetops, Oracle(qSetopsSql)),
+    Q("q_moving_avg", qMovingAvg, Oracle(qMovingAvgSql)),
+    Q("q_events_window", qEventsWindow, Oracle(qEventsWindowSql)),
+    Q("q_events_props", qEventsProps, Oracle(qEventsPropsSql)),
+    Q("q_antijoin", qAntijoin, Oracle(qAntijoinSql)),
+    Q("q_asof_join", qAsofJoin, Oracle(qAsofJoinSql)),
+    Q("q_asof_native", qAsofNative, Oracle(qAsofJoinSql)),
+    Q("q_range_join", qRangeJoin, Oracle(qRangeJoinSql)),
+    Q("q_pivot", qPivot, Oracle(qPivotSql)),
+    Q("q_anomaly", qAnomaly, Oracle(qAnomalySql)),
+    Q("q_ntile", qNtile, Oracle(qNtileSql)),
+    Q("q_ntile_approx", qNtileApproxGate, Oracle(qNtileApproxSql)),
+    Q("q_compact", qCompact, Oracle(qCompactSql)),
+    Q("q_merge_upsert", qMergeUpsert, Oracle(qMergeUpsertSql)),
+    Q("q_merge_files", qMergeFiles, Oracle(qMergeUpsertSql)),
+    Q("q_merge_cdf", qMergeCdf, Oracle(qMergeCdfSql)),
+    Q("q_scd2", qScd2, Oracle(qScd2Sql)),
+    Q("q_wau", qWau, Oracle(qWauSql)),
+    Q("q_events_hop", qEventsHop, Oracle(qEventsHopSql)),
+    Q("q_gapfill", qGapfill, Oracle(qGapfillSql)),
+    Q("q_topk", qTopk, Oracle(qTopkSql)),
+    Q("q_sessionize", qSessionize, Oracle(qSessionizeSql)),
+    Q("q_salted_join", qSaltedJoin, Oracle(qSaltedJoinSql)),
+    Q("q_rollup", qRollup, Oracle(qRollupSql)),
+    Q("q_grouping_sets", qGroupingSets, Oracle(qGroupingSetsSql)),
+    Q("q_range_frame", qRangeFrame, Oracle(qRangeFrameSql)),
+    Q("q_cube", qCube, Oracle(qCubeSql)),
+    Q("q_copurchase", qCopurchase, Oracle(qCopurchaseSql)),
+    Q("q_hits", qHits, Oracle(qHitsSql)),
+    Q("q_unpivot", qUnpivot, Oracle(qUnpivotSql)),
+    Q("q_percentiles", qPercentiles, Oracle(qPercentilesSql)),
+    Q("q_percentiles_approx", qPercentilesApproxGate, Oracle(qPercentilesApproxSql)),
+    Q("q_events_json", qEventsJson, Oracle(qEventsJsonSql)),
+    Q("q_retention", qRetention, Oracle(qRetentionSql)),
+    Q("q_funnel", qFunnel, Oracle(qFunnelSql)),
+    Q("q_funnel_steps", qFunnelSteps, Oracle(qFunnelStepsSql)),
+    Q("q_session_stats", qSessionStats, Oracle(qSessionStatsSql)),
+    Q("q_item_sim", qItemSim, Oracle(qItemSimSql)),
+    Q("q_link_pred", qLinkPred, Oracle(qLinkPredSql)),
+    Q("q_connected_components", qConnectedComponents, Oracle(qConnectedComponentsSql)),
+    // the full-recompute closure IS the gate
+    Q("q_cc_incremental", qCcIncremental, Oracle(qConnectedComponentsSql)),
+    Q("q_concurrency", qConcurrency, Oracle(qConcurrencySql)),
+    Q("q_abc", qAbc, Oracle(qAbcSql)),
+    Q("q_new_vs_returning", qNewVsReturning, Oracle(qNewVsReturningSql)),
+    Q("q_funnel_time", qFunnelTime, Oracle(qFunnelTimeSql)),
+    Q("q_rfm", qRfm, Oracle(qRfmSql)),
+    Q("q_cohort_revenue", qCohortRevenue, Oracle(qCohortRevenueSql)),
+    Q("q_streaks", qStreaks, Oracle(qStreaksSql)),
+    Q("q_paths", qPaths, Oracle(qPathsSql)),
+    Q("q_growth_accounting", qGrowthAccounting, Oracle(qGrowthAccountingSql)),
+    Q("q_setops_bag", qSetopsBag, Oracle(qSetopsBagSql)),
+    Q("q_audience_overlap", qAudienceOverlap, Oracle(qAudienceOverlapSql)),
+    Q("q_pattern_match", qPatternMatch, Oracle(qPatternMatchSql)))
 }

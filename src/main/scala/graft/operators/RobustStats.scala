@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2632,78 +2632,41 @@ object RobustStats extends QueryModule {
        FROM sc"""
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_eb_shrink" -> (qEbShrink _),
-    "q_quantile_norm" -> (qQuantileNorm _),
-    "q_ks_test" -> (qKsTest _),
-    "q_kuiper" -> (qKuiper _),
-    "q_cvm" -> (qCvm _),
-    "q_ansari" -> (qAnsari _),
-    "q_wasserstein" -> (qWasserstein _),
-    "q_energy_dist" -> (qEnergyDist _),
-    "q_sinkhorn" -> (qSinkhorn _),
-    "q_l_moments" -> (qLMoments _),
-    "q_sinkhorn_audit" -> (qSinkhornAudit _),
-    "q_bhattacharyya" -> (qBhattacharyya _),
-    "q_js_terms" -> (qJsTerms _),
-    "q_mannwhitney" -> (qMannwhitney _),
-    "q_kruskal" -> (qKruskal _),
-    "q_jonckheere" -> (qJonckheere _),
-    "q_median_test" -> (qMedianTest _),
-    "q_dunn" -> (qDunn _),
-    "q_fleiss" -> (qFleiss _),
-    "q_cochran_q" -> (qCochranQ _),
-    "q_cronbach" -> (qCronbach _),
-    "q_trimmed_mean" -> (qTrimmedMean _),
-    "q_trimmed_mean_approx" -> (qTrimmedMeanApprox _),
-    "q_iqr_outliers" -> (qIqrOutliers _),
-    "q_krippendorff" -> (qKrippendorff _),
-    "q_dp_counts" -> (qDpCounts _),
-    "q_kanon" -> (qKanon _),
-    "q_cramers_v" -> (qCramersV _),
-    "q_ldiversity" -> (qLdiversity _),
-    "q_tcloseness" -> (qTcloseness _),
-    "q_boxcox" -> (qBoxCox _),
-    "q_winsorize" -> (qWinsorize _),
-    "q_winsorize_approx" -> (qWinsorizeApprox _),
-    "q_mad_approx" -> (qMadApprox _),
-    "q_mad" -> (qMad _),
-    "q_mutual_info" -> (qMutualInfo _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_eb_shrink" -> qEbShrinkSql,
-    "q_quantile_norm" -> qQuantileNormSql,
-    "q_ks_test" -> qKsTestSql,
-    "q_kuiper" -> qKuiperSql,
-    "q_cvm" -> qCvmSql,
-    "q_ansari" -> qAnsariSql,
-    "q_wasserstein" -> qWassersteinSql,
-    "q_energy_dist" -> qEnergyDistSql,
-    "q_sinkhorn_audit" -> qSinkhornAuditSql,
-    "q_l_moments" -> qLMomentsSql,
-    "q_bhattacharyya" -> qBhattacharyyaSql,
-    "q_js_terms" -> qJsTermsSql,
-    "q_mannwhitney" -> qMannwhitneySql,
-    "q_kruskal" -> qKruskalSql,
-    "q_jonckheere" -> qJonckheereSql,
-    "q_median_test" -> qMedianTestSql,
-    "q_dunn" -> qDunnSql,
-    "q_fleiss" -> qFleissSql,
-    "q_cochran_q" -> qCochranQSql,
-    "q_cronbach" -> qCronbachSql,
-    "q_trimmed_mean" -> qTrimmedMeanSql,
-    "q_trimmed_mean_approx" -> qTrimmedMeanApproxSql,
-    "q_iqr_outliers" -> qIqrOutliersSql,
-    "q_krippendorff" -> qKrippendorffSql,
-    "q_dp_counts" -> qDpCountsSql,
-    "q_kanon" -> qKanonSql,
-    "q_cramers_v" -> qCramersVSql,
-    "q_ldiversity" -> qLdiversitySql,
-    "q_tcloseness" -> qTclosenessSql,
-    "q_boxcox" -> qBoxCoxSql,
-    "q_winsorize" -> qWinsorizeSql,
-    "q_winsorize_approx" -> qWinsorizeApproxSql,
-    "q_mad_approx" -> qMadApproxSql,
-    "q_mad" -> qMadSql,
-    "q_mutual_info" -> qMutualInfoSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_eb_shrink", qEbShrink, Oracle(qEbShrinkSql)),
+    Q("q_quantile_norm", qQuantileNorm, Oracle(qQuantileNormSql)),
+    Q("q_ks_test", qKsTest, Oracle(qKsTestSql)),
+    Q("q_kuiper", qKuiper, Oracle(qKuiperSql)),
+    Q("q_cvm", qCvm, Oracle(qCvmSql)),
+    Q("q_ansari", qAnsari, Oracle(qAnsariSql)),
+    Q("q_wasserstein", qWasserstein, Oracle(qWassersteinSql)),
+    Q("q_energy_dist", qEnergyDist, Oracle(qEnergyDistSql)),
+    Q("q_sinkhorn", qSinkhorn, Cert("q_sinkhorn_audit")),
+    Q("q_l_moments", qLMoments, Oracle(qLMomentsSql)),
+    Q("q_sinkhorn_audit", qSinkhornAudit, Oracle(qSinkhornAuditSql)),
+    Q("q_bhattacharyya", qBhattacharyya, Oracle(qBhattacharyyaSql)),
+    Q("q_js_terms", qJsTerms, Oracle(qJsTermsSql)),
+    Q("q_mannwhitney", qMannwhitney, Oracle(qMannwhitneySql)),
+    Q("q_kruskal", qKruskal, Oracle(qKruskalSql)),
+    Q("q_jonckheere", qJonckheere, Oracle(qJonckheereSql)),
+    Q("q_median_test", qMedianTest, Oracle(qMedianTestSql)),
+    Q("q_dunn", qDunn, Oracle(qDunnSql)),
+    Q("q_fleiss", qFleiss, Oracle(qFleissSql)),
+    Q("q_cochran_q", qCochranQ, Oracle(qCochranQSql)),
+    Q("q_cronbach", qCronbach, Oracle(qCronbachSql)),
+    Q("q_trimmed_mean", qTrimmedMean, Oracle(qTrimmedMeanSql)),
+    Q("q_trimmed_mean_approx", qTrimmedMeanApprox, Oracle(qTrimmedMeanApproxSql)),
+    Q("q_iqr_outliers", qIqrOutliers, Oracle(qIqrOutliersSql)),
+    Q("q_krippendorff", qKrippendorff, Oracle(qKrippendorffSql)),
+    Q("q_dp_counts", qDpCounts, Oracle(qDpCountsSql)),
+    Q("q_kanon", qKanon, Oracle(qKanonSql)),
+    Q("q_cramers_v", qCramersV, Oracle(qCramersVSql)),
+    Q("q_ldiversity", qLdiversity, Oracle(qLdiversitySql)),
+    Q("q_tcloseness", qTcloseness, Oracle(qTclosenessSql)),
+    Q("q_boxcox", qBoxCox, Oracle(qBoxCoxSql)),
+    Q("q_winsorize", qWinsorize, Oracle(qWinsorizeSql)),
+    Q("q_winsorize_approx", qWinsorizeApprox, Oracle(qWinsorizeApproxSql)),
+    Q("q_mad_approx", qMadApprox, Oracle(qMadApproxSql)),
+    Q("q_mad", qMad, Oracle(qMadSql)),
+    Q("q_mutual_info", qMutualInfo, Oracle(qMutualInfoSql)))
 }

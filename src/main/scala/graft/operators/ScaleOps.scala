@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Oracle, Q, QueryModule}
 import graft.functions.TextFns
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -941,44 +941,24 @@ object ScaleOps extends QueryModule {
        SELECT event_type, qr, n, vmin, vmax, TRUE AS rank_ok
        FROM t CROSS JOIN r"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tdigest" -> (qTdigest _),
-    "q_tdigest_audit" -> (qTdigestAudit _),
-    "q_oracle_canary" -> (qOracleCanary _),
-    "q_kmv_intersect" -> (qKmvIntersect _),
-    "q_incr_agg" -> (qIncrAgg _),
-    "q_join_size_sketch" -> (qJoinSizeSketch _),
-    "q_bitmap_distinct" -> (qBitmapDistinct _),
-    "q_hll_merge" -> (qHllMerge _),
-    "q_cms_audit" -> (qCmsAudit _),
-    "q_table_diff" -> (qTableDiff _),
-    "q_pack" -> (qPack _),
-    "q_pipeline" -> (qPipeline _),
-    "q_zorder" -> (qZorder _),
-    "q_chunk" -> (qChunk _),
-    "q_fuzzy_vocab" -> (qFuzzyVocab _),
-    "q_bloom_semi" -> (qBloomSemi _),
-    "q_bloom_audit" -> (qBloomAudit _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_ewma" -> (qEwma _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_tdigest_audit" -> qTdigestAuditSql,
-    "q_oracle_canary" -> qOracleCanarySql,
-    "q_kmv_intersect" -> qKmvIntersectSql,
-    "q_incr_agg" -> qIncrAggSql,
-    "q_join_size_sketch" -> qJoinSizeSketchSql,
-    "q_bitmap_distinct" -> qBitmapDistinctSql,
-    "q_hll_merge" -> qHllMergeSql,
-    "q_cms_audit" -> qCmsAuditSql,
-    "q_table_diff" -> qTableDiffSql,
-    "q_pack" -> qPackSql,
-    "q_pipeline" -> qPipelineSql,
-    "q_zorder" -> qZorderSql,
-    "q_chunk" -> qChunkSql,
-    "q_fuzzy_vocab" -> qFuzzyVocabSql,
-    "q_bloom_semi" -> qBloomSemiSql,
-    "q_bloom_audit" -> qBloomAuditSql,
-    "q_heavy_hitters" -> qHeavyHittersSql,
-    "q_ewma" -> qEwmaSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_tdigest", qTdigest, Cert("q_tdigest_audit")),
+    Q("q_tdigest_audit", qTdigestAudit, Oracle(qTdigestAuditSql)),
+    Q("q_oracle_canary", qOracleCanary, Oracle(qOracleCanarySql)),
+    Q("q_kmv_intersect", qKmvIntersect, Oracle(qKmvIntersectSql)),
+    Q("q_incr_agg", qIncrAgg, Oracle(qIncrAggSql)),
+    Q("q_join_size_sketch", qJoinSizeSketch, Oracle(qJoinSizeSketchSql)),
+    Q("q_bitmap_distinct", qBitmapDistinct, Oracle(qBitmapDistinctSql)),
+    Q("q_hll_merge", qHllMerge, Oracle(qHllMergeSql)),
+    Q("q_cms_audit", qCmsAudit, Oracle(qCmsAuditSql)),
+    Q("q_table_diff", qTableDiff, Oracle(qTableDiffSql)),
+    Q("q_pack", qPack, Oracle(qPackSql)),
+    Q("q_pipeline", qPipeline, Oracle(qPipelineSql)),
+    Q("q_zorder", qZorder, Oracle(qZorderSql)),
+    Q("q_chunk", qChunk, Oracle(qChunkSql)),
+    Q("q_fuzzy_vocab", qFuzzyVocab, Oracle(qFuzzyVocabSql)),
+    Q("q_bloom_semi", qBloomSemi, Oracle(qBloomSemiSql)),
+    Q("q_bloom_audit", qBloomAudit, Oracle(qBloomAuditSql)),
+    Q("q_heavy_hitters", qHeavyHitters, Oracle(qHeavyHittersSql)),
+    Q("q_ewma", qEwma, Oracle(qEwmaSql)))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -2090,64 +2090,39 @@ object SimilaritySearch extends QueryModule {
          TRUE AS accounted_ok, TRUE AS monotone_ok, TRUE AS assign_ok
        FROM embeddings"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kmeans" -> (qKmeans _),
-    "q_gmm" -> (qGmm _),
-    "q_gmm_audit" -> (qGmmAudit _),
-    "q_embed_drift" -> (qEmbedDrift _),
-    "q_silhouette" -> (qSilhouette _),
-    "q_hac" -> (qHac _),
-    "q_hac_audit" -> (qHacAudit _),
-    "q_kmeans_audit" -> (qKmeansAudit _),
-    "q_mrr" -> (qMrr _),
-    "q_map" -> (qMap _),
-    "q_rrf" -> (qRrf _),
-    "q_rbo" -> (qRbo _),
-    "q_lof" -> (qLof _),
-    "q_ndcg" -> (qNdcg _),
-    "q_pca" -> (qPca _),
-    "q_pca_audit" -> (qPcaAudit _),
-    "q_ann_pq" -> (qAnnPq _),
-    "q_ann_ivfpq" -> (qAnnIvfPq _),
-    "q_knn_search" -> (qKnnSearch _),
-    "q_mmr" -> (qMmr _),
-    "q_hard_negatives" -> (qHardNegatives _),
-    "q_class_centroids" -> (qClassCentroids _),
-    "q_rocchio" -> (qRocchio _),
-    "q_embed_outliers" -> (qEmbedOutliers _),
-    "q_mrl_audit" -> (qMrlAudit _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_ann_lsh" -> (qAnnLsh _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_ann_ivf_audit" -> (qAnnIvfAudit _),
-    "q_ann_ivf_foldin" -> (qAnnIvfFoldin _),
-    "q_ann_ivf_foldin_audit" -> (qAnnIvfFoldinAudit _),
-    "q_ann_pq_audit" -> (qAnnPqAudit _),
-    "q_ann_ivfpq_audit" -> (qAnnIvfPqAudit _),
-    "q_embed_quant" -> (qEmbedQuant _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_kmeans_audit" -> qKmeansAuditSql,
-    "q_gmm_audit" -> qGmmAuditSql,
-    "q_embed_drift" -> qEmbedDriftSql,
-    "q_hac_audit" -> qHacAuditSql,
-    "q_pca_audit" -> qPcaAuditSql,
-    "q_mrr" -> qMrrSql,
-    "q_map" -> qMapSql,
-    "q_rrf" -> qRrfSql,
-    "q_rbo" -> qRboSql,
-    "q_lof" -> qLofSql,
-    "q_ndcg" -> qNdcgSql,
-    "q_knn_search" -> qKnnSearchSql,
-    "q_mmr" -> qMmrSql,
-    "q_hard_negatives" -> qHardNegativesSql,
-    "q_class_centroids" -> qClassCentroidsSql,
-    "q_rocchio" -> qRocchioSql,
-    "q_embed_outliers" -> qEmbedOutliersSql,
-    "q_mrl_audit" -> qMrlAuditSql,
-    "q_ann_ivf_audit" -> qAnnIvfAuditSql,
-    "q_ann_ivf_foldin_audit" -> qAnnIvfFoldinAuditSql,
-    "q_ann_pq_audit" -> qAnnPqAuditSql,
-    "q_ann_ivfpq_audit" -> qAnnIvfPqAuditSql,
-    "q_embed_quant" -> qEmbedQuantSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_kmeans", qKmeans, Cert("q_kmeans_audit"), Ml),
+    Q("q_gmm", qGmm, Cert("q_gmm_audit"), Ml),
+    Q("q_gmm_audit", qGmmAudit, Oracle(qGmmAuditSql), Ml),
+    Q("q_embed_drift", qEmbedDrift, Oracle(qEmbedDriftSql)),
+    Q("q_silhouette", qSilhouette, Cert("q_kmeans_audit"), Ml),
+    Q("q_hac", qHac, Cert("q_hac_audit"), Ml),
+    Q("q_hac_audit", qHacAudit, Oracle(qHacAuditSql), Ml),
+    Q("q_kmeans_audit", qKmeansAudit, Oracle(qKmeansAuditSql), Ml),
+    Q("q_mrr", qMrr, Oracle(qMrrSql)),
+    Q("q_map", qMap, Oracle(qMapSql)),
+    Q("q_rrf", qRrf, Oracle(qRrfSql)),
+    Q("q_rbo", qRbo, Oracle(qRboSql)),
+    Q("q_lof", qLof, Oracle(qLofSql)),
+    Q("q_ndcg", qNdcg, Oracle(qNdcgSql)),
+    Q("q_pca", qPca, Cert("q_pca_audit")),
+    Q("q_pca_audit", qPcaAudit, Oracle(qPcaAuditSql)),
+    Q("q_ann_pq", qAnnPq, Cert("q_ann_pq_audit")),
+    Q("q_ann_ivfpq", qAnnIvfPq, Cert("q_ann_ivfpq_audit"), Ml),
+    Q("q_knn_search", qKnnSearch, Oracle(qKnnSearchSql)),
+    Q("q_mmr", qMmr, Oracle(qMmrSql)),
+    Q("q_hard_negatives", qHardNegatives, Oracle(qHardNegativesSql)),
+    Q("q_class_centroids", qClassCentroids, Oracle(qClassCentroidsSql)),
+    Q("q_rocchio", qRocchio, Oracle(qRocchioSql)),
+    Q("q_embed_outliers", qEmbedOutliers, Oracle(qEmbedOutliersSql)),
+    Q("q_mrl_audit", qMrlAudit, Oracle(qMrlAuditSql)),
+    Q("q_ann_recall", qAnnRecall, Cert("q_knn_search")),
+    Q("q_ann_lsh", qAnnLsh, Cert("q_knn_search")),
+    Q("q_ann_ivf", qAnnIvf, Cert("q_ann_ivf_audit"), Ml),
+    Q("q_ann_ivf_audit", qAnnIvfAudit, Oracle(qAnnIvfAuditSql)),
+    Q("q_ann_ivf_foldin", qAnnIvfFoldin, Cert("q_ann_ivf_foldin_audit"), Ml),
+    Q("q_ann_ivf_foldin_audit", qAnnIvfFoldinAudit, Oracle(qAnnIvfFoldinAuditSql)),
+    Q("q_ann_pq_audit", qAnnPqAudit, Oracle(qAnnPqAuditSql)),
+    Q("q_ann_ivfpq_audit", qAnnIvfPqAudit, Oracle(qAnnIvfPqAuditSql)),
+    Q("q_embed_quant", qEmbedQuant, Oracle(qEmbedQuantSql)))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Oracle, Q, QueryModule}
 import graft.functions.Ranks
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -6586,178 +6586,91 @@ object Stats extends QueryModule {
                / CAST(nn AS DOUBLE)))) > 1.96 AS significant
        FROM m"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_anova" -> (qAnova _),
-    "q_bartlett" -> (qBartlett _),
-    "q_tukey" -> (qTukey _),
-    "q_friedman" -> (qFriedman _),
-    "q_page_trend" -> (qPageTrend _),
-    "q_runs_test" -> (qRunsTest _),
-    "q_seasonal_strength" -> (qSeasonalStrength _),
-    "q_simpson" -> (qSimpson _),
-    "q_ljung_box" -> (qLjungBox _),
-    "q_levene" -> (qLevene _),
-    "q_trend" -> (qTrend _),
-    "q_spearman" -> (qSpearman _),
-    "q_benford" -> (qBenford _),
-    "q_autocorr" -> (qAutocorr _),
-    "q_cusum" -> (qCusum _),
-    "q_changepoint" -> (qChangepoint _),
-    "q_pettitt" -> (qPettitt _),
-    "q_granger" -> (qGranger _),
-    "q_mde" -> (qMde _),
-    "q_holt" -> (qHolt _),
-    "q_holt_winters" -> (qHoltWinters _),
-    "q_hw_eval" -> (qHwEval _),
-    "q_games_howell" -> (qGamesHowell _),
-    "q_cox" -> (qCox _),
-    "q_cox_audit" -> (qCoxAudit _),
-    "q_srm" -> (qSrm _),
-    "q_qte" -> (qQte _),
-    "q_acf" -> (qAcf _),
-    "q_seasonal" -> (qSeasonal _),
-    "q_bootstrap" -> (qBootstrap _),
-    "q_jackknife" -> (qJackknife _),
-    "q_hill" -> (qHill _),
-    "q_gini" -> (qGini _),
-    "q_theil" -> (qTheil _),
-    "q_lorenz" -> (qLorenz _),
-    "q_kendall" -> (qKendall _),
-    "q_dq_checks" -> (qDqChecks _),
-    "q_dispersion" -> (qDispersion _),
-    "q_kaplan_meier" -> (qKaplanMeier _),
-    "q_competing_risks" -> (qCompetingRisks _),
-    "q_rmst" -> (qRmst _),
-    "q_nelson_aalen" -> (qNelsonAalen _),
-    "q_markov_stationary" -> (qMarkovStationary _),
-    "q_ab_test" -> (qAbTest _),
-    "q_cuped" -> (qCuped _),
-    "q_cem_att" -> (qCemAtt _),
-    "q_two_prop" -> (qTwoProp _),
-    "q_tost" -> (qTost _),
-    "q_quade" -> (qQuade _),
-    "q_sax" -> (qSax _),
-    "q_matrix_profile" -> (qMatrixProfile _),
-    "q_herfindahl" -> (qHerfindahl _),
-    "q_dtw" -> (qDtw _),
-    "q_pacf" -> (qPacf _),
-    "q_ar_forecast" -> (qArForecast _),
-    "q_forecast_coherence" -> (qForecastCoherence _),
-    "q_cooks_distance" -> (qCooksDistance _),
-    "q_viterbi" -> (qViterbi _),
-    "q_binseg" -> (qBinseg _),
-    "q_iv_wald" -> (qIvWald _),
-    "q_aa_test" -> (qAaTest _),
-    "q_simpson_flip" -> (qSimpsonFlip _),
-    "q_cmh" -> (qCmh _),
-    "q_weighted_logrank" -> (qWeightedLogrank _),
-    "q_meta_fixed" -> (qMetaFixed _),
-    "q_shapley_attrib" -> (qShapleyAttrib _),
-    "q_slo_burn" -> (qSloBurn _),
-    "q_did" -> (qDid _),
-    "q_forecast_eval" -> (qForecastEval _),
-    "q_partial_corr" -> (qPartialCorr _),
-    "q_logrank" -> (qLogrank _),
-    "q_ab_sequential" -> (qAbSequential _),
-    "q_histogram" -> (qHistogram _),
-    "q_corr_matrix" -> (qCorrMatrix _),
-    "q_regr" -> (qRegr _),
-    "q_regr_multi" -> (qRegrMulti _),
-    "q_quantile_reg" -> (qQuantileReg _),
-    "q_psi" -> (qPsi _),
-    "q_markov" -> (qMarkov _),
-    "q_attribution" -> (qAttribution _),
-    "q_attribution_markov" -> (qAttributionMarkov _),
-    "q_dw" -> (qDw _),
-    "q_readability" -> (qReadability _),
-    "q_zipf" -> (qZipf _),
-    "q_profile" -> (qProfile _),
-    "q_key_skew" -> (qKeySkew _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_anova" -> qAnovaSql,
-    "q_bartlett" -> qBartlettSql,
-    "q_tukey" -> qTukeySql,
-    "q_friedman" -> qFriedmanSql,
-    "q_page_trend" -> qPageTrendSql,
-    "q_runs_test" -> qRunsTestSql,
-    "q_seasonal_strength" -> qSeasonalStrengthSql,
-    "q_simpson" -> qSimpsonSql,
-    "q_ljung_box" -> qLjungBoxSql,
-    "q_levene" -> qLeveneSql,
-    "q_trend" -> qTrendSql,
-    "q_spearman" -> qSpearmanSql,
-    "q_benford" -> qBenfordSql,
-    "q_autocorr" -> qAutocorrSql,
-    "q_cusum" -> qCusumSql,
-    "q_changepoint" -> qChangepointSql,
-    "q_pettitt" -> qPettittSql,
-    "q_granger" -> qGrangerSql,
-    "q_mde" -> qMdeSql,
-    "q_holt" -> qHoltSql,
-    "q_holt_winters" -> qHoltWintersSql,
-    "q_hw_eval" -> qHwEvalSql,
-    "q_games_howell" -> qGamesHowellSql,
-    "q_cox_audit" -> qCoxAuditSql,
-    "q_srm" -> qSrmSql,
-    "q_qte" -> qQteSql,
-    "q_acf" -> qAcfSql,
-    "q_seasonal" -> qSeasonalSql,
-    "q_bootstrap" -> qBootstrapSql,
-    "q_jackknife" -> qJackknifeSql,
-    "q_hill" -> qHillSql,
-    "q_gini" -> qGiniSql,
-    "q_theil" -> qTheilSql,
-    "q_lorenz" -> qLorenzSql,
-    "q_kendall" -> qKendallSql,
-    "q_dq_checks" -> qDqChecksSql,
-    "q_dispersion" -> qDispersionSql,
-    "q_kaplan_meier" -> qKaplanMeierSql,
-    "q_competing_risks" -> qCompetingRisksSql,
-    "q_rmst" -> qRmstSql,
-    "q_nelson_aalen" -> qNelsonAalenSql,
-    "q_markov_stationary" -> qMarkovStationarySql,
-    "q_ab_test" -> qAbTestSql,
-    "q_cuped" -> qCupedSql,
-    "q_cem_att" -> qCemAttSql,
-    "q_two_prop" -> qTwoPropSql,
-    "q_tost" -> qTostSql,
-    "q_quade" -> qQuadeSql,
-    "q_sax" -> qSaxSql,
-    "q_matrix_profile" -> qMatrixProfileSql,
-    "q_herfindahl" -> qHerfindahlSql,
-    "q_dtw" -> qDtwSql,
-    "q_pacf" -> qPacfSql,
-    "q_ar_forecast" -> qArForecastSql,
-    "q_forecast_coherence" -> qForecastCoherenceSql,
-    "q_cooks_distance" -> qCooksDistanceSql,
-    "q_viterbi" -> qViterbiSql,
-    "q_binseg" -> qBinsegSql,
-    "q_iv_wald" -> qIvWaldSql,
-    "q_aa_test" -> qAaTestSql,
-    "q_simpson_flip" -> qSimpsonFlipSql,
-    "q_cmh" -> qCmhSql,
-    "q_weighted_logrank" -> qWeightedLogrankSql,
-    "q_meta_fixed" -> qMetaFixedSql,
-    "q_shapley_attrib" -> qShapleyAttribSql,
-    "q_slo_burn" -> qSloBurnSql,
-    "q_did" -> qDidSql,
-    "q_forecast_eval" -> qForecastEvalSql,
-    "q_partial_corr" -> qPartialCorrSql,
-    "q_logrank" -> qLogrankSql,
-    "q_ab_sequential" -> qAbSequentialSql,
-    "q_histogram" -> qHistogramSql,
-    "q_corr_matrix" -> qCorrMatrixSql,
-    "q_regr" -> qRegrSql,
-    "q_regr_multi" -> qRegrMultiSql,
-    "q_quantile_reg" -> qQuantileRegSql,
-    "q_psi" -> qPsiSql,
-    "q_markov" -> qMarkovSql,
-    "q_attribution" -> qAttributionSql,
-    "q_attribution_markov" -> qAttributionMarkovSql,
-    "q_dw" -> qDwSql,
-    "q_readability" -> qReadabilitySql,
-    "q_zipf" -> qZipfSql,
-    "q_profile" -> qProfileSql,
-    "q_key_skew" -> qKeySkewSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_anova", qAnova, Oracle(qAnovaSql)),
+    Q("q_bartlett", qBartlett, Oracle(qBartlettSql)),
+    Q("q_tukey", qTukey, Oracle(qTukeySql)),
+    Q("q_friedman", qFriedman, Oracle(qFriedmanSql)),
+    Q("q_page_trend", qPageTrend, Oracle(qPageTrendSql)),
+    Q("q_runs_test", qRunsTest, Oracle(qRunsTestSql)),
+    Q("q_seasonal_strength", qSeasonalStrength, Oracle(qSeasonalStrengthSql)),
+    Q("q_simpson", qSimpson, Oracle(qSimpsonSql)),
+    Q("q_ljung_box", qLjungBox, Oracle(qLjungBoxSql)),
+    Q("q_levene", qLevene, Oracle(qLeveneSql)),
+    Q("q_trend", qTrend, Oracle(qTrendSql)),
+    Q("q_spearman", qSpearman, Oracle(qSpearmanSql)),
+    Q("q_benford", qBenford, Oracle(qBenfordSql)),
+    Q("q_autocorr", qAutocorr, Oracle(qAutocorrSql)),
+    Q("q_cusum", qCusum, Oracle(qCusumSql)),
+    Q("q_changepoint", qChangepoint, Oracle(qChangepointSql)),
+    Q("q_pettitt", qPettitt, Oracle(qPettittSql)),
+    Q("q_granger", qGranger, Oracle(qGrangerSql)),
+    Q("q_mde", qMde, Oracle(qMdeSql)),
+    Q("q_holt", qHolt, Oracle(qHoltSql)),
+    Q("q_holt_winters", qHoltWinters, Oracle(qHoltWintersSql)),
+    Q("q_hw_eval", qHwEval, Oracle(qHwEvalSql)),
+    Q("q_games_howell", qGamesHowell, Oracle(qGamesHowellSql)),
+    Q("q_cox", qCox, Cert("q_cox_audit")),
+    Q("q_cox_audit", qCoxAudit, Oracle(qCoxAuditSql)),
+    Q("q_srm", qSrm, Oracle(qSrmSql)),
+    Q("q_qte", qQte, Oracle(qQteSql)),
+    Q("q_acf", qAcf, Oracle(qAcfSql)),
+    Q("q_seasonal", qSeasonal, Oracle(qSeasonalSql)),
+    Q("q_bootstrap", qBootstrap, Oracle(qBootstrapSql)),
+    Q("q_jackknife", qJackknife, Oracle(qJackknifeSql)),
+    Q("q_hill", qHill, Oracle(qHillSql)),
+    Q("q_gini", qGini, Oracle(qGiniSql)),
+    Q("q_theil", qTheil, Oracle(qTheilSql)),
+    Q("q_lorenz", qLorenz, Oracle(qLorenzSql)),
+    Q("q_kendall", qKendall, Oracle(qKendallSql)),
+    Q("q_dq_checks", qDqChecks, Oracle(qDqChecksSql)),
+    Q("q_dispersion", qDispersion, Oracle(qDispersionSql)),
+    Q("q_kaplan_meier", qKaplanMeier, Oracle(qKaplanMeierSql)),
+    Q("q_competing_risks", qCompetingRisks, Oracle(qCompetingRisksSql)),
+    Q("q_rmst", qRmst, Oracle(qRmstSql)),
+    Q("q_nelson_aalen", qNelsonAalen, Oracle(qNelsonAalenSql)),
+    Q("q_markov_stationary", qMarkovStationary, Oracle(qMarkovStationarySql)),
+    Q("q_ab_test", qAbTest, Oracle(qAbTestSql)),
+    Q("q_cuped", qCuped, Oracle(qCupedSql)),
+    Q("q_cem_att", qCemAtt, Oracle(qCemAttSql)),
+    Q("q_two_prop", qTwoProp, Oracle(qTwoPropSql)),
+    Q("q_tost", qTost, Oracle(qTostSql)),
+    Q("q_quade", qQuade, Oracle(qQuadeSql)),
+    Q("q_sax", qSax, Oracle(qSaxSql)),
+    Q("q_matrix_profile", qMatrixProfile, Oracle(qMatrixProfileSql)),
+    Q("q_herfindahl", qHerfindahl, Oracle(qHerfindahlSql)),
+    Q("q_dtw", qDtw, Oracle(qDtwSql)),
+    Q("q_pacf", qPacf, Oracle(qPacfSql)),
+    Q("q_ar_forecast", qArForecast, Oracle(qArForecastSql)),
+    Q("q_forecast_coherence", qForecastCoherence, Oracle(qForecastCoherenceSql)),
+    Q("q_cooks_distance", qCooksDistance, Oracle(qCooksDistanceSql)),
+    Q("q_viterbi", qViterbi, Oracle(qViterbiSql)),
+    Q("q_binseg", qBinseg, Oracle(qBinsegSql)),
+    Q("q_iv_wald", qIvWald, Oracle(qIvWaldSql)),
+    Q("q_aa_test", qAaTest, Oracle(qAaTestSql)),
+    Q("q_simpson_flip", qSimpsonFlip, Oracle(qSimpsonFlipSql)),
+    Q("q_cmh", qCmh, Oracle(qCmhSql)),
+    Q("q_weighted_logrank", qWeightedLogrank, Oracle(qWeightedLogrankSql)),
+    Q("q_meta_fixed", qMetaFixed, Oracle(qMetaFixedSql)),
+    Q("q_shapley_attrib", qShapleyAttrib, Oracle(qShapleyAttribSql)),
+    Q("q_slo_burn", qSloBurn, Oracle(qSloBurnSql)),
+    Q("q_did", qDid, Oracle(qDidSql)),
+    Q("q_forecast_eval", qForecastEval, Oracle(qForecastEvalSql)),
+    Q("q_partial_corr", qPartialCorr, Oracle(qPartialCorrSql)),
+    Q("q_logrank", qLogrank, Oracle(qLogrankSql)),
+    Q("q_ab_sequential", qAbSequential, Oracle(qAbSequentialSql)),
+    Q("q_histogram", qHistogram, Oracle(qHistogramSql)),
+    Q("q_corr_matrix", qCorrMatrix, Oracle(qCorrMatrixSql)),
+    Q("q_regr", qRegr, Oracle(qRegrSql)),
+    Q("q_regr_multi", qRegrMulti, Oracle(qRegrMultiSql)),
+    Q("q_quantile_reg", qQuantileReg, Oracle(qQuantileRegSql)),
+    Q("q_psi", qPsi, Oracle(qPsiSql)),
+    Q("q_markov", qMarkov, Oracle(qMarkovSql)),
+    Q("q_attribution", qAttribution, Oracle(qAttributionSql)),
+    Q("q_attribution_markov", qAttributionMarkov, Oracle(qAttributionMarkovSql)),
+    Q("q_dw", qDw, Oracle(qDwSql)),
+    Q("q_readability", qReadability, Oracle(qReadabilitySql)),
+    Q("q_zipf", qZipf, Oracle(qZipfSql)),
+    Q("q_profile", qProfile, Oracle(qProfileSql)),
+    Q("q_key_skew", qKeySkew, Oracle(qKeySkewSql)))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Ml, Oracle, Q, QueryModule}
 import graft.functions.TextFns
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -60,7 +60,7 @@ object TextAnalysis extends QueryModule {
     langIdOf(TextPrep.rawDocs(s, dir))
       .select("doc_id", "en_s", "de_s", "es_s", "fr_s", "pred_lang")
 
-  private val qLangIdSql = {
+  private[operators] val qLangIdSql = {
     val t = TextFns.rawTokensSql("text")
     s"""WITH sc AS (
          SELECT doc_id,
@@ -1991,91 +1991,47 @@ object TextAnalysis extends QueryModule {
        FROM sc ORDER BY score DESC, n_occur DESC, phrase ASC LIMIT $RakeTopK"""
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_rake" -> (qRake _),
-    "q_heaps" -> (qHeaps _),
-    "q_lang_confusion" -> (qLangConfusion _),
-    "q_bm25" -> (qBm25 _),
-    "q_chisq" -> (qChisq _),
-    "q_llr" -> (qLlr _),
-    "q_ttr" -> (qTtr _),
-    "q_yule_k" -> (qYuleK _),
-    "q_burrows" -> (qBurrows _),
-    "q_token_budget" -> (qTokenBudget _),
-    "q_mixture_weights" -> (qMixtureWeights _),
-    "q_cohens_h" -> (qCohensH _),
-    "q_chao1" -> (qChao1 _),
-    "q_sampler_audit" -> (qSamplerAudit _),
-    "q_burstiness" -> (qBurstiness _),
-    "q_concordance" -> (qConcordance _),
-    "q_ctfidf" -> (qCtfidf _),
-    "q_mix_rates" -> (qMixRates _),
-    "q_lang_id" -> (qLangId _),
-    "q_lang_ngram" -> (qLangNgram _),
-    "q_quality" -> (qQuality _),
-    "q_entropy" -> (qEntropy _),
-    "q_normalize" -> (qNormalize _),
-    "q_rep_ngram" -> (qRepNgram _),
-    "q_token_count" -> (qTokenCount _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_quality_rules" -> (qQualityRules _),
-    "q_corpus_stats" -> (qCorpusStats _),
-    "q_curation" -> (qCuration _),
-    "q_curation_full" -> (qCurationFull _),
-    "q_pii_scrub" -> (qPiiScrub _),
-    "q_sample" -> (qSample _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_sample_group" -> (qSampleGroup _),
-    "q_sample_weighted" -> (qSampleWeighted _),
-    "q_pmi" -> (qPmi _),
-    "q_sppmi" -> (qSppmi _),
-    "q_feature_hash" -> (qFeatureHash _),
-    "q_sample_fixed" -> (qSampleFixed _),
-    "q_keywords" -> (qKeywords _),
-    "q_lm_score" -> (qLmScore _),
-    "q_approx_distinct" -> (qApproxDistinctGate _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_rake" -> qRakeSql,
-    "q_approx_distinct" -> qApproxDistinctSql,
-    "q_bm25" -> qBm25Sql,
-    "q_chisq" -> qChisqSql,
-    "q_llr" -> qLlrSql,
-    "q_ttr" -> qTtrSql,
-    "q_yule_k" -> qYuleKSql,
-    "q_burrows" -> qBurrowsSql,
-    "q_token_budget" -> qTokenBudgetSql,
-    "q_mixture_weights" -> qMixtureWeightsSql,
-    "q_cohens_h" -> qCohensHSql,
-    "q_chao1" -> qChao1Sql,
-    "q_sampler_audit" -> qSamplerAuditSql,
-    "q_burstiness" -> qBurstinessSql,
-    "q_concordance" -> qConcordanceSql,
-    "q_ctfidf" -> qCtfidfSql,
-    "q_mix_rates" -> qMixRatesSql,
-    "q_lang_id" -> qLangIdSql,
-    "q_lang_ngram" -> qLangNgramSql,
-    "q_quality" -> qQualitySql,
-    "q_entropy" -> qEntropySql,
-    "q_normalize" -> qNormalizeSql,
-    "q_rep_ngram" -> qRepNgramSql,
-    "q_token_count" -> qTokenCountSql,
-    "q_fingerprint" -> qFingerprintSql,
-    "q_quality_rules" -> qQualityRulesSql,
-    "q_corpus_stats" -> qCorpusStatsSql,
-    "q_heaps" -> qHeapsSql,
-    "q_lang_confusion" -> qLangConfusionSql,
-    "q_curation" -> qCurationSql,
-    "q_curation_full" -> qCurationFullSql,
-    "q_pii_scrub" -> qPiiScrubSql,
-    "q_sample" -> qSampleSql,
-    "q_sample_stratified" -> qSampleStratifiedSql,
-    "q_sample_group" -> qSampleGroupSql,
-    "q_sample_weighted" -> qSampleWeightedSql,
-    "q_pmi" -> qPmiSql,
-    "q_sppmi" -> qSppmiSql,
-    "q_feature_hash" -> qFeatureHashSql,
-    "q_sample_fixed" -> qSampleFixedSql,
-    "q_keywords" -> qKeywordsSql,
-    "q_lm_score" -> qLmScoreSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_rake", qRake, Oracle(qRakeSql)),
+    Q("q_heaps", qHeaps, Oracle(qHeapsSql)),
+    Q("q_lang_confusion", qLangConfusion, Oracle(qLangConfusionSql)),
+    Q("q_bm25", qBm25, Oracle(qBm25Sql)),
+    Q("q_chisq", qChisq, Oracle(qChisqSql)),
+    Q("q_llr", qLlr, Oracle(qLlrSql)),
+    Q("q_ttr", qTtr, Oracle(qTtrSql)),
+    Q("q_yule_k", qYuleK, Oracle(qYuleKSql)),
+    Q("q_burrows", qBurrows, Oracle(qBurrowsSql)),
+    Q("q_token_budget", qTokenBudget, Oracle(qTokenBudgetSql)),
+    Q("q_mixture_weights", qMixtureWeights, Oracle(qMixtureWeightsSql)),
+    Q("q_cohens_h", qCohensH, Oracle(qCohensHSql)),
+    Q("q_chao1", qChao1, Oracle(qChao1Sql)),
+    Q("q_sampler_audit", qSamplerAudit, Oracle(qSamplerAuditSql)),
+    Q("q_burstiness", qBurstiness, Oracle(qBurstinessSql)),
+    Q("q_concordance", qConcordance, Oracle(qConcordanceSql)),
+    Q("q_ctfidf", qCtfidf, Oracle(qCtfidfSql)),
+    Q("q_mix_rates", qMixRates, Oracle(qMixRatesSql)),
+    Q("q_lang_id", qLangId, Oracle(qLangIdSql)),
+    Q("q_lang_ngram", qLangNgram, Oracle(qLangNgramSql)),
+    Q("q_quality", qQuality, Oracle(qQualitySql)),
+    Q("q_entropy", qEntropy, Oracle(qEntropySql)),
+    Q("q_normalize", qNormalize, Oracle(qNormalizeSql)),
+    Q("q_rep_ngram", qRepNgram, Oracle(qRepNgramSql)),
+    Q("q_token_count", qTokenCount, Oracle(qTokenCountSql)),
+    Q("q_fingerprint", qFingerprint, Oracle(qFingerprintSql)),
+    Q("q_quality_rules", qQualityRules, Oracle(qQualityRulesSql)),
+    Q("q_corpus_stats", qCorpusStats, Oracle(qCorpusStatsSql)),
+    Q("q_curation", qCuration, Oracle(qCurationSql)),
+    Q("q_curation_full", qCurationFull, Oracle(qCurationFullSql)),
+    Q("q_pii_scrub", qPiiScrub, Oracle(qPiiScrubSql), Ml),
+    Q("q_sample", qSample, Oracle(qSampleSql)),
+    Q("q_sample_stratified", qSampleStratified, Oracle(qSampleStratifiedSql)),
+    Q("q_sample_group", qSampleGroup, Oracle(qSampleGroupSql)),
+    Q("q_sample_weighted", qSampleWeighted, Oracle(qSampleWeightedSql)),
+    Q("q_pmi", qPmi, Oracle(qPmiSql)),
+    Q("q_sppmi", qSppmi, Oracle(qSppmiSql)),
+    Q("q_feature_hash", qFeatureHash, Oracle(qFeatureHashSql)),
+    Q("q_sample_fixed", qSampleFixed, Oracle(qSampleFixedSql)),
+    Q("q_keywords", qKeywords, Oracle(qKeywordsSql)),
+    Q("q_lm_score", qLmScore, Oracle(qLmScoreSql)),
+    Q("q_approx_distinct", qApproxDistinctGate, Oracle(qApproxDistinctSql), Ml))
 }

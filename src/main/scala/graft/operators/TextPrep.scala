@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Ml, Oracle, Q, QueryModule}
 import graft.functions.TextFns
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -302,25 +302,14 @@ object TextPrep extends QueryModule {
            / count(*), 6) AS oov_rate
        FROM tk GROUP BY lang"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_clean_text" -> (qCleanText _),
-    "q_tokens" -> (qTokens _),
-    "q_dictionary" -> (qDictionary _),
-    "q_dict_filtered" -> (qDictFiltered _),
-    "q_doc2bow" -> (qDoc2bow _),
-    "q_tfidf" -> (qTfidf _),
-    "q_clean_english" -> (qCleanEnglish _),
-    "q_oov" -> (qOov _),
-    "q_concept_docs" -> (qConceptDocs _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_clean_text" -> qCleanTextSql,
-    "q_tokens" -> qTokensSql,
-    "q_dictionary" -> qDictionarySql,
-    "q_dict_filtered" -> qDictFilteredSql,
-    "q_doc2bow" -> qDoc2bowSql,
-    "q_tfidf" -> qTfidfSql,
-    "q_clean_english" -> qCleanEnglishSql,
-    "q_oov" -> qOovSql,
-    "q_concept_docs" -> qConceptDocsSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_clean_text", qCleanText, Oracle(qCleanTextSql)),
+    Q("q_tokens", qTokens, Oracle(qTokensSql)),
+    Q("q_dictionary", qDictionary, Oracle(qDictionarySql)),
+    Q("q_dict_filtered", qDictFiltered, Oracle(qDictFilteredSql), Ml),
+    Q("q_doc2bow", qDoc2bow, Oracle(qDoc2bowSql), Ml),
+    Q("q_tfidf", qTfidf, Oracle(qTfidfSql)),
+    Q("q_clean_english", qCleanEnglish, Oracle(qCleanEnglishSql)),
+    Q("q_oov", qOov, Oracle(qOovSql)),
+    Q("q_concept_docs", qConceptDocs, Oracle(qConceptDocsSql)))
 }

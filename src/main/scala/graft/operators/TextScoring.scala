@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Oracle, Q, QueryModule}
 import graft.functions.TextFns
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -882,37 +882,20 @@ object TextScoring extends QueryModule {
        FROM top CROSS JOIN tot"""
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_neg_sampling" -> (qNegSampling _),
-    "q_brier" -> (qBrier _),
-    "q_blocklist" -> (qBlocklist _),
-    "q_ccnet_buckets" -> (qCcnetBuckets _),
-    "q_good_turing" -> (qGoodTuring _),
-    "q_bigram_lm" -> (qBigramLm _),
-    "q_kneser_ney" -> (qKneserNey _),
-    "q_tok_fertility" -> (qTokFertility _),
-    "q_dup_ngrams" -> (qDupNgrams _),
-    "q_temp_sampling" -> (qTempSampling _),
-    "q_ess" -> (qEss _),
-    "q_calibration" -> (qCalibration _),
-    "q_isotonic_curve" -> (qIsotonicCurve _),
-    "q_lift" -> (qLift _),
-    "q_fourfifths" -> (qFourFifths _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_neg_sampling" -> qNegSamplingSql,
-    "q_brier" -> qBrierSql,
-    "q_blocklist" -> qBlocklistSql,
-    "q_ccnet_buckets" -> qCcnetBucketsSql,
-    "q_good_turing" -> qGoodTuringSql,
-    "q_bigram_lm" -> qBigramLmSql,
-    "q_kneser_ney" -> qKneserNeySql,
-    "q_tok_fertility" -> qTokFertilitySql,
-    "q_dup_ngrams" -> qDupNgramsSql,
-    "q_temp_sampling" -> qTempSamplingSql,
-    "q_ess" -> qEssSql,
-    "q_calibration" -> qCalibrationSql,
-    "q_isotonic_curve" -> qIsotonicCurveSql,
-    "q_lift" -> qLiftSql,
-    "q_fourfifths" -> qFourFifthsSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_neg_sampling", qNegSampling, Oracle(qNegSamplingSql)),
+    Q("q_brier", qBrier, Oracle(qBrierSql)),
+    Q("q_blocklist", qBlocklist, Oracle(qBlocklistSql)),
+    Q("q_ccnet_buckets", qCcnetBuckets, Oracle(qCcnetBucketsSql)),
+    Q("q_good_turing", qGoodTuring, Oracle(qGoodTuringSql)),
+    Q("q_bigram_lm", qBigramLm, Oracle(qBigramLmSql)),
+    Q("q_kneser_ney", qKneserNey, Oracle(qKneserNeySql)),
+    Q("q_tok_fertility", qTokFertility, Oracle(qTokFertilitySql)),
+    Q("q_dup_ngrams", qDupNgrams, Oracle(qDupNgramsSql)),
+    Q("q_temp_sampling", qTempSampling, Oracle(qTempSamplingSql)),
+    Q("q_ess", qEss, Oracle(qEssSql)),
+    Q("q_calibration", qCalibration, Oracle(qCalibrationSql)),
+    Q("q_isotonic_curve", qIsotonicCurve, Oracle(qIsotonicCurveSql)),
+    Q("q_lift", qLift, Oracle(qLiftSql)),
+    Q("q_fourfifths", qFourFifths, Oracle(qFourFifthsSql)))
 }

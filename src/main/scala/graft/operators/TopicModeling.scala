@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import graft.functions.TextFns
 import graft.sources.Tables
 import org.apache.spark.ml.clustering.{LDA, LDAModel}
@@ -804,31 +804,20 @@ object TopicModeling extends QueryModule {
          TRUE AS identity_ok, TRUE AS range_ok
        FROM d WHERE len > $MinDocTokens"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_perplexity_audit" -> (qPerplexityAudit _),
-    "q_lda_topics" -> (qLdaTopics _),
-    "q_doc_topics" -> (qDocTopics _),
-    "q_polysemy" -> (qPolysemy _),
-    "q_polysemy_audit" -> (qPolysemyAudit _),
-    "q_coherence" -> (qCoherence _),
-    "q_coherence_audit" -> (qCoherenceAudit _),
-    "q_coherence_cv" -> (qCoherenceCv _),
-    "q_coherence_cv_audit" -> (qCoherenceCvAudit _),
-    "q_perplexity" -> (qPerplexity _),
-    "q_model_select" -> (qModelSelect _),
-    "q_model_select_audit" -> (qModelSelectAudit _),
-    "q_hdp" -> (qHdp _),
-    "q_hdp_audit" -> (qHdpAudit _),
-    "q_lda_audit" -> (qLdaAudit _))
-
-  // Posterior values stay rows-only (iterative ML); the coverage
-  // certificate is the one SQL-checkable contract.
-  override def oracles: Map[String, String] = Map(
-    "q_perplexity_audit" -> qPerplexityAuditSql,
-    "q_polysemy_audit" -> qPolysemyAuditSql,
-    "q_model_select_audit" -> qModelSelectAuditSql,
-    "q_lda_audit" -> qLdaAuditSql,
-    "q_hdp_audit" -> qHdpAuditSql,
-    "q_coherence_audit" -> qCoherenceAuditSql,
-    "q_coherence_cv_audit" -> qCoherenceCvAuditSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_perplexity_audit", qPerplexityAudit, Oracle(qPerplexityAuditSql), Ml),
+    Q("q_lda_topics", qLdaTopics, Cert("q_lda_audit"), Ml),
+    Q("q_doc_topics", qDocTopics, Cert("q_lda_audit"), Ml),
+    Q("q_polysemy", qPolysemy, Cert("q_polysemy_audit"), Ml),
+    Q("q_polysemy_audit", qPolysemyAudit, Oracle(qPolysemyAuditSql), Ml),
+    Q("q_coherence", qCoherence, Cert("q_coherence_audit"), Ml),
+    Q("q_coherence_audit", qCoherenceAudit, Oracle(qCoherenceAuditSql), Ml),
+    Q("q_coherence_cv", qCoherenceCv, Cert("q_coherence_cv_audit"), Ml),
+    Q("q_coherence_cv_audit", qCoherenceCvAudit, Oracle(qCoherenceCvAuditSql), Ml),
+    Q("q_perplexity", qPerplexity, Cert("q_perplexity_audit"), Ml),
+    Q("q_model_select", qModelSelect, Cert("q_model_select_audit"), Ml),
+    Q("q_model_select_audit", qModelSelectAudit, Oracle(qModelSelectAuditSql), Ml),
+    Q("q_hdp", qHdp, Cert("q_hdp_audit"), Ml),
+    Q("q_hdp_audit", qHdpAudit, Oracle(qHdpAuditSql), Ml),
+    Q("q_lda_audit", qLdaAudit, Oracle(qLdaAuditSql), Ml))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Oracle, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -703,43 +703,23 @@ object Tpch extends QueryModule {
            * (CAST(n_p AS DOUBLE) / CAST(d_p AS DOUBLE))), 6) AS fisher
        FROM ag"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_price_index" -> (qPriceIndex _),
-    "q2_topsupp" -> (q2TopSupp _),
-    "q4_priority" -> (q4Priority _),
-    "q7_volume" -> (q7Volume _),
-    "q8_share" -> (q8Share _),
-    "q9_profit" -> (q9Profit _),
-    "q10_returns" -> (q10Returns _),
-    "q12_priority" -> (q12Priority _),
-    "q13_custdist" -> (q13CustDist _),
-    "q15_topsupp" -> (q15TopSupp _),
-    "q14_promo" -> (q14Promo _),
-    "q16_suppcnt" -> (q16SuppCount _),
-    "q17_smallqty" -> (q17SmallQty _),
-    "q19_disjunct" -> (q19Disjunct _),
-    "q11_value" -> (q11Value _),
-    "q20_excess" -> (q20Excess _),
-    "q21_blame" -> (q21Blame _),
-    "q22_idle" -> (q22Idle _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_price_index" -> qPriceIndexSql,
-    "q2_topsupp" -> q2Sql,
-    "q4_priority" -> q4Sql,
-    "q7_volume" -> q7Sql,
-    "q8_share" -> q8Sql,
-    "q9_profit" -> q9Sql,
-    "q10_returns" -> q10Sql,
-    "q12_priority" -> q12Sql,
-    "q13_custdist" -> q13Sql,
-    "q15_topsupp" -> q15Sql,
-    "q14_promo" -> q14Sql,
-    "q16_suppcnt" -> q16Sql,
-    "q17_smallqty" -> q17Sql,
-    "q19_disjunct" -> q19Sql,
-    "q11_value" -> q11Sql,
-    "q20_excess" -> q20Sql,
-    "q21_blame" -> q21Sql,
-    "q22_idle" -> q22Sql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_price_index", qPriceIndex, Oracle(qPriceIndexSql)),
+    Q("q2_topsupp", q2TopSupp, Oracle(q2Sql)),
+    Q("q4_priority", q4Priority, Oracle(q4Sql)),
+    Q("q7_volume", q7Volume, Oracle(q7Sql)),
+    Q("q8_share", q8Share, Oracle(q8Sql)),
+    Q("q9_profit", q9Profit, Oracle(q9Sql)),
+    Q("q10_returns", q10Returns, Oracle(q10Sql)),
+    Q("q12_priority", q12Priority, Oracle(q12Sql)),
+    Q("q13_custdist", q13CustDist, Oracle(q13Sql)),
+    Q("q15_topsupp", q15TopSupp, Oracle(q15Sql)),
+    Q("q14_promo", q14Promo, Oracle(q14Sql)),
+    Q("q16_suppcnt", q16SuppCount, Oracle(q16Sql)),
+    Q("q17_smallqty", q17SmallQty, Oracle(q17Sql)),
+    Q("q19_disjunct", q19Disjunct, Oracle(q19Sql)),
+    Q("q11_value", q11Value, Oracle(q11Sql)),
+    Q("q20_excess", q20Excess, Oracle(q20Sql)),
+    Q("q21_blame", q21Blame, Oracle(q21Sql)),
+    Q("q22_idle", q22Idle, Oracle(q22Sql)))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -327,11 +327,8 @@ object Unigram extends QueryModule {
          TRUE AS simplex_ok, TRUE AS em_ok, TRUE AS coverage_ok
        FROM t"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_unigram" -> (qUnigram _),
-    "q_unigram_encode" -> (qUnigramEncode _),
-    "q_unigram_audit" -> (qUnigramAudit _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_unigram_audit" -> qUnigramAuditSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_unigram", qUnigram, Cert("q_unigram_audit"), Ml),
+    Q("q_unigram_encode", qUnigramEncode, Cert("q_unigram_audit"), Ml),
+    Q("q_unigram_audit", qUnigramAudit, Oracle(qUnigramAuditSql), Ml))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{Cert, Ml, Oracle, Q, QueryModule}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -325,13 +325,9 @@ object Wordpiece extends QueryModule {
          TRUE AS merges_ok, TRUE AS scores_ok
        FROM t"""
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_wordpiece" -> (qWordpiece _),
-    "q_wordpiece_audit" -> (qWordpieceAudit _),
-    "q_wordpiece_encode" -> (qWordpieceEncode _),
-    "q_wordpiece_encode_audit" -> (qWordpieceEncodeAudit _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_wordpiece_audit" -> qWordpieceAuditSql,
-    "q_wordpiece_encode_audit" -> qWordpieceEncodeAuditSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_wordpiece", qWordpiece, Cert("q_wordpiece_audit"), Ml),
+    Q("q_wordpiece_audit", qWordpieceAudit, Oracle(qWordpieceAuditSql), Ml),
+    Q("q_wordpiece_encode", qWordpieceEncode, Cert("q_wordpiece_encode_audit"), Ml),
+    Q("q_wordpiece_encode_audit", qWordpieceEncodeAudit, Oracle(qWordpieceEncodeAuditSql), Ml))
 }

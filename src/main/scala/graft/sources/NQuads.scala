@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.QueryModule
+import graft.{Oracle, Q, QueryModule}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -151,11 +151,7 @@ object NQuads extends QueryModule {
         regexp_replace(col("subject"), "^" + ConceptPrefix, "").as("concept"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_nquads_parse" -> (qNquadsParse _),
-    "q_nquads_source" -> (qNquadsSource _))
-
-  override def oracles: Map[String, String] = Map(
-    "q_nquads_parse" -> qNquadsParseSql,
-    "q_nquads_source" -> qNquadsParseSql)
+  override def registry: Seq[Q] = Seq(
+    Q("q_nquads_parse", qNquadsParse, Oracle(qNquadsParseSql)),
+    Q("q_nquads_source", qNquadsSource, Oracle(qNquadsParseSql)))
 }

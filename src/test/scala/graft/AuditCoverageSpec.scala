@@ -2,129 +2,49 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structural enforcement of the r12 audit-certificate invariant (r16
-  * verdict task 8): every rows-only query — one registered in
-  * SparkEntry.queries with NO DuckDB oracle, i.e. iterative ML / LSH /
-  * variational training whose output is not SQL-derivable — must be
-  * anchored by a hash-gated certificate query (its `*_audit` companion,
-  * or the exact brute-force gate its accuracy is measured against).
-  * Until now the invariant held by judge review; this spec makes it
-  * fail the suite instead:
+/** Every rows-only query — iterative ML / LSH / variational training
+  * whose output is not SQL-derivable — carries a `Cert` gate naming the
+  * hash-gated query that anchors it. The record type already makes a
+  * rows-only query without a certificate impossible; this spec checks
+  * what the types cannot:
   *
-  *  - a rows-only query with no entry in [[AuditCoverageSpec.cert]]
-  *    fails (the builder must name its certificate when adding it);
   *  - a certificate target that is not itself a registered query fails;
-  *  - a certificate target WITHOUT an oracle fails (an un-gated
-  *    certificate certifies nothing);
-  *  - a stale map entry (mapped query no longer registered, or no
-  *    longer rows-only) fails, so the map can't rot.
+  *  - a certificate target that is not `Oracle`-gated fails (an
+  *    un-gated certificate certifies nothing).
   *
   * The deliberately-broken-fixture test proves the checker trips. */
 class AuditCoverageSpec extends AnyFunSuite {
 
-  /** rows-only query → the hash-gated certificate that anchors it.
-    * Family-level anchoring is deliberate (one certificate can anchor
-    * several downstream views of the same trained model): the LDA audit
-    * anchors both the topic table and the per-doc distributions; the
-    * classifier-zoo accounting audit anchors every non-kernel zoo
-    * member; q_knn_search (exact brute-force top-k, fully hash-gated)
-    * anchors the LSH index and its recall measurement. */
-  val cert: Map[String, String] = Map(
-    "q_als" -> "q_als_audit",
-    "q_als_foldin" -> "q_als_foldin_audit",
-    "q_ann_ivf" -> "q_ann_ivf_audit",
-    "q_ann_ivf_foldin" -> "q_ann_ivf_foldin_audit",
-    "q_ann_lsh" -> "q_knn_search",
-    "q_ann_pq" -> "q_ann_pq_audit",
-    "q_ann_ivfpq" -> "q_ann_ivfpq_audit",
-    "q_ann_recall" -> "q_knn_search",
-    "q_bayes_sweep" -> "q_bayes_audit",
-    "q_bpe" -> "q_bpe_audit",
-    "q_bpe_encode" -> "q_bpe_encode_audit",
-    "q_classify_dt" -> "q_classify_audit",
-    "q_classify_gbt" -> "q_classify_audit",
-    "q_classify_knn" -> "q_classify_audit",
-    "q_classify_lr" -> "q_classify_audit",
-    "q_classify_lr_us" -> "q_classify_audit",
-    "q_classify_mlp" -> "q_classify_audit",
-    "q_classify_nb" -> "q_classify_audit",
-    "q_classify_rbf" -> "q_rbf_audit",
-    "q_classify_rf" -> "q_classify_audit",
-    "q_classify_sgdh" -> "q_classify_audit",
-    "q_classify_smote" -> "q_classify_audit",
-    "q_classify_svc" -> "q_classify_audit",
-    "q_clf_param_sweep" -> "q_clf_param_sweep_audit",
-    "q_coherence" -> "q_coherence_audit",
-    "q_coherence_cv" -> "q_coherence_cv_audit",
-    "q_cv_train" -> "q_cv_audit",
-    "q_dedup_cosine_lsh" -> "q_cosine_lsh_audit",
-    "q_dedup_minhash" -> "q_minhash_audit",
-    "q_dedup_semantic" -> "q_semantic_audit",
-    "q_dedup_simhash" -> "q_simhash_audit",
-    "q_doc_topics" -> "q_lda_audit",
-    "q_features" -> "q_features_audit",
-    "q_hac" -> "q_hac_audit",
-    "q_hdp" -> "q_hdp_audit",
-    "q_isotonic" -> "q_isotonic_audit",
-    "q_kmeans" -> "q_kmeans_audit",
-    "q_lda_topics" -> "q_lda_audit",
-    "q_model_select" -> "q_model_select_audit",
-    "q_param_sweep" -> "q_param_sweep_audit",
-    "q_pca" -> "q_pca_audit",
-    "q_perplexity" -> "q_perplexity_audit",
-    "q_polysemy" -> "q_polysemy_audit",
-    "q_polysemy_bayes" -> "q_polysemy_bayes_audit",
-    "q_polysemy_eval" -> "q_polysemy_eval_audit",
-    "q_silhouette" -> "q_kmeans_audit",
-    "q_sinkhorn" -> "q_sinkhorn_audit",
-    "q_tdigest" -> "q_tdigest_audit",
-    "q_unigram" -> "q_unigram_audit",
-    "q_unigram_encode" -> "q_unigram_audit",
-    "q_w2v" -> "q_w2v_audit",
-    "q_gmm" -> "q_gmm_audit",
-    "q_wordpiece" -> "q_wordpiece_audit",
-    "q_wordpiece_encode" -> "q_wordpiece_encode_audit",
-    "q_cox" -> "q_cox_audit")
-
   /** Pure checker so the broken-fixture test can exercise it directly. */
-  def violations(queries: Set[String], oracles: Set[String],
-      cert: Map[String, String]): Seq[String] = {
-    val rowsOnly = queries -- oracles
-    val unanchored = (rowsOnly -- cert.keySet).toSeq.sorted
-      .map(q => s"rows-only query $q has no certificate mapping")
-    val badTarget = cert.toSeq.sortBy(_._1).flatMap { case (q, a) =>
-      if (!queries.contains(a)) Some(s"$q -> $a: certificate not registered")
-      else if (!oracles.contains(a)) Some(s"$q -> $a: certificate has no oracle (un-gated)")
-      else None
-    }
-    val stale = cert.keySet.toSeq.sorted.flatMap { q =>
-      if (!queries.contains(q)) Some(s"stale mapping: $q is not a registered query")
-      else if (oracles.contains(q)) Some(s"stale mapping: $q is hash-gated, not rows-only")
-      else None
-    }
-    unanchored ++ badTarget ++ stale
+  def violations(registry: Seq[Q]): Seq[String] = {
+    val gates = registry.map(q => q.name -> q.gate).toMap
+    registry.sortBy(_.name).collect { case Q(q, _, Cert(a), _) =>
+      gates.get(a) match {
+        case None => Some(s"$q -> $a: certificate not registered")
+        case Some(Cert(_)) => Some(s"$q -> $a: certificate has no oracle (un-gated)")
+        case Some(Oracle(_)) => None
+      }
+    }.flatten
   }
 
   test("every rows-only query is anchored by a hash-gated certificate") {
-    val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    val v = violations(qs, os, cert)
+    val v = violations(SparkEntry.registry)
     assert(v.isEmpty, "\n" + v.mkString("\n"))
   }
 
   test("checker trips on a deliberately broken registry") {
-    val qs = Set("q_real_gated", "q_new_ml", "q_mapped_ml", "q_ungated_cert")
-    val os = Set("q_real_gated")
-    // q_new_ml: rows-only, unmapped -> must trip.
-    // q_mapped_ml -> q_ungated_cert: certificate exists but has no oracle -> must trip.
-    val v = violations(qs, os, Map(
-      "q_mapped_ml" -> "q_ungated_cert",
-      "q_ungated_cert" -> "q_real_gated",
-      "q_gone" -> "q_real_gated"))
-    assert(v.exists(_.contains("q_new_ml has no certificate mapping")))
+    def q(name: String, gate: Gate) = Q(name, (_, _) => ???, gate)
+    val v = violations(Seq(
+      q("q_real_gated", Oracle("SELECT 1")),
+      // certificate exists but is itself rows-only -> must trip
+      q("q_mapped_ml", Cert("q_ungated_cert")),
+      q("q_ungated_cert", Cert("q_real_gated")),
+      // certificate never registered -> must trip
+      q("q_orphan_ml", Cert("q_gone"))))
     assert(v.exists(_.contains("q_mapped_ml -> q_ungated_cert: certificate has no oracle")))
-    assert(v.exists(_.contains("stale mapping: q_gone")))
+    assert(v.exists(_.contains("q_orphan_ml -> q_gone: certificate not registered")))
+    assert(v.size == 2)
     // and a clean registry reports nothing
-    assert(violations(Set("a", "a_audit"), Set("a_audit"), Map("a" -> "a_audit")).isEmpty)
+    assert(violations(Seq(q("a", Cert("a_audit")), q("a_audit", Oracle("SELECT 1")))).isEmpty)
   }
 }

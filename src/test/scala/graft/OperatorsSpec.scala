@@ -159,10 +159,4 @@ class OperatorsSpec extends SparkSpec {
   test("entry smoke: flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
-
-  test("every oracle key has a matching query") {
-    val qs = SparkEntry.queries.keySet
-    val missing = SparkEntry.oracleSql.keySet -- qs
-    assert(missing.isEmpty, s"oracles without queries: $missing")
-  }
 }

@@ -95,8 +95,8 @@ class SumAuditSpec extends SparkSpec {
     val report = new StringBuilder
     var bad = 0
     mods.foreach { case (mname, m) =>
-      m.queries.keys.toSeq.sorted.filter(m.oracles.contains).foreach { q =>
-        val sums = doubleAggs(m.queries(q)(spark, sfDir))
+      for (Q(q, build, Oracle(_), _) <- m.registry.sortBy(_.name)) {
+        val sums = doubleAggs(build(spark, sfDir))
         if (sums.size > allow.getOrElse(q, 0)) {
           bad += 1
           report.append(s"$mname/$q: ${sums.size}\n")
