@@ -363,7 +363,7 @@ object Classification extends QueryModule {
       math.max(1L, n / 100000L + 1L),
       tr.sparkSession.sparkContext.defaultParallelism.toLong).toInt
     val cached = tr.repartition(parts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cache()
     try {
       val sumW = cached.agg(sum(col("w"))).head.getDouble(0)
       var wv = Array.fill(d)(0.0)

@@ -56,7 +56,7 @@ object Dedup extends QueryModule {
         .select(col("doc_id"), explode(TextFns.shingles(col("rtoks"), 3)).as("shingle"))
         .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** The same distinct hashed-shingle relation over an arbitrary
@@ -77,7 +77,7 @@ object Dedup extends QueryModule {
   private def docSizes(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"dedup.sizes:$dir") {
       docShingles(s, dir).groupBy("doc_id").agg(count(lit(1)).as("sz"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** The (doc_a, doc_b, common-shingle-count) candidate-pair stream off
@@ -101,7 +101,7 @@ object Dedup extends QueryModule {
         .select(explode(graft.functions.Pairs.orderedPairs(col("ds"))).as("p"))
         .groupBy(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
         .agg(count(lit(1)).as("common"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** q_novelty: per-document trigram commonness — mean corpus document-
@@ -196,12 +196,8 @@ object Dedup extends QueryModule {
         org.apache.spark.sql.types.StructField("jaccard",
           org.apache.spark.sql.types.DoubleType))))
     graft.ModelCache.getOrElseUpdate(s, s"dedup.incr.base:$dir") {
-      // localCheckpoint (the clustersOf rationale): the fold's returned
-      // plan nests the whole batch pipeline — as prevPairs of the LIVE
-      // fold it would be re-canonicalized by every downstream job
-      dedupFoldBatch(prevSh.filter(lit(false)), emptyPairs, prevSh,
-        docSizes(s, dir))
-        .localCheckpoint(true)
+      graft.ModelCache.checkpoint(dedupFoldBatch(prevSh.filter(lit(false)),
+        emptyPairs, prevSh, docSizes(s, dir)))
     }
   }
 
@@ -216,10 +212,9 @@ object Dedup extends QueryModule {
     * layout (guide §2.4/§6 sort-once) instead of re-shuffling state. */
   private[graft] def incrDfState(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"dedup.incr.dfs:$dir") {
-      docShingles(s, dir).filter(!incrIsNew)
+      graft.ModelCache.checkpoint(docShingles(s, dir).filter(!incrIsNew)
         .groupBy("sh").agg(count(lit(1)).as("df_base"))
-        .sortWithinPartitions("sh")
-        .localCheckpoint(true)
+        .sortWithinPartitions("sh"))
     }
 
   /** Today's FOLDED pair relation (base state + the delta batch) —
@@ -228,10 +223,9 @@ object Dedup extends QueryModule {
   private def incrFoldedPairs(s: SparkSession, dir: String): DataFrame = {
     val sh = docShingles(s, dir)
     graft.ModelCache.getOrElseUpdate(s, s"dedup.incr.folded:$dir") {
-      // localCheckpoint (the clustersOf rationale)
-      dedupFoldBatchWithState(sh.filter(!incrIsNew), incrDfState(s, dir),
-        incrBaseState(s, dir), sh.filter(incrIsNew), docSizes(s, dir))
-        .localCheckpoint(true)
+      graft.ModelCache.checkpoint(dedupFoldBatchWithState(
+        sh.filter(!incrIsNew), incrDfState(s, dir), incrBaseState(s, dir),
+        sh.filter(incrIsNew), docSizes(s, dir)))
     }
   }
 
@@ -675,7 +669,7 @@ object Dedup extends QueryModule {
         .setFeaturesCol("features").fit(feats)
       km.transform(feats)
         .select(col("vec_id"), col("v"), col("prediction").as("cluster"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     val cand = assigned.groupBy("cluster")
       .agg(collect_list(col("vec_id")).as("ds"))
@@ -746,7 +740,7 @@ object Dedup extends QueryModule {
         .select(explode(graft.functions.Pairs.orderedPairs(col("ds"))).as("p"))
         .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     exactJaccardOf(sh, cand).filter(col("jaccard") >= 0.12)
   }
@@ -1022,14 +1016,13 @@ object Dedup extends QueryModule {
     * step (a pair list alone doesn't say which docs to drop — the cluster
     * id does: keep min(doc_id) per cluster, drop the rest). */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sym = edges.select(col("a"), col("b"))
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .persist(lvl)
+      .cache()
     // seed = round one, join-free: min of self and direct neighbors
     var labels = sym.groupBy(col("a").as("id")).agg(min(col("b")).as("mb"))
       .select(col("id"), least(col("id"), col("mb")).as("label"))
-      .persist(lvl)
+      .cache()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -1055,7 +1048,7 @@ object Dedup extends QueryModule {
           .select(col("id"), col("prev"),
             least(col("lh"), coalesce(col("pl"), col("lh"))).as("label"))
       } else hooked.select(col("id"), col("prev"), col("lh").as("label")))
-        .persist(lvl)
+        .cache()
       converged = next.filter(col("label") =!= col("prev")).limit(1).count() == 0
       labels.unpersist()
       labels = next.select("id", "label")
@@ -1092,14 +1085,14 @@ object Dedup extends QueryModule {
     * per-doc cluster assignment (cluster id = min doc_id reachable).
     * Hash-gated against a DuckDB recursive-CTE transitive closure. */
   /** The exact-Jaccard pair graph as an (a < b) edge list, memoized +
-    * persisted per session: the clusters query iterates over it and the
+    * checkpointed per session: the clusters query iterates over it and the
     * graph-stats query references it from six join positions — without
     * materialization each reference re-runs the whole pair pipeline. */
   def jaccardEdges(s: SparkSession, dir: String): DataFrame =
     jaccardPairs(s, dir).select(col("doc_a").as("a"), col("doc_b").as("b"))
 
   /** The exact-Jaccard pair relation WITH its jaccard values, memoized +
-    * persisted per session — the shared INPUT of the cluster family
+    * checkpointed per session — the shared INPUT of the cluster family
     * (edge projection above) and the LSH planner family (which evaluates
     * its S-curves against the observed jaccard distribution). The r21
     * form memoized qLshPlan's entire 8-row RESULT, which under the
@@ -1115,12 +1108,7 @@ object Dedup extends QueryModule {
       // near-empty tasks. The keyed repartition gives AQE a coalesce
       // point: near-dup-density-sized locally → 1 partition; at 100 TB
       // the same code keeps size-proportional parallelism (§2.2).
-      // localCheckpoint, not persist (the clustersOf rationale): with
-      // persist every consumer ACTION re-canonicalized the whole
-      // qDedupJaccard join tree per cache lookup — probe: the live LSH
-      // planner spent 0.9 s wall on 0.04 task-sec, all driver time.
-      qDedupJaccard(s, dir).repartition(col("doc_a"))
-        .localCheckpoint(true)
+      graft.ModelCache.checkpoint(qDedupJaccard(s, dir).repartition(col("doc_a")))
     }
 
   /** Cluster labels memoized per (session, dir): the iterative
@@ -1129,14 +1117,8 @@ object Dedup extends QueryModule {
     * docShingles shared-hot-stage rule. */
   private def clustersOf(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"dedup.clusters:$dir") {
-      // localCheckpoint, not persist (r21): persist keeps the CC fold's
-      // full nested-join LINEAGE as the logical plan, so every consumer
-      // action re-canonicalized a many-thousand-node tree for the cache
-      // lookup (~0.5-1 s of driver time per run on q_dedup_canonical /
-      // q_split_leakfree); the checkpoint's LogicalRDD plan is O(1)
-      connectedComponents(jaccardEdges(s, dir))
-        .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        .localCheckpoint(true)
+      graft.ModelCache.checkpoint(connectedComponents(jaccardEdges(s, dir))
+        .select(col("id").as("doc_id"), col("label").as("cluster_id")))
     }
 
   def qDedupClusters(s: SparkSession, dir: String): DataFrame =
@@ -1187,8 +1169,8 @@ object Dedup extends QueryModule {
     // full-corpus tokenization — memoized so the incremental consumer's
     // touched-cluster re-election doesn't re-tokenize the corpus per call
     val q = graft.ModelCache.getOrElseUpdate(s, s"dedup.canon.quality:$dir") {
-      TextAnalysis.qQuality(s, dir).select(col("doc_id"), col("quality"))
-        .localCheckpoint(true)
+      graft.ModelCache.checkpoint(
+        TextAnalysis.qQuality(s, dir).select(col("doc_id"), col("quality")))
     }
     labels.join(q, Seq("doc_id"))
       .groupBy("cluster_id")
@@ -1602,7 +1584,7 @@ object Dedup extends QueryModule {
   private def spansOf(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"dedup.spans:$dir") {
       repeatedSpans(TextPrep.rawDocs(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** q_dup_spans: maximal repeated 5-gram spans over the documents table. */
@@ -1741,7 +1723,7 @@ object Dedup extends QueryModule {
           when(ff > 0, ff - 1)
             .otherwise(least(size(col("min_arr")), size(split(col("max_key"), " "))))
             .cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** q_exact_substr_spans: per-doc merged COVERED intervals off the
@@ -1764,7 +1746,7 @@ object Dedup extends QueryModule {
   private def exactSpansOf(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"dedup.exactspans:$dir") {
       exactSubstrSpansUncached(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   private def exactSubstrSpansUncached(s: SparkSession, dir: String): DataFrame = {
@@ -2054,7 +2036,7 @@ object Dedup extends QueryModule {
       connectedComponents(basePairs
           .select(col("doc_a").as("a"), col("doc_b").as("b")))
         .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
   }
 
@@ -2065,29 +2047,25 @@ object Dedup extends QueryModule {
     * consumer reads what-changed from the fold itself instead of
     * re-diffing |V|-sized label snapshots (r19 verdict task 4). */
   private def incrNewFold(s: SparkSession, dir: String): LabelFold = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val basePairs = incrBaseState(s, dir)
     val folded = incrFoldedPairs(s, dir)
     val added = graft.ModelCache.getOrElseUpdate(s, s"dedup.incr.added:$dir") {
       folded.select(col("doc_a"), col("doc_b"))
-        .except(basePairs.select(col("doc_a"), col("doc_b"))).persist(lvl)
+        .except(basePairs.select(col("doc_a"), col("doc_b"))).cache()
     }
     val removed = graft.ModelCache.getOrElseUpdate(s, s"dedup.incr.removed:$dir") {
       basePairs.select(col("doc_a"), col("doc_b"))
-        .except(folded.select(col("doc_a"), col("doc_b"))).persist(lvl)
+        .except(folded.select(col("doc_a"), col("doc_b"))).cache()
     }
     // today's labels are themselves state a production pipeline lands
     // (tomorrow's baseLabels) — materialized once, read by both
-    // consumers. localCheckpoint (eager) rather than persist: it also
-    // TRUNCATES the quotient-CC lineage, so the consumers' joins embed
-    // a leaf scan instead of re-optimizing the whole iterative plan
-    // per job (measured 74 s vs 12 s at k9 on the lineage alone).
+    // consumers.
     graft.ModelCache.getOrElseUpdate(s, s"dedup.incr.fold:$dir") {
       val f = labelFoldDeltaTouched(incrBaseLabels(s, dir), folded,
         added, removed)
-      LabelFold(f.labels.localCheckpoint(true),
-        f.affectedBase.localCheckpoint(true),
-        f.touchedDocs.localCheckpoint(true))
+      LabelFold(graft.ModelCache.checkpoint(f.labels),
+        graft.ModelCache.checkpoint(f.affectedBase),
+        graft.ModelCache.checkpoint(f.touchedDocs))
     }
   }
 
@@ -2139,18 +2117,15 @@ object Dedup extends QueryModule {
     // per-call plan is just kept ∪ re-elected over checkpointed leaves
     val (touchedNew, obsolete) = graft.ModelCache.getOrElseUpdate(
         s, s"dedup.incr.touched:$dir") {
-      val tn = newLabels
+      val tn = graft.ModelCache.checkpoint(newLabels
         .join(fold.touchedDocs, Seq("doc_id"), "left_semi")
-        .select("cluster_id").distinct().localCheckpoint(true)
-      val ob = fold.affectedBase.unionByName(tn).distinct()
-        .localCheckpoint(true)
+        .select("cluster_id").distinct())
+      val ob = graft.ModelCache.checkpoint(
+        fold.affectedBase.unionByName(tn).distinct())
       (tn, ob)
     }
-    // localCheckpoint, not persist: persist caches blocks but every
-    // consumer job still re-optimizes the embedded CC+election lineage
-    // (the measured 74 s vs 12 s lesson in SCALING.md)
     val baseCanon = graft.ModelCache.getOrElseUpdate(s, s"dedup.incr.canon:$dir") {
-      canonicalOf(s, dir, baseLabels).localCheckpoint(true)
+      graft.ModelCache.checkpoint(canonicalOf(s, dir, baseLabels))
     }
     val kept = baseCanon.join(obsolete, Seq("cluster_id"), "left_anti")
     val recomputed = canonicalOf(s, dir,
@@ -2256,7 +2231,7 @@ object Dedup extends QueryModule {
       docShingles(s, dir)
         .join(Tables.documents(s, dir).select(col("doc_id"), col("source")), Seq("doc_id"))
         .select(col("source"), col("sh")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     val sizes = srcSh.groupBy("source").agg(count(lit(1)).as("sz"))
     val pairs = srcSh.as("a").join(srcSh.as("b"),
@@ -2382,7 +2357,7 @@ object Dedup extends QueryModule {
   private def pairGramStats(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"dedup.pairgrams:$dir") {
       pairGramStatsBuild(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   private def pairGramStatsBuild(s: SparkSession, dir: String): DataFrame = {

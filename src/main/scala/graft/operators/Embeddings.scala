@@ -57,7 +57,7 @@ object Embeddings extends QueryModule {
     graft.ModelCache.getOrElseUpdate(s, s"emb.w2v.vec:$dir") {
       val df = fit(s, dir).getVectors
         .select(col("word"), vector_to_array(col("vector")).as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
       df.count() // materialize once under the cache lock
       df
     }

@@ -231,7 +231,7 @@ object Multimodal extends QueryModule {
   def qMediaPhash(s: SparkSession, dir: String): DataFrame =
     pairsFromSigs(graft.ModelCache.getOrElseUpdate(s, s"media.phashsig:$dir") {
       phashSigsOf(Tables.documents(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     })
 
   def mediaPhashOf(docs: DataFrame): DataFrame =

@@ -52,7 +52,7 @@ object Recommender extends QueryModule {
         .groupBy(col("o_custkey").cast("int").as("user"),
           col("l_partkey").cast("int").as("item"))
         .agg(countDistinct(col("l_orderkey")).cast("double").as("strength"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
       df.count() // materialize once under the cache lock
       df
     }

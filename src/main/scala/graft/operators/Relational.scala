@@ -694,7 +694,7 @@ object Relational extends QueryModule {
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(count(lit(1)).as("n_ab"))
         .filter(col("n_ab") >= 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   def qCopurchase(s: SparkSession, dir: String): DataFrame =
@@ -843,107 +843,39 @@ object Relational extends QueryModule {
          round(aa, 6) AS adamic_adar
        FROM cand JOIN deg da ON da.node = pa JOIN deg db ON db.node = pb"""
 
-  /** Round cap for [[qConnectedComponents]]'s label propagation: with the
-    * pointer-jumping shortcut each round, rounds needed = O(log diameter)
-    * (the chain-mode Amplify ladder certifies this), and the loop breaks
-    * on the first converged round — the cap only bounds pathology. */
-  val CcMaxRounds = 50
-
   /** q_connected_components: connected components of the co-purchase
     * graph — the graph-topology member the recommender family was
     * missing (q_copurchase counts edges, q_item_sim normalizes them,
     * q_link_pred scores wedges, q_als factorizes; components answer
     * "which items form one connected market at all", the partitioning a
-    * catalog team uses to shard recommendation models). Spark side is
-    * iterative MIN-LABEL propagation to a fixpoint: labels start as node
-    * ids, each round takes the min over the closed neighborhood
-    * (self ∪ neighbors), and the loop breaks on the first round with
-    * zero changed labels — every iteration is one dimension-sized
-    * shuffle join (the fact table was left behind at the basket
-    * aggregate), re-persisted and lineage-cut per round, with a
-    * pointer-jumping shortcut (l(v) ← l(l(v)), one node-sized self-join)
-    * every SECOND round — the Shiloach–Vishkin hook/shortcut discipline,
-    * same O(log n)-round contraction class as Kiveris et al. 2014's
-    * small-star/large-star: rounds = O(log diameter), not diameter, so a
-    * chained 100 TB graph converges in tens of rounds, not thousands,
-    * while small-diameter graphs converge before any shortcut runs and
-    * pay nothing extra. The component id is the
-    * MINIMUM part id of the component — deterministic, no RNG — so the
-    * full (part → component, size) mapping hash-gates against a DuckDB
-    * recursive-CTE reachability closure (min reachable id per node):
-    * same semantics, entirely different algorithm, which is exactly what
-    * the gate is for. */
+    * catalog team uses to shard recommendation models). The component
+    * id is the MINIMUM part id of the component — deterministic, no RNG —
+    * so the full (part → component, size) mapping hash-gates against a
+    * DuckDB recursive-CTE reachability closure (min reachable id per
+    * node): same semantics, entirely different algorithm, which is
+    * exactly what the gate is for.
+    *
+    * Probe-gated (the ccFoldBatch/q_keywords take(limit+1) convention):
+    * the co-purchase edge set is DIMENSION-sized (the fact table was left
+    * behind at the basket aggregate), so when the probe proves it bounded
+    * the min-root union-find runs driver-side — at sf0.1 a distributed
+    * loop was ~10 sequential driver-bound execs over a 1,880-node graph.
+    * Above the limit the distributed hook/shortcut loop
+    * [[Dedup.connectedComponents]] runs, exactly as in ccFoldBatch's
+    * quotient fold. Union-by-min yields the identical min-label fixpoint. */
   def qConnectedComponents(s: SparkSession, dir: String): DataFrame = {
     val edges = copurchasePairs(s, dir).select("a", "b")
-    // Probe-gated local fold (r22 — the ccFoldBatch/q_keywords
-    // take(limit+1) convention): the co-purchase edge set is DIMENSION-
-    // sized (the fact table was left behind at the basket aggregate), so
-    // when the probe proves it bounded the min-root union-find runs
-    // driver-side — at sf0.1 the distributed loop was ~10 sequential
-    // driver-bound execs over a 1,880-node graph (scaling block: 8 cores
-    // beat 32). Above the limit the distributed hook/shortcut loop below
-    // is the path, exactly as ccFoldBatch's quotient fold. Union-by-min
-    // yields the identical min-label fixpoint (DuckDB gate unchanged).
     val eHead = edges.take(CcIncrLocalLimit + 1)
-    if (eHead.length <= CcIncrLocalLimit) {
-      import s.implicits._
-      val labels = Dedup.ccLocal(eHead.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-        .toDF("part", "component")
-      val sizes = labels.groupBy("component").agg(count(lit(1)).as("comp_size"))
-      return labels.join(sizes, Seq("component"))
-        .select(col("part"), col("component"), col("comp_size"))
-    }
-    // localCheckpoint (the Bpe/Wordpiece loop discipline): each round's
-    // labels are MATERIALIZED and their lineage truncated, so round k's
-    // plan never re-analyzes rounds 1..k−1 and the driver doesn't
-    // accumulate one broadcast per survived round.
-    val adj = edges
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
-    var labels = adj.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("comp"))
-      .localCheckpoint(true)
-    var round = 0
-    var changed = 1L
-    // TWO hooks + one shortcut per MATERIALIZED round (r22): the r21
-    // loop ran one job per hook, one per convergence count, and a third
-    // per alternate-round shortcut — ~19 sequential driver-bound execs
-    // at sf0.1 (scaling block: 8 cores BEAT 32, pure job-count latency).
-    // Folding hook∘hook∘shortcut into one lazily-composed plan per
-    // round halves the checkpoint/count barriers for the same total
-    // compute; the shortcut's two reads of the second hook share their
-    // exchanges (ReuseExchange) inside the single job. Fixpoint
-    // unchanged: hooks/shortcuts only ever lower labels toward the
-    // component minimum, and a round with zero changes implies the
-    // single-hook fixpoint (labels = component minima) already held.
-    def hook(lbl: DataFrame): DataFrame = {
-      val nbrMin = adj
-        .join(lbl.select(col("node").as("b"), col("comp").as("nc")),
-          Seq("b"))
-        .groupBy(col("a").as("node")).agg(min(col("nc")).as("nbr_min"))
-      lbl.join(nbrMin, Seq("node"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nbr_min"), col("comp")))
-            .as("comp"))
-    }
-    while (changed > 0 && round < CcMaxRounds) {
-      val h2 = hook(hook(labels))
-      val next = h2
-        .join(h2.select(col("node").as("pid"), col("comp").as("pc")),
-          col("comp") === col("pid"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("pc"), col("comp"))).as("comp2"))
-        .join(labels.select(col("node"), col("comp").as("prev")), Seq("node"))
-        .select(col("node"), col("comp2").as("comp"), col("prev"))
-        .localCheckpoint(true)
-      changed = next.filter(col("comp") < col("prev")).limit(1).count()
-      labels = next.select("node", "comp")
-      round += 1
-    }
-    val sizes = labels.groupBy("comp").agg(count(lit(1)).as("comp_size"))
-    labels.join(sizes, Seq("comp"))
-      .select(col("node").as("part"), col("comp").as("component"),
-        col("comp_size"))
+    val labels =
+      if (eHead.length <= CcIncrLocalLimit) {
+        import s.implicits._
+        Dedup.ccLocal(eHead.toSeq.map(r => (r.getLong(0), r.getLong(1))))
+          .toDF("part", "component")
+      } else Dedup.connectedComponents(edges)
+        .select(col("id").as("part"), col("label").as("component"))
+    val sizes = labels.groupBy("component").agg(count(lit(1)).as("comp_size"))
+    labels.join(sizes, Seq("component"))
+      .select(col("part"), col("component"), col("comp_size"))
   }
 
   private val qConnectedComponentsSql =
@@ -1028,13 +960,13 @@ object Relational extends QueryModule {
     // build is charged to the first run)
     val baseCounts = graft.ModelCache.getOrElseUpdate(s, s"rel.ccincr.counts:$dir") {
       pairCounts(lp.filter(col("is_base")).select("l_orderkey", "l_partkey"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     // the day's delta counts are also counted ONCE (production counts
     // each day's delta a single time and keeps it)
     val deltaCounts = graft.ModelCache.getOrElseUpdate(s, s"rel.ccincr.delta:$dir") {
       pairCounts(lp.filter(!col("is_base")).select("l_orderkey", "l_partkey"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     val baseEdges = baseCounts.filter(col("n") >= 2).select("a", "b")
     // only pairs PRESENT in the delta can change edge-set membership
@@ -1050,12 +982,7 @@ object Relational extends QueryModule {
       // new-node derivation) each replayed the counts merge otherwise
       .localCheckpoint(true)
     val baseLabels = graft.ModelCache.getOrElseUpdate(s, s"rel.ccincr.labels:$dir") {
-      // localCheckpoint, not persist (the clustersOf rationale): persist
-      // keeps the whole iterative CC fold as the logical plan, and every
-      // fold-consumer ACTION (the quotient take, the final save) paid
-      // the many-thousand-node canonicalization per cache lookup
-      Dedup.connectedComponents(baseEdges) // yesterday's labels
-        .localCheckpoint(true)
+      graft.ModelCache.checkpoint(Dedup.connectedComponents(baseEdges)) // yesterday's labels
     }
     // node-sized; the sizes aggregate and the final join both read the
     // merged labels — materialize once or the whole fold chain replays
@@ -1299,7 +1226,7 @@ object Relational extends QueryModule {
         .groupBy("o_custkey")
         .agg(min(datediff(col("d_max"), col("o_orderdate"))).as("recency_days"),
           count(lit(1)).as("freq"), sum(col("price")).as("monetary"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     // Quintile scores WITHOUT numbering every row: ntile(5) only needs
     // the 4 bucket-BOUNDARY positions, and in a total order (metric,

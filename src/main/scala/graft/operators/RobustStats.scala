@@ -151,16 +151,11 @@ object RobustStats extends QueryModule {
     * re-scan for the closing aggregate (guide §2.4 — share one exchange
     * across consumers). The checkpoint is the fact projection's size:
     * at 100 TB this is the sort-once/read-many layout a production
-    * table would keep on disk (guide §6 sort order) — so storage is
-    * pluggable (Materialize.stateCheckpoint): a RELIABLE checkpoint
-    * when the session configures a checkpoint dir, localCheckpoint only
-    * as the local-mode fallback (r21 ADVICE: executor-local blocks with
-    * severed lineage are not safe under executor loss / dynamic
-    * allocation — a cluster deployment must set spark.checkpoint.dir). */
+    * table would keep on disk (guide §6 sort order). */
   private def pricesByFlag(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"robust.pricesByFlag:$dir") {
       val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      graft.Materialize.stateCheckpoint(Tables.lineitem(s, dir)
+      graft.ModelCache.checkpoint(Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("flag"),
           col("l_extendedprice").cast("decimal(12,2)").as("price"),
           (col("l_extendedprice").cast("decimal(12,2)") * 100)

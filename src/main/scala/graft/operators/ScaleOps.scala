@@ -380,7 +380,7 @@ object ScaleOps extends QueryModule {
         .join(Dedup.qSplitLeakfree(s, dir).select(col("doc_id"), col("split")), Seq("doc_id"))
         .filter(col("split") === "train" && col("n_kept") > 0)
         .select(col("doc_id"), col("n_kept"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     graft.functions.Ranks.globalPrefixSum(train, "n_kept", col("doc_id").asc)
       .select(col("doc_id"), col("n_kept"),

@@ -467,7 +467,7 @@ object SimilaritySearch extends QueryModule {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       signBuckets(e, "vec_id", nPlanes = planes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
   }
 
@@ -574,7 +574,7 @@ object SimilaritySearch extends QueryModule {
     val indexed = graft.ModelCache.getOrElseUpdate(s, s"$kmKey.assign:$dir") {
       withDists.filter(col("vec_id") >= 10 && col("crk") === 1)
         .select(col("vec_id").as("nb_id"), col("v").as("nv"), col("cell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     val probes = withDists.filter(col("vec_id") < 10 && col("crk") <= nProbe)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cell"))
@@ -713,7 +713,7 @@ object SimilaritySearch extends QueryModule {
     // (the postedBuckets treatment; persisted codes are M small ints/vector)
     val (books, codes) = graft.ModelCache.getOrElseUpdate(s, s"ann.pq:$dir") {
       val b = pqCodebooks(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
       val base0 = Tables.embeddings(s, dir)
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       // store the posting partitioned by vec_id, not pqEncode's
@@ -726,7 +726,7 @@ object SimilaritySearch extends QueryModule {
       // one repartition at the memoized index build (guide §2.3/§2.4)
       val c = pqEncode(base0.filter(col("vec_id") >= 10), b)
         .repartition(col("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
       (b, c)
     }
     val base = Tables.embeddings(s, dir)
@@ -808,17 +808,16 @@ object SimilaritySearch extends QueryModule {
         .select(col("vec_id"), col("cell"),
           zip_with(col("v"), col("cent"), (a, b) => a - b).as("rv"))
         .localCheckpoint(true)
-      val b = pqCodebooksOf(s,
+      val b = graft.ModelCache.checkpoint(pqCodebooksOf(s,
         assigned.filter(col("vec_id") % 20 === 0 || col("vec_id") < 200)
           .select(col("rv").as("v")),
-        seedBase = 1042L)
-        .localCheckpoint(true)
+        seedBase = 1042L))
       // same vec_id colocation as the flat-PQ posting: the IVFADC search
       // aggregates by (q_id, vec_id) too
-      val c = pqEncode(assigned.select(col("vec_id"), col("rv").as("v")), b)
-        .join(assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
-        .repartition(col("vec_id"))
-        .localCheckpoint(true)
+      val c = graft.ModelCache.checkpoint(
+        pqEncode(assigned.select(col("vec_id"), col("rv").as("v")), b)
+          .join(assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
+          .repartition(col("vec_id")))
       (b, c)
     }
     // query side: nProbe probed cells, ADC table per (query, cell) from
@@ -869,9 +868,7 @@ object SimilaritySearch extends QueryModule {
     * brute-force scan IS that query's measured artifact; only the
     * audits, whose measured artifact is the certificate computation,
     * read the memoized ground truth (the jaccardEdges/rawDocs
-    * shared-input convention). persist, not localCheckpoint: the
-    * relation is |corpus|·|queries|-sized (fact-scale at 100 TB), so it
-    * keeps its lineage for fault tolerance. */
+    * shared-input convention). */
   private def knnScored(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"ann.exact.scored:$dir") {
       val e = Tables.embeddings(s, dir)
@@ -882,7 +879,7 @@ object SimilaritySearch extends QueryModule {
         .join(broadcast(queries))
         .select(col("q_id"), col("vec_id").as("nb_id"),
           cosine(col("qv"), col("v")).as("cos"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** Exact top-k (q_id, nb_id, cos) off the shared scored substrate —
@@ -1664,7 +1661,7 @@ object SimilaritySearch extends QueryModule {
       val k = kmK
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
       val d = Dim
       def minDist(cs: Array[Array[Double]]): Column =
         greatest(array_min(array(cs.map { c =>
@@ -1713,7 +1710,7 @@ object SimilaritySearch extends QueryModule {
         .agg(count(lit(1)).as("n"),
           round(sum(col("mind").cast("decimal(38,18)")).cast("double"), 6).as("inertia"))
         .select(col("cl").as("cluster"), col("n"), col("inertia"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
       fin.count()
       e.unpersist()
       (cens, traj.toSeq, fin)

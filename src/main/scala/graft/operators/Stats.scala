@@ -6432,14 +6432,10 @@ object Stats extends QueryModule {
     // checkpointed sorted base (the RobustStats.pricesByFlag pattern):
     // the median pick runs sort-free over it and the deviation aggregate
     // reads the same materialized blocks — replaces the per-query
-    // persist + unpersist + collect-and-rebuild dance. FACT-sized, so
-    // storage is pluggable (Materialize.stateCheckpoint): reliable
-    // checkpoint when a checkpoint dir is configured, localCheckpoint
-    // only as the local-mode fallback (r21 ADVICE: a lost executor must
-    // not strand every consumer for the session).
+    // persist + unpersist + collect-and-rebuild dance.
     val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val base = graft.ModelCache.getOrElseUpdate(s, s"stats.qtyByFlag:$dir") {
-      graft.Materialize.stateCheckpoint(Tables.lineitem(s, dir)
+      graft.ModelCache.checkpoint(Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("g"),
           col("l_quantity").cast("decimal(18,2)").as("x"))
         .repartitionByRange(nPart, col("g").asc, col("x").asc)

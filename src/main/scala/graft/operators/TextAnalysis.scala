@@ -1194,7 +1194,7 @@ object TextAnalysis extends QueryModule {
       val df = pairs
         .unionByName(pairs.select(col("c").as("w"), col("w").as("c")))
         .groupBy("w", "c").agg(count(lit(1)).as("n_wc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
       df.count() // materialize once under the cache lock
       df
     }
@@ -1434,7 +1434,7 @@ object TextAnalysis extends QueryModule {
     // per-doc join) — materialize per session or pay the scoring twice
     val lm = graft.ModelCache.getOrElseUpdate(s, s"text.lmScores:$dir") {
       qLmScore(s, dir).select(col("doc_id"), col("avg_nll"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
     val p95 = lm.agg(expr("percentile(avg_nll, 0.95)").as("nll_p95"))
     qCuration(s, dir)

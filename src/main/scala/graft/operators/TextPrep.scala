@@ -38,7 +38,7 @@ object TextPrep extends QueryModule {
       // one-core. Paid once per session at substrate build.
       Tables.spread(Tables.documents(s, dir), dir, "documents", col("doc_id"))
         .select(col("doc_id"), TextFns.cleanTokens(col("text")).as("toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** The RAW-token twin of cleanDocs: full document row + `rtoks`
@@ -53,7 +53,7 @@ object TextPrep extends QueryModule {
       // per-row pass (quality gates, shingles, language-ID) inherits.
       Tables.spread(Tables.documents(s, dir), dir, "documents", col("doc_id"))
         .withColumn("rtoks", TextFns.rawTokens(col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** (tok, df, cf) is vocabulary-sized (≪ corpus) and consumed by four
@@ -61,7 +61,7 @@ object TextPrep extends QueryModule {
   private def tokenStatsCached(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"text.tokenStats:$dir") {
       tokenStatsOf(cleanDocs(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** q_clean_text: reference cleaning chain end-to-end. */
@@ -114,7 +114,7 @@ object TextPrep extends QueryModule {
   def dictionary(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"text.dictionary:$dir") {
       withTokenIds(tokenStats(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   def qDictionary(s: SparkSession, dir: String): DataFrame = dictionary(s, dir)

@@ -189,8 +189,8 @@ object TopicModeling extends QueryModule {
     graft.ModelCache.getOrElseUpdate(s, s"tm.umassparts:$dir") {
       val (single, pairs) =
         umassParts(s, dir, ldaTopTerms(s, dir).select("topic", "terms"))
-      (single.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-        pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      (single.cache(),
+        pairs.cache())
     }
 
   /** u_mass per topic over a substrate: mean over ALL ordered pairs

@@ -145,7 +145,7 @@ object Unigram extends QueryModule {
       TextPrep.cleanDocs(s, dir)
         .select(explode(col("toks")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cache()
     }
 
   /** One EM pass: expected piece counts + corpus ln L under θ.
