@@ -322,12 +322,11 @@ object Classification extends QueryModule {
          TRUE AS kernel_mae_ok, TRUE AS kernel_max_ok
        FROM e"""
 
-  /** Iteration budget of the modified-huber trainer (GRAFT_SGDH_ITERS;
-    * the reference caps at max_iter=10000 with tol early-stop — at α=1
-    * strong convexity the 1/(α(t+t₀)) schedule is already inside the
-    * optimum's noise floor long before 100). */
-  def sgdHuberIters: Int =
-    sys.env.get("GRAFT_SGDH_ITERS").map(_.toInt).getOrElse(100)
+  /** Iteration budget of the modified-huber trainer (the reference caps
+    * at max_iter=10000 with tol early-stop — at α=1 strong convexity the
+    * 1/(α(t+t₀)) schedule is already inside the optimum's noise floor
+    * long before 100; [[fitModifiedHuber]] takes any budget). */
+  val SgdHuberIters = 100
 
   /** sklearn's SGDClassifier(alpha=1, loss='modified_huber') L2 weight. */
   val SgdHuberAlpha = 1.0
@@ -351,7 +350,9 @@ object Classification extends QueryModule {
     * buy byte-stability across cluster sizes, at the cost of a
     * collect_list of the full training relation per iteration — not paid
     * here; the gate is rows-only and q_classify_audit anchors the
-    * confusion accounting, not the weight bytes. Returns (w, b). */
+    * confusion accounting, not the weight bytes. `iters` is the route to
+    * the reference's budget; q_classify_sgdh runs [[SgdHuberIters]].
+    * Returns (w, b). */
   private[graft] def fitModifiedHuber(tr: DataFrame, d: Int,
       iters: Int, alpha: Double): (Array[Double], Double) = {
     // partition count sized to the data (~100k rows per task): the loop
@@ -416,7 +417,7 @@ object Classification extends QueryModule {
       .head.getSeq[Double](0).size
     val tr = train.select(vector_to_array(col("features")).as("x"),
       (col("y") * 2.0 - 1.0).as("ys"), col("w"))
-    val (wv, b) = fitModifiedHuber(tr, d, sgdHuberIters, SgdHuberAlpha)
+    val (wv, b) = fitModifiedHuber(tr, d, SgdHuberIters, SgdHuberAlpha)
     val dec = SimilaritySearch.dot(vector_to_array(col("features")),
       array(wv.map(lit): _*)) + b
     metricsRow("sgd_modified_huber",
@@ -723,10 +724,8 @@ object Classification extends QueryModule {
   }
 
   /** Evaluation budget of the Bayesian sweep (reference: BayesSearchCV
-    * n_iter=30 — supervised_classifier.py:233; trimmed at test SF, raise
-    * via GRAFT_BAYES_ITERS on a cluster, same loop). */
-  def bayesIters: Int =
-    sys.env.get("GRAFT_BAYES_ITERS").map(_.toInt).getOrElse(14)
+    * n_iter=30 — supervised_classifier.py:233; trimmed at test SF). */
+  val BayesIters = 14
 
   /** q_bayes_sweep: seeded sequential-model-based hyper-parameter search
     * over (regParam, elasticNet) — the reference's ACTUAL optimizer is
@@ -757,8 +756,8 @@ object Classification extends QueryModule {
   /** q_bayes_audit: SMBO trajectory certificate — the hyper-parameter
     * search's bookkeeping, SQL-anchored (the q_cv_audit shape): the
     * oracle re-emits the full iteration sequence with its declared
-    * phase split (warm-start grid first, EI refinements after — both
-    * env-aware via GRAFT_BAYES_ITERS). Guarantees per row:
+    * phase split (warm-start grid first, EI refinements after).
+    * Guarantees per row:
     * `lattice_ok` — the emitted phase matches the declared split AND
     * the proposed point sits inside the reference's search space
     * (C ∈ [1e-5, 100] log-uniform, elasticNet ∈ [0, 1] —
@@ -792,7 +791,7 @@ object Classification extends QueryModule {
     s"""SELECT iter,
          CASE WHEN iter < $BayesInitN THEN 'init' ELSE 'ei' END AS phase,
          TRUE AS lattice_ok, TRUE AS argmax_ok
-       FROM (SELECT CAST(unnest(generate_series(0, ${bayesIters - 1})) AS INT) AS iter)"""
+       FROM (SELECT CAST(unnest(generate_series(0, ${BayesIters - 1})) AS INT) AS iter)"""
 
   private def buildBayesSweep(s: SparkSession, dir: String): DataFrame = {
     val (train, test) = dataset(s, dir)
@@ -816,7 +815,7 @@ object Classification extends QueryModule {
     val lo = Array(-5.0, 0.0); val hi = Array(2.0, 1.0)
     val norm = (p: Array[Double]) =>
       Array.tabulate(2)(i => (p(i) - lo(i)) / (hi(i) - lo(i)))
-    val traj = graft.functions.Smbo.maximize(init, candidates, bayesIters,
+    val traj = graft.functions.Smbo.maximize(init, candidates, BayesIters,
       norm, p => f1Of(math.pow(10.0, p(0)), p(1)))
     val best = traj.zipWithIndex
       .maxBy { case (e, i) => (e.value.getOrElse(-1.0), -i) }._2
@@ -827,10 +826,9 @@ object Classification extends QueryModule {
     }.toDF("iter", "reg_param", "elastic_net", "f1", "phase", "selected")
   }
 
-  /** k of the CV family: GRAFT_CV_K (default 5 at test SF; the reference
-    * runs StratifiedKFold(kfold=10) — set GRAFT_CV_K=10 to replay it,
-    * same code path). */
-  def cvK: Int = sys.env.get("GRAFT_CV_K").map(_.toInt).getOrElse(5)
+  /** k of the CV family at test SF (the reference runs
+    * StratifiedKFold(kfold=10); [[stratifiedFolds]] takes any k). */
+  val CvK = 5
 
   /** Deterministic StratifiedKFold twin (supervised_classifier.py:629:
     * StratifiedKFold(kfold, shuffle=True, random_state=42)): within each
@@ -843,7 +841,8 @@ object Classification extends QueryModule {
     * over (y, h, id), minus broadcast per-class offsets — the classes
     * are contiguous runs of the global order), never a single-partition
     * window: the 100 TB path. `df` must carry unique `vec_id` and the
-    * class column `y`. */
+    * class column `y`. `k` is the route to the reference's kfold=10; the
+    * CV queries run [[CvK]]. */
   private[graft] def stratifiedFolds(df: DataFrame, k: Int): DataFrame = {
     val ranked = graft.functions.Ranks.globalRowNumber(
       df.withColumn("h", md5(col("vec_id").cast("string"))),
@@ -872,7 +871,7 @@ object Classification extends QueryModule {
     * sees them either — the CV family and the zoo model the SAME corpus
     * composition. */
   def qCvTrain(s: SparkSession, dir: String): DataFrame = {
-    val k = cvK
+    val k = CvK
     val base = stratifiedFolds(
       Tables.embeddings(s, dir)
         .filter(!col("label").isin(ExcludedLabels: _*))
@@ -1020,7 +1019,7 @@ object Classification extends QueryModule {
       Tables.embeddings(s, dir)
         .filter(!col("label").isin(ExcludedLabels: _*))
         .select(col("vec_id"), when(col("label") < 5, 1.0).otherwise(0.0).as("y")),
-      cvK)
+      CvK)
       .groupBy("fold")
       .agg(count(lit(1)).as("n"), sum(col("y")).cast("long").as("npos"))
       .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
@@ -1046,7 +1045,7 @@ object Classification extends QueryModule {
            WHERE label NOT IN (${ExcludedLabels.mkString(", ")})),
        f AS (SELECT y,
                CAST((row_number() OVER (PARTITION BY y ORDER BY h, vec_id) - 1)
-                 % $cvK AS INT) AS fold
+                 % $CvK AS INT) AS fold
              FROM e)
        SELECT fold, CAST(count(*) AS BIGINT) AS n_fold,
          CAST(sum(y) AS BIGINT) AS n_fold_pos,

@@ -1080,6 +1080,32 @@ object Dedup extends QueryModule {
     parent.keys.toSeq.map(k => k -> find(k))
   }
 
+  /** Edge count up to which [[components]] runs [[ccLocal]] on the
+    * driver (the KeywordsEdgeLimit convention). */
+  val CcLocalLimit: Int = 1 << 20
+
+  /** Connected components of an (a, b) edge list as (id, label = the
+    * component's minimum id) — the ONE size gate between the two
+    * implementations: a take(localLimit + 1) probe collects a bounded
+    * edge list for [[ccLocal]], and a larger one runs the distributed
+    * [[connectedComponents]]. Union-by-min gives both the identical
+    * min-label fixpoint. Endpoints may be INT or BIGINT; local labels
+    * are BIGINT. */
+  def components(edges: DataFrame, localLimit: Int = CcLocalLimit): DataFrame = {
+    val head = edges.select("a", "b").take(localLimit + 1)
+    if (head.length <= localLimit) {
+      def id(v: Any): Long = v match {
+        case l: java.lang.Long => l.longValue
+        case i: java.lang.Integer => i.longValue
+        case other => throw new IllegalArgumentException(
+          s"components: unsupported endpoint type ${other.getClass}")
+      }
+      val s = edges.sparkSession
+      import s.implicits._
+      ccLocal(head.toSeq.map(r => (id(r.get(0)), id(r.get(1))))).toDF("id", "label")
+    } else connectedComponents(edges)
+  }
+
   /** q_dedup_clusters: duplicate CLUSTERS from the exact-Jaccard pair
     * graph — the operator that turns pairwise near-dup hits into a
     * per-doc cluster assignment (cluster id = min doc_id reachable).
@@ -1285,8 +1311,8 @@ object Dedup extends QueryModule {
     * small (e.g. a vocabulary co-occurrence graph: node count is bounded
     * by the vocabulary, not the corpus). Callers collect the edge list
     * with a take(limit+1) probe and fall back to the distributed loop
-    * above the limit (the q_keywords pattern; KeywordsLocalSpec pins the
-    * two paths equal). */
+    * above the limit (the q_keywords pattern; ScaleOpsSpec pins the two
+    * paths equal). */
   def pageRankLocal(edges: Seq[(String, String)], iters: Int = 10): Seq[(String, Double)] = {
     val sym = edges ++ edges.map { case (a, b) => (b, a) }
     val deg: Map[String, Long] =

@@ -427,7 +427,7 @@ object Evaluation extends QueryModule {
         .filter(!col("label").isin(Classification.ExcludedLabels: _*))
         .select(col("vec_id"), col("label"),
           when(col("label") < 5, 1.0).otherwise(0.0).as("y")),
-      Classification.cvK)
+      Classification.CvK)
       .groupBy("fold")
       .agg(count(lit(1)).as("n"),
         countDistinct(col("label")).as("n_classes"),
@@ -441,7 +441,7 @@ object Evaluation extends QueryModule {
            WHERE label NOT IN (${Classification.ExcludedLabels.mkString(", ")})),
        f AS (SELECT label, y,
                CAST((row_number() OVER (PARTITION BY y ORDER BY h, vec_id) - 1)
-                 % ${Classification.cvK} AS INT) AS fold
+                 % ${Classification.CvK} AS INT) AS fold
              FROM e)
        SELECT fold, count(*) AS n, count(DISTINCT label) AS n_classes,
          CAST(sum(y) AS BIGINT) AS n_class0

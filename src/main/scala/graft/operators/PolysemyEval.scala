@@ -189,9 +189,7 @@ object PolysemyEval extends QueryModule {
   /** Total evaluation budget of the polysemy Bayesian search (reference:
     * forest_minimize n_calls — polysemous_words.py:273; the default adds
     * 8 EI refinements to the 18-point grid warm start). */
-  def polysemyBayesIters: Int =
-    sys.env.get("GRAFT_POLYSEMY_BAYES_ITERS").map(_.toInt)
-      .getOrElse(ParamGrid.size + 8)
+  val PolysemyBayesIters: Int = ParamGrid.size + 8
 
   /** q_polysemy_bayes: the reference's ACTUAL polysemy-threshold
     * optimizer — skopt model-based minimize over (MIN_DOC_LEN,
@@ -230,8 +228,8 @@ object PolysemyEval extends QueryModule {
   /** q_polysemy_bayes_audit: the forest_minimize trajectory's
     * bookkeeping certificate (twin of Classification.qBayesAudit): the
     * oracle re-emits the iteration sequence with the declared warm-start
-    * /EI split (grid size + GRAFT_POLYSEMY_BAYES_ITERS, both
-    * env-aware); `lattice_ok` pins each proposal inside the reference's
+    * /EI split (the grid size, then EI up to [[PolysemyBayesIters]]);
+    * `lattice_ok` pins each proposal inside the reference's
     * space (min_prob ∈ [0.005, 0.15], min_topics ∈ [1, 4],
     * MIN_DOC_LEN ∈ [0, 20] — polysemous_words.py:48-57 at
     * corpus-appropriate bounds) with the right phase label; `argmax_ok`
@@ -262,7 +260,7 @@ object PolysemyEval extends QueryModule {
     s"""SELECT iter,
          CASE WHEN iter < ${ParamGrid.size} THEN 'init' ELSE 'ei' END AS phase,
          TRUE AS lattice_ok, TRUE AS argmax_ok
-       FROM (SELECT CAST(unnest(generate_series(0, ${polysemyBayesIters - 1})) AS INT) AS iter)"""
+       FROM (SELECT CAST(unnest(generate_series(0, ${PolysemyBayesIters - 1})) AS INT) AS iter)"""
 
   private def buildPolysemyBayes(s: SparkSession, dir: String): DataFrame = {
     def f1Of(rows: Array[org.apache.spark.sql.Row],
@@ -287,7 +285,7 @@ object PolysemyEval extends QueryModule {
       f1Of(scoreCombos(s, dir, Seq(combo)).collect(), combo)
     }
     val traj = graft.functions.Smbo.maximizeFrom(
-      pre, candidates, polysemyBayesIters, norm, f)
+      pre, candidates, PolysemyBayesIters, norm, f)
     val best = traj.zipWithIndex
       .maxBy { case (e, i) => (e.value.getOrElse(-1.0), -i) }._2
     import s.implicits._

@@ -855,24 +855,14 @@ object Relational extends QueryModule {
     * node): same semantics, entirely different algorithm, which is
     * exactly what the gate is for.
     *
-    * Probe-gated (the ccFoldBatch/q_keywords take(limit+1) convention):
-    * the co-purchase edge set is DIMENSION-sized (the fact table was left
-    * behind at the basket aggregate), so when the probe proves it bounded
-    * the min-root union-find runs driver-side — at sf0.1 a distributed
-    * loop was ~10 sequential driver-bound execs over a 1,880-node graph.
-    * Above the limit the distributed hook/shortcut loop
-    * [[Dedup.connectedComponents]] runs, exactly as in ccFoldBatch's
-    * quotient fold. Union-by-min yields the identical min-label fixpoint. */
+    * Size-gated through [[Dedup.components]], as is ccFoldBatch's
+    * quotient fold: the co-purchase edge set is DIMENSION-sized (the fact
+    * table was left behind at the basket aggregate), so the min-root
+    * union-find usually runs driver-side — at sf0.1 a distributed loop
+    * was ~10 sequential driver-bound execs over a 1,880-node graph. */
   def qConnectedComponents(s: SparkSession, dir: String): DataFrame = {
-    val edges = copurchasePairs(s, dir).select("a", "b")
-    val eHead = edges.take(CcIncrLocalLimit + 1)
-    val labels =
-      if (eHead.length <= CcIncrLocalLimit) {
-        import s.implicits._
-        Dedup.ccLocal(eHead.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-          .toDF("part", "component")
-      } else Dedup.connectedComponents(edges)
-        .select(col("id").as("part"), col("label").as("component"))
+    val labels = Dedup.components(copurchasePairs(s, dir).select("a", "b"))
+      .select(col("id").as("part"), col("label").as("component"))
     val sizes = labels.groupBy("component").agg(count(lit(1)).as("comp_size"))
     labels.join(sizes, Seq("component"))
       .select(col("part"), col("component"), col("comp_size"))
@@ -901,10 +891,6 @@ object Relational extends QueryModule {
     * cutoff are the accumulated "state", the rest are the day's delta
     * (~80/20 on the driver calendar). */
   val CcIncrCutoff = "2000-06-01"
-
-  /** Local-vs-distributed threshold for the quotient CC (the
-    * KeywordsEdgeLimit convention). */
-  val CcIncrLocalLimit: Int = 1 << 20
 
   /** q_cc_incremental: INCREMENTAL connected-components maintenance —
     * the pattern a 100 TB graph actually runs daily (recomputing CC over
@@ -1000,16 +986,13 @@ object Relational extends QueryModule {
     * recompute), `deltaEdges` (a, b) the batch's new edges; returns the
     * merged (id, label) state. QUOTIENT contraction: map each Δ endpoint
     * to its base component label (new nodes map to themselves), run CC
-    * over the |Δ|-sized quotient only (locally under the probe limit —
-    * the q_keywords take(limit+1) pattern; union-by-min gives the
-    * identical min labels — distributed above it), then one join re-maps
-    * the base labels. Quotient node ids are base labels (each = the MIN
-    * of its base component) or new node ids, so the quotient min IS the
-    * merged component's global min. StreamingSpec folds edge
-    * micro-batches through this and pins equality with the one-shot
-    * loop. */
+    * over the |Δ|-sized quotient only (through the [[Dedup.components]]
+    * size gate), then one join re-maps the base labels. Quotient node
+    * ids are base labels (each = the MIN of its base component) or new
+    * node ids, so the quotient min IS the merged component's global min.
+    * StreamingSpec folds edge micro-batches through this and pins
+    * equality with the one-shot loop. */
   def ccFoldBatch(prevLabels: DataFrame, deltaEdges: DataFrame): DataFrame = {
-    val s = deltaEdges.sparkSession
     val quotient = deltaEdges
       .join(prevLabels.select(col("id").as("a"), col("label").as("la")),
         Seq("a"), "left_outer")
@@ -1018,14 +1001,8 @@ object Relational extends QueryModule {
       .select(coalesce(col("la"), col("a")).as("a"),
         coalesce(col("lb"), col("b")).as("b"))
       .filter(col("a") =!= col("b"))
-    val qHead = quotient.take(CcIncrLocalLimit + 1)
-    val qLabels =
-      if (qHead.length <= CcIncrLocalLimit) {
-        import s.implicits._
-        Dedup.ccLocal(qHead.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-          .toDF("qid", "qlabel")
-      } else Dedup.connectedComponents(quotient)
-        .select(col("id").as("qid"), col("label").as("qlabel"))
+    val qLabels = Dedup.components(quotient)
+      .select(col("id").as("qid"), col("label").as("qlabel"))
     // final labels: base nodes re-map through their (possibly merged)
     // base label; Δ-only nodes enter as themselves
     val newNodes = deltaEdges.select(col("a").as("id"))

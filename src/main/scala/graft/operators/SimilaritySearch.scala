@@ -395,14 +395,15 @@ object SimilaritySearch extends QueryModule {
     (z.toDouble / 9.223372036854776e18)
   }
 
-  /** LSH family sizing. Defaults suit the test corpus; both are
-    * env-overridable for real deployments. Sizing rule: each table splits
-    * the corpus into 2^planes sign-buckets, so expected bucket occupancy is
-    * N / 2^planes — pick planes ≈ log₂(N) − log₂(target candidates per
-    * probe) (e.g. N = 10⁹, ~1k-vector buckets → planes ≈ 20), then add
-    * tables until recall is met (recall rises ~ 1−(1−p^planes)^tables). */
-  val NTables: Int = sys.env.getOrElse("GRAFT_LSH_TABLES", "8").toInt
-  val NPlanes: Int = sys.env.getOrElse("GRAFT_LSH_PLANES", "6").toInt
+  /** LSH family sizing. The defaults suit the test corpus; a caller
+    * sizing for a larger one passes its own counts to [[signBuckets]].
+    * Sizing rule: each table splits the corpus into 2^planes sign-buckets,
+    * so expected bucket occupancy is N / 2^planes — pick planes ≈
+    * log₂(N) − log₂(target candidates per probe) (e.g. N = 10⁹,
+    * ~1k-vector buckets → planes ≈ 20), then add tables until recall is
+    * met (recall rises ~ 1−(1−p^planes)^tables). */
+  val NTables = 8
+  val NPlanes = 6
 
   /** Expected vectors per LSH bucket the posting targets. With a FIXED
     * plane count, bucket load grows ∝ n and candidate PAIRS grow ∝ n² —
@@ -463,7 +464,7 @@ object SimilaritySearch extends QueryModule {
     val planes = graft.ModelCache.getOrElseUpdate(s, s"ann.planes:$dir") {
       adaptivePlanes(Tables.embeddings(s, dir).count())
     }
-    graft.ModelCache.getOrElseUpdate(s, s"ann.buckets:$dir:$NTables:$planes") {
+    graft.ModelCache.getOrElseUpdate(s, s"ann.buckets:$dir") {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       signBuckets(e, "vec_id", nPlanes = planes)
@@ -1614,9 +1615,8 @@ object SimilaritySearch extends QueryModule {
          round(1.0 / min(rank), 6) AS rr
        FROM ranked WHERE nb_label = q_label GROUP BY q_id, q_label"""
 
-  /** Cluster count of the first-class k-means (GRAFT_KMEANS_K; the audit
-    * oracle interpolates the same value, the hdpT pattern). */
-  def kmK: Int = sys.env.get("GRAFT_KMEANS_K").map(_.toInt).getOrElse(8)
+  /** Cluster count of the first-class k-means. */
+  val KmK = 8
   /** Lloyd iteration budget (fixed — the trajectory certificate checks
     * descent over exactly these steps). */
   val KmIters = 10
@@ -1657,8 +1657,8 @@ object SimilaritySearch extends QueryModule {
     * assignment-inertia trajectory, final per-cluster relation). */
   private def kmeansRun(s: SparkSession, dir: String)
       : (Array[Array[Double]], Seq[Double], DataFrame) =
-    graft.ModelCache.getOrElseUpdate(s, s"ss.kmeans:$dir:$kmK") {
-      val k = kmK
+    graft.ModelCache.getOrElseUpdate(s, s"ss.kmeans:$dir") {
+      val k = KmK
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
         .cache()
@@ -1944,7 +1944,7 @@ object SimilaritySearch extends QueryModule {
           element_at(col("fd"), (col("cf") + 1).cast("int"))) > 1e-6)
       .count()
     import s.implicits._
-    Seq((nPoints, kmK.toLong, accountedOk, monotoneOk, mism == 0L))
+    Seq((nPoints, KmK.toLong, accountedOk, monotoneOk, mism == 0L))
       .toDF("n_points", "k", "accounted_ok", "monotone_ok", "assign_ok")
   }
 
@@ -2050,7 +2050,7 @@ object SimilaritySearch extends QueryModule {
     * scipy id discipline: step s merges ids < k+s and creates k+s. */
   def qHacAudit(s: SparkSession, dir: String): DataFrame = {
     val m = qHac(s, dir).orderBy("step").collect()
-    val k = kmK
+    val k = KmK
     val nPoints = Tables.embeddings(s, dir).count()
     val leafSizes = kmeansRun(s, dir)._3.collect()
       .map(r => r.getAs[Int]("cluster") -> r.getAs[Long]("n")).toMap
@@ -2076,14 +2076,14 @@ object SimilaritySearch extends QueryModule {
   }
 
   private lazy val qHacAuditSql =
-    s"""SELECT CAST(${kmK - 1} AS BIGINT) AS n_merges,
+    s"""SELECT CAST(${KmK - 1} AS BIGINT) AS n_merges,
          CAST(count(*) AS BIGINT) AS n_points,
          TRUE AS monotone_ok, TRUE AS sizes_ok, TRUE AS ids_ok
        FROM embeddings"""
 
   private lazy val qKmeansAuditSql =
     s"""SELECT CAST(count(*) AS BIGINT) AS n_points,
-         CAST($kmK AS BIGINT) AS k,
+         CAST($KmK AS BIGINT) AS k,
          TRUE AS accounted_ok, TRUE AS monotone_ok, TRUE AS assign_ok
        FROM embeddings"""
 

@@ -51,9 +51,11 @@ object TopicModeling extends QueryModule {
       (bow, cvModel.vocabulary)
     }
 
-  def fitLda(bow: DataFrame, k: Int, maxIter: Int = 20): LDAModel =
-    graft.ModelCache.getOrElseUpdate(bow.sparkSession,
-      s"tm.lda:${System.identityHashCode(bow)}:$k:$maxIter") {
+  /** The seeded online-LDA fit over [[corpus]]`(s, dir)` — memoized per
+    * (dir, k, maxIter). */
+  def fitLda(s: SparkSession, dir: String, k: Int, maxIter: Int = 20): LDAModel =
+    graft.ModelCache.getOrElseUpdate(s, s"tm.lda:$dir:$k:$maxIter") {
+      val (bow, _) = corpus(s, dir)
       new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
         .setOptimizer("online").setFeaturesCol("features")
         .fit(bow)
@@ -61,8 +63,8 @@ object TopicModeling extends QueryModule {
 
   /** Topic top-terms in array shape (internal: coherence feeds off this). */
   def ldaTopTerms(s: SparkSession, dir: String): DataFrame = {
-    val (bow, vocab) = corpus(s, dir)
-    val model = fitLda(bow, DefaultK)
+    val (_, vocab) = corpus(s, dir)
+    val model = fitLda(s, dir, DefaultK)
     val vocabLit = array(vocab.map(lit): _*)
     model.describeTopics(10)
       .select(col("topic"),
@@ -87,7 +89,7 @@ object TopicModeling extends QueryModule {
   def docTopics(s: SparkSession, dir: String, k: Int = DefaultK): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"tm.docTopics:$dir:$k") {
       val (bow, _) = corpus(s, dir)
-      val model = fitLda(bow, k)
+      val model = fitLda(s, dir, k)
       model.transform(bow)
         .select(col("doc_id"), vector_to_array(col("topicDistribution")).as("dist"))
         .cache()
@@ -476,7 +478,7 @@ object TopicModeling extends QueryModule {
   /** q_perplexity: bound-based log-perplexity (gensim log_perplexity twin). */
   def qPerplexity(s: SparkSession, dir: String): DataFrame = {
     val (bow, _) = corpus(s, dir)
-    val model = fitLda(bow, DefaultK)
+    val model = fitLda(s, dir, DefaultK)
     val lp = model.logPerplexity(bow)
     val ll = model.logLikelihood(bow)
     bow.sparkSession.range(1).select(
@@ -498,12 +500,9 @@ object TopicModeling extends QueryModule {
     * operator keeps the complementary sweep-and-score path
     * (coherence_log_perplexity.py sweeps k and scores both metrics),
     * which is also how HDP results are validated in practice. */
-  /** The sweep grid (env-aware; the reference sweeps k=10..990 step 10 —
-    * webisalod_lda.py:55-60 — set GRAFT_MODEL_KS=10,20,...,990 to replay
-    * it; the audit oracle interpolates the SAME grid, the hdpT rule). */
-  def modelKs: Seq[Int] = sys.env.get("GRAFT_MODEL_KS")
-    .map(_.split(",").map(_.trim.toInt).toSeq)
-    .getOrElse(Seq(5, 10, 15, 20, 25, 30))
+  /** The sweep grid (the reference sweeps k=10..990 step 10 —
+    * webisalod_lda.py:55-60; [[qModelSelectAt]] replays any slice of it). */
+  val ModelKs: Seq[Int] = Seq(5, 10, 15, 20, 25, 30)
 
   /** The collected (k, mean_umass, log_perplexity) sweep — memoized:
     * q_model_select and its audit both consume it (each LDA fit is
@@ -517,11 +516,11 @@ object TopicModeling extends QueryModule {
   def qModelSelect(s: SparkSession, dir: String): DataFrame =
     selectFrame(s, modelSelectScores(s, dir))
 
-  /** [[qModelSelect]] over an EXPLICIT k grid (the qHdpAt seam pattern):
-    * the thesis-scale replay spec drives a slice of the reference's
-    * 10..990 grid through the identical code path without the env var.
-    * Unmemoized — the caller owns the grid, so the default-grid cache
-    * must not be poisoned by it. */
+  /** [[qModelSelect]] over an EXPLICIT k grid — the route to the
+    * reference's 10..990 sweep through the identical code path (the
+    * thesis-scale replay spec drives a slice of it). Unmemoized — the
+    * caller owns the grid, so the default-grid cache must not be
+    * poisoned by it. */
   private[graft] def qModelSelectAt(s: SparkSession, dir: String,
       ks: Seq[Int]): DataFrame =
     selectFrame(s, modelSelectScoresUncached(s, dir, ks))
@@ -537,7 +536,7 @@ object TopicModeling extends QueryModule {
   }
 
   private def modelSelectScoresUncached(s: SparkSession, dir: String,
-      ks: Seq[Int] = modelKs): Seq[(Int, Double, Double)] = {
+      ks: Seq[Int] = ModelKs): Seq[(Int, Double, Double)] = {
     val (bow, vocab) = corpus(s, dir)
     val vocabLit = array(vocab.map(lit): _*)
     // the sweep is embarrassingly parallel ACROSS k (each fit is an
@@ -555,7 +554,7 @@ object TopicModeling extends QueryModule {
       val par = ks.par
       par.tasksupport = new scala.collection.parallel.ForkJoinTaskSupport(pool)
       par.map { k =>
-        val model = fitLda(bow, k, maxIter = 10)
+        val model = fitLda(s, dir, k, maxIter = 10)
         val tops = model.describeTopics(10).select(col("topic"),
           transform(col("termIndices"), i => element_at(vocabLit, i + 1)).as("terms"))
         val mean = umassCoherence(s, dir, tops)
@@ -568,8 +567,7 @@ object TopicModeling extends QueryModule {
 
   /** q_model_select_audit: sweep accounting certificate — the last
     * rows-only topic-model family gains its SQL anchor. The oracle
-    * re-emits the declared k grid (env-aware, so the gate holds under
-    * GRAFT_MODEL_KS); guarantees asserted Spark-side per row:
+    * re-emits the declared k grid; guarantees asserted Spark-side per row:
     * `umass_range_ok` — the k's mean u_mass lands in the smoothing-
     * implied [−ln D, ln 2] envelope (D = the INDEPENDENTLY counted
     * cleaned corpus the df denominators come from; the q_coherence_audit
@@ -597,7 +595,7 @@ object TopicModeling extends QueryModule {
   }
 
   private lazy val qModelSelectAuditSql =
-    s"""SELECT CAST(unnest([${modelKs.mkString(", ")}]) AS INT) AS k,
+    s"""SELECT CAST(unnest([${ModelKs.mkString(", ")}]) AS INT) AS k,
          TRUE AS umass_range_ok, TRUE AS ppl_ok, TRUE AS argmax_ok"""
 
   // ---------------------------------------------------------------- HDP
@@ -605,14 +603,8 @@ object TopicModeling extends QueryModule {
   /** Corpus-level concentration γ (gensim HdpModel gamma default). */
   val HdpGamma = 1.0
   /** Corpus truncation T at test SF (reference uses T=1000 at wiki scale —
-    * wiki_hdp.py:19; set GRAFT_HDP_T=1000 on a cluster, same code path). */
+    * wiki_hdp.py:19; [[qHdpAt]] runs any T through the same code path). */
   val HdpTruncation = 20
-  /** Effective truncation: the GRAFT_HDP_T override when set, else
-    * [[HdpTruncation]] — the ONE value qHdp, qHdpAudit AND the audit's
-    * oracle SQL all interpolate, so the hash gate holds under the env
-    * override too (the qCvAuditSql/$cvK pattern). */
-  def hdpT: Int =
-    sys.env.get("GRAFT_HDP_T").map(_.toInt).getOrElse(HdpTruncation)
   /** Keep topic k iff its expected corpus weight E[β_k] ≥ this. */
   val HdpBetaThreshold = 0.01
 
@@ -638,11 +630,11 @@ object TopicModeling extends QueryModule {
     * the driver (tail sums Σ_{j>k} S_j are suffix sums over those T
     * values), and the emitted relation is T rows. Rows-only gate
     * (iterative ML is not SQL-expressible); seeded, so deterministic. */
-  def qHdp(s: SparkSession, dir: String): DataFrame = qHdpAt(s, dir, hdpT)
+  def qHdp(s: SparkSession, dir: String): DataFrame = qHdpAt(s, dir, HdpTruncation)
 
-  /** [[qHdp]] at an EXPLICIT truncation — the T-generic core the env
-    * override routes through (Round13Spec runs it at T=100 to prove the
-    * thesis-scale path: same math, driver state strictly T-bounded). */
+  /** [[qHdp]] at an EXPLICIT truncation — the route to thesis scale
+    * (Round13Spec runs it at T=100 to prove that path: same math, driver
+    * state strictly T-bounded). */
   private[graft] def qHdpAt(s: SparkSession, dir: String, t: Int): DataFrame = {
     import s.implicits._
     hdpSticks(s, dir, t).map { case (stick, topicId, a, b, beta, _) =>
@@ -689,7 +681,7 @@ object TopicModeling extends QueryModule {
     * greedy ordering); E[β] a sub-simplex (β_k ≥ 0, Σβ + remainder = 1);
     * kept ⇔ β ≥ τ. */
   def qHdpAudit(s: SparkSession, dir: String): DataFrame =
-    qHdpAuditAt(s, dir, hdpT)
+    qHdpAuditAt(s, dir, HdpTruncation)
 
   /** [[qHdpAudit]] at an explicit truncation (see [[qHdpAt]]). */
   private[graft] def qHdpAuditAt(s: SparkSession, dir: String, tr: Int): DataFrame = {
@@ -729,7 +721,7 @@ object TopicModeling extends QueryModule {
   private lazy val qHdpAuditSql =
     s"""WITH bow AS (SELECT DISTINCT doc_id FROM (${TextPrep.qDoc2bowSql}))
        SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST($hdpT AS BIGINT) AS n_sticks,
+         CAST($HdpTruncation AS BIGINT) AS n_sticks,
          TRUE AS mass_ok, TRUE AS recursion_ok, TRUE AS order_ok,
          TRUE AS simplex_ok, TRUE AS kept_ok
        FROM bow"""
@@ -782,7 +774,7 @@ object TopicModeling extends QueryModule {
     * emits NaN/0 and fails). */
   def qPerplexityAudit(s: SparkSession, dir: String): DataFrame = {
     val (bow, _) = corpus(s, dir)
-    val model = fitLda(bow, DefaultK)
+    val model = fitLda(s, dir, DefaultK)
     val lp = model.logPerplexity(bow)
     val ll = model.logLikelihood(bow)
     val agg = bow.agg(count(lit(1)).as("n_docs"),

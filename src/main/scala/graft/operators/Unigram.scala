@@ -44,10 +44,8 @@ object Unigram extends QueryModule {
   val MaxPieceLen = 6
   /** Seed vocabulary size before pruning (top substrings by weighted freq). */
   val SeedSize = 240
-  /** Final vocabulary size (GRAFT_UNIGRAM_VOCAB replays a cluster-scale
-    * target through the same code path). */
-  def finalVocab: Int =
-    sys.env.get("GRAFT_UNIGRAM_VOCAB").map(_.toInt).getOrElse(120)
+  /** Final vocabulary size. */
+  val FinalVocab = 120
   /** EM passes before / after the prune cut. */
   val EmItersPre = 4
   val EmItersPost = 2
@@ -197,7 +195,7 @@ object Unigram extends QueryModule {
   /** Train the unigram LM. Returns (final θ, ln-likelihood trajectory). */
   private[graft] def train(s: SparkSession, dir: String)
       : (Map[String, Double], Seq[Double]) =
-    graft.ModelCache.getOrElseUpdate(s, s"unigram.model:$dir:$finalVocab") {
+    graft.ModelCache.getOrElseUpdate(s, s"unigram.model:$dir") {
       val words = wordCounts(s, dir)
       // seed: all substrings ≤ MaxPieceLen weighted by word freq (with
       // within-word multiplicity), top SeedSize + every single char
@@ -220,12 +218,12 @@ object Unigram extends QueryModule {
         val (t2, ll) = emPass(words, theta)
         theta = withCharFloor(t2, charSet); traj += ll
       }
-      // prune: θ-rank cut to finalVocab, single chars always protected
+      // prune: θ-rank cut to FinalVocab, single chars always protected
       val charsSet = theta.keySet.filter(_.length == 1)
       val kept = charsSet ++
         theta.filter(_._1.length > 1).toSeq
           .sortBy { case (p, t) => (-t, p) }
-          .take(math.max(0, finalVocab - charsSet.size))
+          .take(math.max(0, FinalVocab - charsSet.size))
           .map(_._1)
       val keptTotal = theta.filter(kv => kept(kv._1)).toSeq
         .sortBy(_._1).map(_._2).sum

@@ -14,8 +14,10 @@ import scala.jdk.CollectionConverters._
 /** The substrate cache: session scoping (a value cached under one
   * SparkSession is never served to another session in the same JVM, and
   * eviction drops exactly the owner's entries), one build per key, the
-  * build-cost ledger, the checkpoint rule and its release, and a source
-  * scan that keeps the storage decision in ModelCache. */
+  * build-cost ledger, the checkpoint rule and its release, a source
+  * scan that keeps the storage decision in ModelCache, and keys that
+  * depend only on (session, dir): no operator reads the environment and
+  * no key carries an identity hash. */
 class ModelCacheSpec extends SparkSpec {
 
   private def token(s: org.apache.spark.sql.SparkSession) = ModelCache.sessionToken(s)
@@ -184,14 +186,15 @@ class ModelCacheSpec extends SparkSpec {
     assert(df.count() === 10)
   }
 
+  private def scalaFiles(d: File): Seq[File] = Option(d.listFiles).toSeq.flatten.flatMap { f =>
+    if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+  }
+  private def text(f: File): String = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.mkString finally src.close()
+  }
+
   test("source scan: ModelCache alone decides substrate storage") {
-    def scalaFiles(d: File): Seq[File] = Option(d.listFiles).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    }
-    def text(f: File): String = {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.mkString finally src.close()
-    }
     val ops = scalaFiles(new File("src/main/scala/graft/operators"))
     assert(ops.size > 10)
     val named = ops.filter(f => "\\b(StorageLevel|Materialize)\\b".r.findFirstIn(text(f)).isDefined)
@@ -199,5 +202,22 @@ class ModelCacheSpec extends SparkSpec {
     val dirReaders = scalaFiles(new File("src/main/scala"))
       .filter(text(_).contains("getCheckpointDir")).map(_.getName)
     assert(dirReaders === Seq("ModelCache.scala"))
+  }
+
+  test("source scan: operators read no environment; no main file uses identity hashes") {
+    val ops = scalaFiles(new File("src/main/scala/graft/operators"))
+    assert(ops.size > 10)
+    val envReaders = ops.filter(f => "sys\\.env|System\\.getenv".r.findFirstIn(text(f)).isDefined)
+    assert(envReaders.isEmpty, s"operators reading the environment: ${envReaders.map(_.getName)}")
+    val idHashers = scalaFiles(new File("src/main/scala"))
+      .filter(text(_).contains("identityHashCode")).map(_.getName)
+    assert(idHashers.isEmpty, s"main files using identityHashCode: $idHashers")
+  }
+
+  test("LDA fits are keyed by their corpus dir") {
+    graft.operators.TopicModeling.qLdaTopics(spark, sfDir)
+    val keys = ModelCache.buildCosts(spark).keys.filter(_.startsWith("tm.lda:"))
+    assert(keys.nonEmpty)
+    assert(keys.forall(_.startsWith(s"tm.lda:$sfDir:")), keys)
   }
 }

@@ -74,7 +74,7 @@ class Round10Spec extends SparkSpec {
   test("bayes sweep matches or beats the plain grid argmax, deterministically") {
     import graft.operators.Classification
     val bayes = Classification.qBayesSweep(spark, sfDir).collect()
-    assert(bayes.length === Classification.bayesIters)
+    assert(bayes.length === Classification.BayesIters)
     val bayesBest = bayes.flatMap(r =>
       Option(r.getAs[java.lang.Double]("f1")).map(_.doubleValue)).max
     val gridBest = Classification.qClfParamSweep(spark, sfDir).collect()
@@ -98,7 +98,7 @@ class Round10Spec extends SparkSpec {
   test("polysemy bayes search matches or beats its grid, deterministically") {
     import graft.operators.PolysemyEval
     val traj = PolysemyEval.qPolysemyBayes(spark, sfDir).collect()
-    assert(traj.length === PolysemyEval.polysemyBayesIters)
+    assert(traj.length === PolysemyEval.PolysemyBayesIters)
     assert(traj.count(_.getAs[String]("phase") == "init") === PolysemyEval.ParamGrid.size)
     def bestOf(rows: Array[org.apache.spark.sql.Row]) = rows.flatMap(r =>
       Option(r.getAs[java.lang.Double]("f1")).map(_.doubleValue)).max

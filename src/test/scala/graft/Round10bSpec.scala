@@ -247,7 +247,7 @@ class Round10bSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-models").toString
     // LDA: the reference persists the trained topic model between stages
     val (bow, _) = graft.operators.TopicModeling.corpus(spark, sfDir)
-    val lda = graft.operators.TopicModeling.fitLda(bow, k = 3, maxIter = 3)
+    val lda = graft.operators.TopicModeling.fitLda(spark, sfDir, k = 3, maxIter = 3)
     lda.write.overwrite().save(s"$tmp/lda")
     val lda2 = LocalLDAModel.load(s"$tmp/lda")
     val before = lda.transform(bow).select("doc_id", "topicDistribution")

@@ -126,7 +126,7 @@ class Round12Spec extends SparkSpec {
 
   test("q_cv_audit carries the stratification certificate") {
     val rows = graft.operators.Classification.qCvAudit(spark, sfDir).collect()
-    assert(rows.length == graft.operators.Classification.cvK)
+    assert(rows.length == graft.operators.Classification.CvK)
     rows.foreach { r =>
       assert(r.getAs[Boolean]("cells_ok") && r.getAs[Boolean]("gold_ok") &&
         r.getAs[Boolean]("strat_ok"))

@@ -142,7 +142,7 @@ class Round13Spec extends SparkSpec {
   test("q_model_select_audit certifies the sweep grid, score ranges and the argmax") {
     import graft.operators.TopicModeling
     val rows = TopicModeling.qModelSelectAudit(spark, sfDir).collect()
-    assert(rows.map(_.getAs[Int]("k")).sorted.toSeq == TopicModeling.modelKs.sorted)
+    assert(rows.map(_.getAs[Int]("k")).sorted.toSeq == TopicModeling.ModelKs.sorted)
     rows.foreach { r =>
       for (c <- Seq("umass_range_ok", "ppl_ok", "argmax_ok"))
         assert(r.getAs[Boolean](c), s"$c failed at k=${r.getAs[Int]("k")}")
@@ -174,7 +174,7 @@ class Round13Spec extends SparkSpec {
   test("q_polysemy_bayes_audit certifies the trajectory's phase split, lattice and argmax") {
     import graft.operators.PolysemyEval
     val rows = PolysemyEval.qPolysemyBayesAudit(spark, sfDir).collect()
-    assert(rows.length == PolysemyEval.polysemyBayesIters)
+    assert(rows.length == PolysemyEval.PolysemyBayesIters)
     assert(rows.count(_.getAs[String]("phase") == "init") ==
       PolysemyEval.ParamGrid.size)
     rows.foreach { r =>
@@ -350,11 +350,11 @@ class Round13Spec extends SparkSpec {
     folds.foreach(r => assert(r.getAs[Long]("n_classes") == 8L))
   }
 
-  test("HDP at thesis-scale truncation T=100: the GRAFT_HDP_T code path " +
+  test("HDP at thesis-scale truncation T=100: the qHdpAt code path " +
     "keeps the mass identity, telescope and simplex, driver state T-bounded") {
     import graft.operators.TopicModeling
-    // qHdpAt IS the env path: qHdp(s, dir) = qHdpAt(s, dir, hdpT), and
-    // hdpT only selects the integer — this runs the same core at the
+    // qHdpAt IS the thesis-scale route: qHdp(s, dir) =
+    // qHdpAt(s, dir, HdpTruncation) — this runs the same core at the
     // scale the scaladoc promises (wiki_hdp.py uses T=1000; 100 here
     // keeps the extra LDA fit test-sized while exercising T ≫ k)
     val t = 100

@@ -50,6 +50,46 @@ class Round6Spec extends SparkSpec {
     assert(Dedup.connectedComponents(empty).count() === 0)
   }
 
+  /** (id, label) rows as BIGINT pairs, whatever the column types. */
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.select(col("id").cast("long"), col("label").cast("long"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("components: both sides of the size gate give the min-id labels") {
+    import spark.implicits._
+    // chain 1-2-3-4-5 plus the disjoint pair {10, 11}
+    val pairs = Seq((2, 1), (2, 3), (4, 3), (4, 5), (11, 10))
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      10L -> 10L, 11L -> 10L)
+    val e = pairs.map { case (a, b) => (a.toLong, b.toLong) }.toDF("a", "b")
+    assert(labelMap(Dedup.components(e, 0)) === expected)
+    assert(labelMap(Dedup.components(e)) === expected)
+    // on INT edges the local side widens labels to BIGINT and the
+    // distributed side keeps INT, so the limit picks the side it names
+    val eInt = pairs.toDF("a", "b")
+    val local = Dedup.components(eInt)
+    val dist = Dedup.components(eInt, 0)
+    assert(local.schema("label").dataType.typeName === "long")
+    assert(dist.schema("label").dataType.typeName === "integer")
+    assert(labelMap(local) === expected)
+    assert(labelMap(dist) === expected)
+  }
+
+  test("ccFoldBatch folds INT-typed labels and edges like BIGINT ones") {
+    import spark.implicits._
+    // base {1,2} and {10,11}; the delta joins both through 3 and adds {20,21}
+    val prev = Seq((1, 1), (2, 1), (10, 10), (11, 10))
+    val delta = Seq((2, 3), (3, 11), (20, 21))
+    val asLong = Relational.ccFoldBatch(
+      prev.map { case (a, b) => (a.toLong, b.toLong) }.toDF("id", "label"),
+      delta.map { case (a, b) => (a.toLong, b.toLong) }.toDF("a", "b"))
+    val asInt = Relational.ccFoldBatch(prev.toDF("id", "label"), delta.toDF("a", "b"))
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L, 11L -> 1L,
+      20L -> 20L, 21L -> 20L)
+    assert(labelMap(asLong) === expected)
+    assert(labelMap(asInt) === expected)
+  }
+
   test("global row numbers are invariant to input partitioning") {
     import spark.implicits._
     val df = (1 to 100).map(i => (i.toLong, (i * 31 % 97).toLong)).toDF("id", "v")

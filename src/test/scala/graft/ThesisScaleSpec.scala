@@ -4,15 +4,16 @@ import graft.operators.{Classification, TopicModeling}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
-/** Thesis-scale env replay (r13 verdict task 3): the reference runs
-  * HdpModel at T=1000 (wiki_hdp.py:19), sweeps k=10..990
-  * (webisalod_lda.py:55-60) and cross-validates with StratifiedKFold(10)
-  * (supervised_classifier.py:629); the engine exposes those scales via
-  * GRAFT_HDP_T / GRAFT_MODEL_KS / GRAFT_CV_K, each routed through an
-  * explicit-parameter core. This suite drives the SAME cores at the
-  * thesis parameters on sf0.001 and asserts the audit contracts stay
-  * green — proving driver state stays T/k-bounded exactly as SURVEY §2
-  * 15b promises (the env override changes a constant, not a code path).
+/** Thesis-scale replay: the reference runs HdpModel at T=1000
+  * (wiki_hdp.py:19), sweeps k=10..990 (webisalod_lda.py:55-60) and
+  * cross-validates with StratifiedKFold(10) (supervised_classifier.py:629);
+  * the engine reaches those scales through its explicit-parameter cores
+  * (qHdpAt / qHdpAuditAt, qModelSelectAt, stratifiedFolds(df, k)), which
+  * the registered queries call with their test-SF constants. This suite
+  * drives the SAME cores at the thesis parameters on sf0.001 and asserts
+  * the audit contracts stay green — proving driver state stays T/k-bounded
+  * exactly as SURVEY §2 15b promises (the scale is an argument, not a
+  * code path).
   * Measured runtime on the test host: T=1000 replay ≈ 35 s (the LDA fit
   * at k=1000 dominates; the stick recursion itself is T-bounded driver
   * arithmetic), k-grid slice ≈ 21 s, folds ≈ 2 s.
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
 class ThesisScaleSpec extends SparkSpec {
 
   test("q_hdp + stick-mass audit hold at the thesis truncation T=1000 " +
-    "(GRAFT_HDP_T=1000 code path, driver state T-bounded)") {
+    "(qHdpAt code path, driver state T-bounded)") {
     val t0 = System.nanoTime()
     val audit = TopicModeling.qHdpAuditAt(spark, sfDir, 1000).collect()(0)
     assert(audit.getAs[Long]("n_sticks") == 1000L)

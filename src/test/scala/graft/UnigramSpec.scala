@@ -39,7 +39,7 @@ class UnigramSpec extends SparkSpec {
     for (c <- Seq("roundtrip_ok", "bounds_ok", "simplex_ok", "em_ok", "coverage_ok"))
       assert(a.getAs[Boolean](c), s"$c failed")
     val vocab = Unigram.qUnigram(spark, sfDir).collect()
-    assert(vocab.nonEmpty && vocab.length <= Unigram.finalVocab)
+    assert(vocab.nonEmpty && vocab.length <= Unigram.FinalVocab)
     // ranks contiguous from 1, probs nonincreasing in rank order
     assert(vocab.map(_.getAs[Int]("rank")).sorted.toSeq == (1 to vocab.length))
     val byRank = vocab.sortBy(_.getAs[Int]("rank")).map(_.getAs[Double]("prob"))
