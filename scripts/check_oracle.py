@@ -106,6 +106,13 @@ def main():
         else:
             print(f"PASS {name} ({len(mine)} rows)")
             n_pass += 1
+    # A requested name with no oracle is rows-only: skipping it would
+    # print a green gate that compared nothing.
+    gated = {k[:-len(".parquet")] if k.endswith(".parquet") else k for k in oracle}
+    for name in sorted(only):
+        if name not in gated and name not in oracle:
+            print(f"FAIL {name}: no oracle (rows-only — gate its certificate)")
+            n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)
 

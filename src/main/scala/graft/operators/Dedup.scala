@@ -44,9 +44,9 @@ object Dedup extends QueryModule {
     * (several-fold less shuffle volume; the sql-oracle hash-gate on
     * q_dedup_jaccard proves pair identity is preserved — a 64-bit collision
     * within one corpus is ~n²/2⁶⁵, vanishing even at 10¹⁰ shingles).
-    * Memoized + persisted: the Jaccard query, the minhash verify stage
-    * and the per-doc size lookups all consume this subtree (and the
-    * df-capped posting derived from it is persisted separately below).
+    * Memoized + persisted: the Jaccard and prefix-join queries and the
+    * per-doc size lookups all consume this subtree (and the df-capped
+    * posting derived from it is persisted separately below).
     * MEMORY_AND_DISK is the honest 100 TB posture too: a shared stage
     * this hot is materialized once (cache or checkpoint), never
     * recomputed per consumer. */
@@ -58,6 +58,30 @@ object Dedup extends QueryModule {
         .distinct()
         .cache()
     }
+
+  /** The same distinct shingle hashes as [[docShingles]], one
+    * (doc_id, hs) row per doc: a projection of the cached rawDocs, with
+    * no explode and no shuffle. The verify stage of the candidate joins
+    * reads it, so verify work is bounded by the candidates, not by a
+    * corpus-wide shingle relation. */
+  private def shingleHashSets(s: SparkSession, dir: String): DataFrame =
+    TextPrep.rawDocs(s, dir)
+      .select(col("doc_id"),
+        array_distinct(transform(TextFns.shingles(col("rtoks"), 3), x => xxhash64(x)))
+          .as("hs"))
+
+  /** Candidate pairs (doc_a, doc_b) → (doc_a, doc_b, common, sz_a, sz_b):
+    * the exact shared-shingle count and both set sizes, from two joins of
+    * the candidates to the per-doc sets. The sets are one row PER
+    * DOCUMENT, so no broadcast hint (the qDedupJaccard rule); AQE
+    * broadcasts whichever side is small at run time. */
+  private def verifiedCommon(sets: DataFrame, cand: DataFrame): DataFrame =
+    cand
+      .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("ha")), Seq("doc_a"))
+      .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("hb")), Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("ha"), col("hb"))).cast("long").as("common"),
+        size(col("ha")).cast("long").as("sz_a"), size(col("hb")).cast("long").as("sz_b"))
 
   /** The same distinct hashed-shingle relation over an arbitrary
     * (doc_id, text) frame — the per-batch input of [[dedupFoldBatch]]
@@ -368,9 +392,9 @@ object Dedup extends QueryModule {
     * so the posting self-join runs over PREFIXES only — ultra-common
     * shingles land at the END of the ordering and never generate
     * candidates, which is exactly what the lossy ShingleDfCap
-    * approximates. Verification intersects the two sorted per-doc
-    * shingle arrays per CANDIDATE (doc-length-bounded work, the PPJoin
-    * verify stage). Exact by the prefix-filter theorem — the oracle is
+    * approximates. Verification intersects the two per-doc shingle-hash
+    * sets per CANDIDATE (doc-length-bounded work, the PPJoin verify
+    * stage). Exact by the prefix-filter theorem — the oracle is
     * the UNCAPPED brute-force threshold join and must match pair for
     * pair. */
   def qJaccardPrefix(s: SparkSession, dir: String): DataFrame = {
@@ -397,9 +421,6 @@ object Dedup extends QueryModule {
     //    |B|−pb)) ≥ 3·(|A|+|B|) at its first match and survives the
     //    post-filter distinct. Candidates that pass no match are
     //    provably below τ and skip the verify stage entirely.
-    // candidates materialize ONCE (localCheckpoint): three consumers —
-    // the doc restriction below reads it twice and the final join once —
-    // would otherwise each replay the prefix self-join
     val cand = prefix.select(col("doc_id").as("doc_a"), col("sh"),
         col("pos").as("pa"), col("sz").as("sz_a"))
       .join(prefix.select(col("doc_id").as("doc_b"), col("sh"),
@@ -410,31 +431,13 @@ object Dedup extends QueryModule {
       .filter((lit(1) + least(col("sz_a") - col("pa"),
         col("sz_b") - col("pb"))) * 13 >= (col("sz_a") + col("sz_b")) * 3)
       .select("doc_a", "doc_b").distinct()
-      .localCheckpoint(true)
-    // the verify stage materializes sorted shingle sets ONLY for docs
-    // that appear in some candidate (semi-join first): set building is
-    // candidate-bounded, not corpus-bounded
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val sets = sh.join(candDocs, Seq("doc_id"), "left_semi")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(col("sh"))).as("set"),
-        count(lit(1)).as("sz"))
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("set").as("set_a"),
-        col("sz").as("sz_a")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("set").as("set_b"),
-        col("sz").as("sz_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("set_a"), col("set_b"))).cast("long").as("common"),
-        col("sz_a"), col("sz_b"))
-      .filter(col("common").cast("double") /
-        (col("sz_a") + col("sz_b") - col("common")).cast("double")
-        >= PrefixJaccardTau)
-      .select(col("doc_a"), col("doc_b"),
-        round(col("common").cast("double") /
-          (col("sz_a") + col("sz_b") - col("common")).cast("double"), 6)
-          .as("jaccard"))
+    // verify on the per-doc shingle-hash sets: one intersection per
+    // candidate (doc-length-bounded work), τ tested on the unrounded ratio
+    val ratio = col("common").cast("double") /
+      (col("sz_a") + col("sz_b") - col("common")).cast("double")
+    verifiedCommon(shingleHashSets(s, dir), cand)
+      .filter(ratio >= PrefixJaccardTau)
+      .select(col("doc_a"), col("doc_b"), round(ratio, 6).as("jaccard"))
   }
 
   private lazy val qJaccardPrefixSql = {
@@ -460,7 +463,7 @@ object Dedup extends QueryModule {
     val sizes = docSizes(s, dir)
     val pairs = cappedPairCounts(s, dir)
     // sizes is one row PER DOCUMENT — never broadcast it; a shuffle join on
-    // the pair keys is the plan that survives 100 TB (same as exactJaccardOf).
+    // the pair keys is the plan that survives 100 TB.
     pairs
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), Seq("doc_a"))
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), Seq("doc_b"))
@@ -711,38 +714,34 @@ object Dedup extends QueryModule {
       .select(col("doc_id"),
         graft.functions.HashKernelCols.minhash(col("sgs"), NumHashes).as("sig"))
 
-  /** q_dedup_minhash: band-bucket candidate pairs → exact-Jaccard verify.
-    * Verified pairs are by construction a SUBSET of q_dedup_jaccard's exact
-    * result (recall < 1 is the LSH trade); rows-only oracle (hash mixing
-    * not SQL-portable). */
+  /** q_dedup_minhash: band-bucket candidate pairs → exact-Jaccard verify
+    * on the per-doc shingle-hash sets, one lazy plan from signature to
+    * verified pair. Verified pairs are by construction a SUBSET of
+    * q_dedup_jaccard's exact result (recall < 1 is the LSH trade);
+    * rows-only oracle (hash mixing not SQL-portable). */
   def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
-    val sh = docShingles(s, dir)
-    // candidate pairs are MATERIALIZED (memoized per session + persisted):
-    // the verify stage consumes them from three positions (both id-prune
-    // sides + the intersection join), which would otherwise re-run the
-    // signature/banding pipeline per consumer — the same shared-hot-stage
-    // rule as docShingles/postedBuckets
-    val cand = graft.ModelCache.getOrElseUpdate(s, s"dedup.minhash.cand:$dir") {
-      val sig = minhashSignatures(s, dir)
-      val rowsPerBand = NumHashes / NumBands
-      val bands = sig.select(col("doc_id"),
-        explode(array((0 until NumBands).map { b =>
-          struct(lit(b).as("band"),
-            xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand)
-              .map(i => col("sig")(i)): _*).as("key"))
-        }: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      // band buckets → inline pair expansion (identical pair stream to the
-      // old band self-join, one shuffle instead of a sort-merge join);
-      // bucket width is bounded by the duplicate-cluster size
-      bands.groupBy("band", "key").agg(collect_list(col("doc_id")).as("ds"))
-        .filter(size(col("ds")) >= 2)
-        .select(explode(graft.functions.Pairs.orderedPairs(col("ds"))).as("p"))
-        .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-        .distinct()
-        .cache()
-    }
-    exactJaccardOf(sh, cand).filter(col("jaccard") >= 0.12)
+    val sig = minhashSignatures(s, dir)
+    val rowsPerBand = NumHashes / NumBands
+    val bands = sig.select(col("doc_id"),
+      explode(array((0 until NumBands).map { b =>
+        struct(lit(b).as("band"),
+          xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand)
+            .map(i => col("sig")(i)): _*).as("key"))
+      }: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+    // band buckets → inline pair expansion (identical pair stream to the
+    // old band self-join, one shuffle instead of a sort-merge join);
+    // bucket width is bounded by the duplicate-cluster size
+    val cand = bands.groupBy("band", "key").agg(collect_list(col("doc_id")).as("ds"))
+      .filter(size(col("ds")) >= 2)
+      .select(explode(graft.functions.Pairs.orderedPairs(col("ds"))).as("p"))
+      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+      .distinct()
+    verifiedCommon(shingleHashSets(s, dir), cand)
+      .select(col("doc_a"), col("doc_b"),
+        round(col("common").cast("double") / (col("sz_a") + col("sz_b") - col("common")), 6)
+          .as("jaccard"))
+      .filter(col("jaccard") >= 0.12)
   }
 
   /** Sketch-estimate error ceiling for the MinHash audit: with 128
@@ -926,29 +925,6 @@ object Dedup extends QueryModule {
        FROM e a JOIN e b ON a.vec_id < b.vec_id
        WHERE list_dot_product(a.v, b.v) /
              (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.35"""
-
-  /** Exact Jaccard restricted to candidate pairs (the verify stage all
-    * LSH variants share). Joins on the 8-byte shingle hash from
-    * docShingles, not the string — and FIRST prunes the posting to the
-    * docs that appear in a candidate pair (a semi-join against the tiny
-    * candidate id set): LSH's whole point is candidates ≪ corpus, so the
-    * expensive intersection joins must only ever see candidate docs. */
-  def exactJaccardOf(sh: DataFrame, cand: DataFrame): DataFrame = {
-    val ids = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val shc = sh.join(ids, Seq("doc_id"), "left_semi")
-    val sizes = shc.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val common = cand
-      .join(shc.select(col("doc_id").as("doc_a"), col("sh")), Seq("doc_a"))
-      .join(shc.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("common").cast("double") / (col("sz_a") + col("sz_b") - col("common")), 6)
-          .as("jaccard"))
-  }
 
   // ---------------- SimHash ----------------
 

@@ -1301,7 +1301,13 @@ object TextAnalysis extends QueryModule {
     * pattern). The oracle re-runs the identical 10 iterations as a
     * recursive CTE. Ties (and the top-20 cut) break on the rounded rank
     * then the token, so both engines cut identically. */
-  def qKeywords(s: SparkSession, dir: String): DataFrame = {
+  def qKeywords(s: SparkSession, dir: String): DataFrame =
+    qKeywordsAt(s, dir, KeywordsEdgeLimit)
+
+  /** [[qKeywords]] with the local/distributed edge limit as a parameter
+    * (the [[Dedup.components]] gate): at `localLimit` 0 every graph runs
+    * the distributed [[Dedup.pageRank]]. */
+  def qKeywordsAt(s: SparkSession, dir: String, localLimit: Int): DataFrame = {
     val edges = bigrams(s, dir)
       .filter(col("tok_a") =!= col("tok_b"))
       .select(least(col("tok_a"), col("tok_b")).as("a"),
@@ -1309,9 +1315,9 @@ object TextAnalysis extends QueryModule {
       .groupBy("a", "b").agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2)
       .select("a", "b")
-    val head = edges.take(KeywordsEdgeLimit + 1)
+    val head = edges.take(localLimit + 1)
     val ranked =
-      if (head.length <= KeywordsEdgeLimit) {
+      if (head.length <= localLimit) {
         import s.implicits._
         Dedup.pageRankLocal(head.toSeq.map(r => (r.getString(0), r.getString(1))))
           .toDF("token", "r")

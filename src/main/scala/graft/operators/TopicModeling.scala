@@ -52,13 +52,18 @@ object TopicModeling extends QueryModule {
     }
 
   /** The seeded online-LDA fit over [[corpus]]`(s, dir)` — memoized per
-    * (dir, k, maxIter). */
+    * (dir, k, maxIter). It fits on a projection of the cached bow, not
+    * the bow itself: MLlib persists its training RDD (and releases it
+    * after the fit) only when the input frame is not cached, so fitting
+    * the cached frame would re-derive every mini-batch's vectors from it.
+    * The projection keeps the rows and their order, so the fit is the
+    * same. */
   def fitLda(s: SparkSession, dir: String, k: Int, maxIter: Int = 20): LDAModel =
     graft.ModelCache.getOrElseUpdate(s, s"tm.lda:$dir:$k:$maxIter") {
       val (bow, _) = corpus(s, dir)
       new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
         .setOptimizer("online").setFeaturesCol("features")
-        .fit(bow)
+        .fit(bow.select("features"))
     }
 
   /** Topic top-terms in array shape (internal: coherence feeds off this). */

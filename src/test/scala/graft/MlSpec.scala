@@ -58,9 +58,34 @@ class MlSpec extends SparkSpec {
   test("minhash candidates verify to a subset of exact jaccard pairs") {
     val exact = Dedup.qDedupJaccard(spark, sfDir)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val mh = Dedup.qDedupMinhash(spark, sfDir)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    val rows = Dedup.qDedupMinhash(spark, sfDir)
+      .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect()
+    assert(rows.nonEmpty)
+    val mh = rows.map { case (a, b, _) => (a, b) }.toSet
     assert(mh.subsetOf(exact), s"minhash found non-exact pairs: ${mh -- exact}")
+    // values: each jaccard is the set Jaccard of the two docs' distinct
+    // shingle hashes, recomputed on the driver (not q_dedup_jaccard's
+    // values: its df cap changes the common counts)
+    val ids = rows.flatMap { case (a, b, _) => Seq(a, b) }.distinct
+    val sets = Dedup.docShingles(spark, sfDir).filter(col("doc_id").isin(ids: _*))
+      .select("doc_id", "sh").as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (d, rs) => d -> rs.map(_._2).toSet }
+    rows.foreach { case (a, b, j) =>
+      val c = (sets(a) intersect sets(b)).size
+      val expect = BigDecimal(c.toDouble / (sets(a).size + sets(b).size - c))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert(j === expect, s"jaccard of ($a, $b)")
+    }
+  }
+
+  test("fitLda's topics equal a direct online fit on the cached bow frame") {
+    val model = TopicModeling.fitLda(spark, sfDir, TopicModeling.DefaultK)
+    val (bow, _) = TopicModeling.corpus(spark, sfDir)
+    val direct = new org.apache.spark.ml.clustering.LDA()
+      .setK(TopicModeling.DefaultK).setSeed(TopicModeling.Seed).setMaxIter(20)
+      .setOptimizer("online").setFeaturesCol("features")
+      .fit(bow)
+    assert(model.topicsMatrix.toArray.toSeq === direct.topicsMatrix.toArray.toSeq)
   }
 
   test("simhash kernel: bit-identical to the 64-aggregate formulation") {

@@ -58,6 +58,12 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("q_dedup_minhash verifies on per-doc shingle-hash sets: no " +
+    "exploded corpus-wide shingle relation in its plan") {
+    val p = plan(operators.Dedup.qDedupMinhash(spark, sfDir))
+    assert(!p.contains("explode(word_shingles"), p.take(2400))
+  }
+
   test("q_dedup_exact aggregates without any join") {
     val p = plan(operators.Dedup.qDedupExact(spark, sfDir))
     assert(!p.contains("Join"), s"exact dedup is a pure groupBy:\n${p.take(1200)}")

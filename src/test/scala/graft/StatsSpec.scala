@@ -195,6 +195,15 @@ class StatsSpec extends SparkSpec {
     assert(kw.join(vocab, Seq("token"), "left_anti").count() === 0)
   }
 
+  test("textrank above the edge limit (distributed pageRank) keeps the " +
+    "local path's top 20") {
+    def top(limit: Int) = operators.TextAnalysis.qKeywordsAt(spark, sfDir, limit)
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    val local = top(operators.TextAnalysis.KeywordsEdgeLimit)
+    assert(local.length === 20)
+    assert(top(0) === local)
+  }
+
   test("cohen's kappa is consistent with the confusion matrix and bounded") {
     val k = operators.Evaluation.qKappa(spark, sfDir).head()
     val (tp, fp, tn, fn) = (k.getLong(0), k.getLong(1), k.getLong(2), k.getLong(3))
