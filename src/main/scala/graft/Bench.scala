@@ -19,18 +19,9 @@ object Bench {
     // full headline run). An explicit subset may name ANY registered query, including
     // the ML-lane ones, so the scale ladder can measure a topic-model fit
     // path without putting iterative training in the headline run. An
-    // unknown name throws, as Views.registerQueries does.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    only.foreach { sel =>
-      val unknown = sel -- qs.keySet
-      if (unknown.nonEmpty) throw new IllegalArgumentException(
-        s"unknown query: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    // Subsets run in registry order (not sorted): execution order decides
-    // which query pays each memoized substrate's build cost, so a
-    // reordered subset would not be comparable to the full run.
-    val names = only match {
-      case Some(sel) => SparkEntry.registry.map(_.name).filter(sel)
+    // unknown name throws.
+    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
+      case Some(sel) => SparkEntry.subset(sel.split(",").map(_.trim))
       case None => SparkEntry.lane(Headline)
     }
     val spark = GraftSession.local()

@@ -12,6 +12,8 @@ sealed trait Gate
   *  - money-like sums go through exact DECIMAL casts, final cast to DOUBLE;
   *  - ratios are double divisions of exactly-equal inputs (identical IEEE);
   *  - any value with accumulated fp error is round()ed well above the error;
+  *  - order-sensitive double sums fold through `OrderedFold.sum` ↔
+  *    `list_sum(list(x ORDER BY k))`;
   *  - ordering ties are always broken by a unique integer key. */
 final case class Oracle(sql: String) extends Gate
 

@@ -25,6 +25,17 @@ object SparkEntry {
   /** Every registered query, in module order. */
   def registry: Seq[Q] = modules.flatMap(_.registry)
 
+  /** The named queries, in registry order (execution order decides which
+    * query pays each memoized substrate's build, so a subset keeps the
+    * order of the full run). An unknown name throws. */
+  def subset(names: Iterable[String]): Seq[String] = {
+    val all = registry.map(_.name)
+    val unknown = names.toSet -- all
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.filter(names.toSet)
+  }
+
   /** Names of the queries in one bench lane, in registry order. */
   def lane(l: Lane): Seq[String] = registry.filter(_.lane == l).map(_.name)
 

@@ -7,8 +7,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: restrict the dump to named queries (local
-    // iteration); the driver always calls with exactly (sfDir, outDir).
-    val only = args.drop(2).toSet
+    // iteration; an unknown name throws before any dump); the driver
+    // always calls with exactly (sfDir, outDir).
+    val qs = SparkEntry.queries
+    val names = if (args.length > 2) SparkEntry.subset(args.drop(2)) else qs.keys
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -16,10 +18,8 @@ object Verify {
     // dir and the oracle-JSON key are BOTH this string (the driver keys its
     // oracle lookup by dump-dir basename — desync = silent no_oracle).
     def dumpName(k: String): String = s"$k.parquet"
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try qs(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${dumpName(name)}")
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

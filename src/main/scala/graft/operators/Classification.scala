@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Cert, Ml, Oracle, Q, QueryModule}
+import graft.functions.VectorMath.{cosine, dot}
 import graft.sources.Tables
 import org.apache.spark.ml.classification._
 import org.apache.spark.ml.feature.StandardScaler
@@ -276,14 +277,12 @@ object Classification extends QueryModule {
       .withColumn("z", rff(col("x")))
     val zs = all.agg(
       min(size(col("z"))).as("zdmin"), max(size(col("z"))).as("zdmax"),
-      max(SimilaritySearch.dot(col("z"), col("z"))).as("zn2max")).head
+      max(dot(col("z"), col("z"))).as("zn2max")).head
     val probes = all.filter(col("vec_id") % 5 === 0 &&
       col("vec_id") < RffProbeMaxId)
-    val d2 = SimilaritySearch.dot(col("xa"), col("xa")) +
-      SimilaritySearch.dot(col("xb"), col("xb")) -
-      SimilaritySearch.dot(col("xa"), col("xb")) * 2.0
-    val err = abs(SimilaritySearch.dot(col("za"), col("zb")) -
-      exp(lit(-gamma) * d2))
+    val d2 = dot(col("xa"), col("xa")) + dot(col("xb"), col("xb")) -
+      dot(col("xa"), col("xb")) * 2.0
+    val err = abs(dot(col("za"), col("zb")) - exp(lit(-gamma) * d2))
     val ke = probes
       .select(col("vec_id").as("a_id"), col("x").as("xa"), col("z").as("za"))
       .join(broadcast(probes.select(col("vec_id").as("b_id"),
@@ -374,8 +373,7 @@ object Classification extends QueryModule {
       // standard strongly-convex rate, stable from the first step
       val t0 = math.max(1.0, 2.0 * d / alpha)
       for (t <- 0 until iters) {
-        val z = col("ys") * (SimilaritySearch.dot(col("x"),
-          array(wv.map(lit): _*)) + b)
+        val z = col("ys") * (dot(col("x"), array(wv.map(lit): _*)) + b)
         val c = when(z >= 1.0, 0.0)
           .when(z >= -1.0, (z - 1.0) * 2.0)
           .otherwise(-4.0)
@@ -418,8 +416,7 @@ object Classification extends QueryModule {
     val tr = train.select(vector_to_array(col("features")).as("x"),
       (col("y") * 2.0 - 1.0).as("ys"), col("w"))
     val (wv, b) = fitModifiedHuber(tr, d, SgdHuberIters, SgdHuberAlpha)
-    val dec = SimilaritySearch.dot(vector_to_array(col("features")),
-      array(wv.map(lit): _*)) + b
+    val dec = dot(vector_to_array(col("features")), array(wv.map(lit): _*)) + b
     metricsRow("sgd_modified_huber",
       test.withColumn("prediction", when(dec > 0.0, 1.0).otherwise(0.0)))
   }
@@ -529,7 +526,7 @@ object Classification extends QueryModule {
       .join(te.select(col("q_id"), col("fv").as("qv"), col("y")), Seq("q_id"))
       .join(tr.select(col("t_id"), col("fv").as("tv"), col("ty")), Seq("t_id"))
       .select(col("q_id"), col("y"), col("ty"),
-        SimilaritySearch.cosine(col("qv"), col("tv")).as("cos"), col("t_id"))
+        cosine(col("qv"), col("tv")).as("cos"), col("t_id"))
     val votes = voteOf(scored)
     val majority = tr.groupBy("ty").count()
       .orderBy(col("count").desc, col("ty").asc).head().getDouble(0)
@@ -594,9 +591,8 @@ object Classification extends QueryModule {
       .filter(col("a_id") =!= col("b_id"))
       .select("a_id", "b_id").distinct()
     // deterministic nearest neighbor: min (squared euclidean, b_id)
-    val d2 = SimilaritySearch.dot(col("av"), col("av")) +
-      SimilaritySearch.dot(col("bv"), col("bv")) -
-      SimilaritySearch.dot(col("av"), col("bv")) * 2.0
+    val d2 = dot(col("av"), col("av")) + dot(col("bv"), col("bv")) -
+      dot(col("av"), col("bv")) * 2.0
     val nn = cand
       .join(mino.select(col("vec_id").as("a_id"), col("fv").as("av")), Seq("a_id"))
       .join(mino.select(col("vec_id").as("b_id"), col("fv").as("bv")), Seq("b_id"))
@@ -879,23 +875,25 @@ object Classification extends QueryModule {
           array_to_vector(transform(col("embedding"), x => x.cast("double"))).as("raw"),
           when(col("label") < 5, 1.0).otherwise(0.0).as("y")),
       k).cache()
-    val folds = (0 until k).map { f =>
-      val train = base.filter(col("fold") =!= f)
-      val test = base.filter(col("fold") === f)
-      val sm = new StandardScaler().setInputCol("raw").setOutputCol("features")
-        .setWithMean(true).setWithStd(true).fit(train)
-      val m = new LogisticRegression().setLabelCol("y")
-        .setMaxIter(100).setRegParam(0.1).fit(sm.transform(train))
-      val r = Evaluation.confusionMetrics(
-        m.transform(sm.transform(test))
-          .select((col("prediction") === 1.0).as("pred"), (col("y") === 1.0).as("gold")))
-        .head()
-      // boxed read: a degenerate fold (no positives anywhere) has NULL
-      // f1, which must stay NULL instead of unboxing to a silent 0.0
-      (f, r.getAs[Long]("tp"), r.getAs[Long]("fp"), r.getAs[Long]("tn"),
-        r.getAs[Long]("fn"), Option(r.getAs[java.lang.Double]("f1")).map(_.doubleValue))
-    }
-    base.unpersist()
+    // try/finally: a fold whose fit throws must not leave `base` cached
+    val folds = try {
+      (0 until k).map { f =>
+        val train = base.filter(col("fold") =!= f)
+        val test = base.filter(col("fold") === f)
+        val sm = new StandardScaler().setInputCol("raw").setOutputCol("features")
+          .setWithMean(true).setWithStd(true).fit(train)
+        val m = new LogisticRegression().setLabelCol("y")
+          .setMaxIter(100).setRegParam(0.1).fit(sm.transform(train))
+        val r = Evaluation.confusionMetrics(
+          m.transform(sm.transform(test))
+            .select((col("prediction") === 1.0).as("pred"), (col("y") === 1.0).as("gold")))
+          .head()
+        // boxed read: a degenerate fold (no positives anywhere) has NULL
+        // f1, which must stay NULL instead of unboxing to a silent 0.0
+        (f, r.getAs[Long]("tp"), r.getAs[Long]("fp"), r.getAs[Long]("tn"),
+          r.getAs[Long]("fn"), Option(r.getAs[java.lang.Double]("f1")).map(_.doubleValue))
+      }
+    } finally base.unpersist()
     val defined = folds.flatMap(_._6)
     val meanF1 =
       if (defined.isEmpty) None

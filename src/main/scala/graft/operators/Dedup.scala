@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{Cert, Ml, Oracle, Q, QueryModule}
-import graft.functions.TextFns
+import graft.functions.{OrderedFold, TextFns}
+import graft.functions.VectorMath.cosine
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -545,7 +546,7 @@ object Dedup extends QueryModule {
         transform(col("embedding"), x => x.cast("double")).as("v"))
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        SimilaritySearch.cosine(col("a.v"), col("b.v")).as("cos"))
+        cosine(col("a.v"), col("b.v")).as("cos"))
       .filter(col("cos") >= 0.35)
       .select("vec_a", "vec_b")
   }
@@ -592,7 +593,7 @@ object Dedup extends QueryModule {
     e.filter(col("vec_id") >= DeconBenchMax)
       .crossJoin(broadcast(bench))
       .select(col("vec_id"), col("bench_id"),
-        SimilaritySearch.cosine(col("v"), col("bv")).as("cos"))
+        cosine(col("v"), col("bv")).as("cos"))
       .filter(col("cos") >= DeconSemTau)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_hits"),
@@ -645,7 +646,7 @@ object Dedup extends QueryModule {
       .join(e.select(col("vec_id").as("vec_a"), col("v").as("va")), Seq("vec_a"))
       .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb")), Seq("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        SimilaritySearch.cosine(col("va"), col("vb")).as("cos"))
+        cosine(col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= 0.35)
       .select("vec_a", "vec_b")
   }
@@ -683,7 +684,7 @@ object Dedup extends QueryModule {
       .join(assigned.select(col("vec_id").as("vec_a"), col("v").as("va")), Seq("vec_a"))
       .join(assigned.select(col("vec_id").as("vec_b"), col("v").as("vb")), Seq("vec_b"))
       .select(col("cluster"), col("vec_a"), col("vec_b"),
-        SimilaritySearch.cosine(col("va"), col("vb")).as("cos"))
+        cosine(col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= 0.35)
       .select("cluster", "vec_a", "vec_b")
   }
@@ -850,7 +851,7 @@ object Dedup extends QueryModule {
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
     val exact = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        SimilaritySearch.cosine(col("a.v"), col("b.v")).as("cos"))
+        cosine(col("a.v"), col("b.v")).as("cos"))
       .filter(col("cos") >= 0.35)
     val cand = SimilaritySearch.postedBuckets(s, dir)
       .select("vec_id", "tbl", "bucket")
@@ -892,7 +893,7 @@ object Dedup extends QueryModule {
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
     val exact = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        SimilaritySearch.cosine(col("a.v"), col("b.v")).as("cos"))
+        cosine(col("a.v"), col("b.v")).as("cos"))
       .filter(col("cos") >= 0.35)
     val sem = qDedupSemantic(s, dir)
       .filter(col("vec_a") < 500 && col("vec_b") < 500)
@@ -1494,8 +1495,7 @@ object Dedup extends QueryModule {
     val kept = lines.join(rare, Seq("lk"), "left_semi")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
-        md5(array_join(transform(array_sort(collect_list(struct(col("pos"), col("line")))),
-          x => x.getField("line")), ". ")).as("kept_md5"))
+        md5(array_join(OrderedFold.values(col("line"), col("pos")), ". ")).as("kept_md5"))
     docs
       .select(col("doc_id"),
         size(filter(split(col("text"), "\\. "), l => length(trim(l)) > 0))
@@ -2176,8 +2176,7 @@ object Dedup extends QueryModule {
     val kept = toks.join(dropped, Seq("doc_id", "pos"), "left_anti")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
-        md5(array_join(transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
-          x => x.getField("tok")), " ")).as("kept_md5"))
+        md5(array_join(OrderedFold.values(col("tok"), col("pos")), " ")).as("kept_md5"))
     docs
       .select(col("doc_id"), size(col("rtoks")).cast("long").as("n_toks"))
       .filter(col("n_toks") > 0)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Oracle, Q, QueryModule}
+import graft.functions.OrderedFold
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -134,9 +135,8 @@ object PatternMining extends QueryModule {
   private def sequences(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("ts"), col("event_id"), col("event_type")))),
-        e => array(e.getField("event_type"))).as("sequence"))
+      .agg(OrderedFold.values(array(col("event_type")),
+        col("ts"), col("event_id"), col("event_type")).as("sequence"))
 
   /** q_seq_patterns: event-type sequences (length ≤ 3) appearing in ≥ 10%
     * of user-days, in temporal order, with support counts. */

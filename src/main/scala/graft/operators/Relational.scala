@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Oracle, Q, QueryModule}
+import graft.functions.OrderedFold
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -341,9 +342,8 @@ object Relational extends QueryModule {
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy("user_id", "session_id")
       .agg(min(col("ts")).as("t_start"),
-        concat_ws("|", array_sort(collect_list(struct(col("us"),
-          col("event_id"), col("event_type"))))
-          .getField("event_type")).as("path"))
+        concat_ws("|", OrderedFold.values(col("event_type"), col("us"), col("event_id")))
+          .as("path"))
     sess
       .select(date_format(col("t_start"), "yyyy-MM-dd").as("day"),
         col("path").rlike(PatternRegex).as("hit"))
@@ -781,9 +781,7 @@ object Relational extends QueryModule {
     * all-pairs product — then existing edges leave by anti-join and
     * cn ≥ 2 bounds the tail. deg_z ≥ 2 for every wedge center (it has
     * two edges by construction), so ln(deg_z) > 0 always; the AA sum is
-    * a z-ordered bounded fold (aggregate(array_sort(collect_list…)) ↔
-    * list_sum(… ORDER BY z)) — the repo-wide ordered-double-sum
-    * discipline, round(6) on output only. */
+    * ordered by z, round(6) on output only. */
   def qLinkPred(s: SparkSession, dir: String): DataFrame = {
     val edges = copurchasePairs(s, dir).select("a", "b")
     val adj = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b")))
@@ -803,9 +801,7 @@ object Relational extends QueryModule {
         "left_anti")
       .groupBy("pa", "pb")
       .agg(count(lit(1)).as("cn"),
-        aggregate(transform(array_sort(collect_list(struct(col("z"),
-          (lit(1.0) / log(col("deg_z").cast("double"))).as("t")))),
-          x => x.getField("t")), lit(0.0), (a, x) => a + x).as("aa"))
+        OrderedFold.sum(lit(1.0) / log(col("deg_z").cast("double")), col("z")).as("aa"))
       .filter(col("cn") >= 2)
     cand
       .join(deg.select(col("node").as("pa"), col("deg").as("deg_a")), Seq("pa"))

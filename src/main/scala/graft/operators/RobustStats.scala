@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Cert, Oracle, Q, QueryModule}
+import graft.functions.OrderedFold
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -394,8 +395,7 @@ object RobustStats extends QueryModule {
       .select(col("r"),
         ((nd * sj - sj * sj).cast("double") /
           (col("n").cast("double") * (col("n") - 1).cast("double"))).as("vj"))
-      .agg(aggregate(array_sort(collect_list(struct(col("r"), col("vj")))),
-        lit(0.0), (acc, x) => acc + x.getField("vj")).as("sum_vj"))
+      .agg(OrderedFold.sum(col("vj"), col("r")).as("sum_vj"))
     val ndd = col("nd").cast("decimal(38,0)")
     val sl = col("sl").cast("decimal(38,0)")
     val tot = v.groupBy("doc_id").agg(sum(col("vote")).as("l"))
@@ -949,9 +949,7 @@ object RobustStats extends QueryModule {
     * (zero cells still carry expectation mass); each cell's χ² term uses
     * the cross-multiplied form (o·n − n_l·n_s)²/(n·n_l·n_s) so every
     * input to the fp arithmetic is an exact integer; the cell sum is an
-    * ordered fold over the langs×sources-bounded cell list (the
-    * q_class_centroids trick — both engines add in (lang, source) order,
-    * so the double is bit-identical). */
+    * ordered fold over the langs×sources-bounded cell list. */
   def qCramersV(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val cell = docs.groupBy("lang", "source").agg(count(lit(1)).as("o"))
@@ -967,10 +965,7 @@ object RobustStats extends QueryModule {
       .crossJoin(broadcast(tot))
       .select(col("lang"), col("source"), col("n"), col("r"), col("c"), t.as("t"))
       .groupBy("n", "r", "c")
-      .agg(aggregate(
-        transform(array_sort(collect_list(struct(col("lang"), col("source"), col("t")))),
-          x => x.getField("t")),
-        lit(0.0), (acc, x) => acc + x).as("chi2"))
+      .agg(OrderedFold.sum(col("t"), col("lang"), col("source")).as("chi2"))
       .select(col("n"), col("r"), col("c"), round(col("chi2"), 6).as("chi2"),
         round(sqrt(col("chi2") / (col("n") * least(col("r") - 1, col("c") - 1))
           .cast("double")), 6).as("cramers_v"))
@@ -1407,10 +1402,7 @@ object RobustStats extends QueryModule {
       col("p").as("p_b"))
     val bc = pa.join(pb, Seq("bucket")).filter(col("type_a") < col("type_b"))
       .groupBy("type_a", "type_b")
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("bucket"),
-          sqrt(col("p_a") * col("p_b")).as("x")))),
-        lit(0.0), (acc, r) => acc + r.getField("x")).as("bc"))
+      .agg(OrderedFold.sum(sqrt(col("p_a") * col("p_b")), col("bucket")).as("bc"))
     // BC can exceed 1 by an ulp on (near-)identical distributions; clamp
     // it for BOTH derived outputs, so the distance is 0, never -0.0 or a
     // tiny negative, in exactly the case the scaladoc calls out (the
@@ -1975,8 +1967,7 @@ object RobustStats extends QueryModule {
     val chi = g.crossJoin(broadcast(marg))
       .select(col("g"), col("k"), col("n"), col("aa"), term.as("t"))
       .groupBy("k", "n", "aa")
-      .agg(aggregate(array_sort(collect_list(struct(col("g"), col("t")))),
-        lit(0.0), (acc, x) => acc + x.getField("t")).as("chi2"))
+      .agg(OrderedFold.sum(col("t"), col("g")).as("chi2"))
     val crit = KruskalChiCrit.foldLeft(lit(null).cast("double")) {
       case (acc, (df, cv)) => when(col("k") - 1 === df, cv).otherwise(acc)
     }
@@ -2168,8 +2159,7 @@ object RobustStats extends QueryModule {
     val m = rj.agg(
       count(lit(1)).as("k"),
       sum(col("nj")).as("n"),
-      aggregate(array_sort(collect_list(struct(col("g"), col("term")))),
-        lit(0.0), (acc, x) => acc + x.getField("term")).as("sr"))
+      OrderedFold.sum(col("term"), col("g")).as("sr"))
       .crossJoin(broadcast(ties))
     val nn = col("n").cast("double")
     val h = lit(12.0) / (nn * (nn + 1)) * col("sr") - lit(3.0) * (nn + 1)
@@ -2416,13 +2406,8 @@ object RobustStats extends QueryModule {
         col("snn"), mean.as("m_i"), ssw.as("ss_i"), ssb.as("b_i"))
     val folded = terms
       .groupBy("k", "n_tot", "sx_tot", "snn")
-      .agg(
-        aggregate(transform(array_sort(collect_list(struct(col("source"),
-          col("ss_i").as("t")))), x => x.getField("t")),
-          lit(0.0), (a, x) => a + x).as("ss_within"),
-        aggregate(transform(array_sort(collect_list(struct(col("source"),
-          col("b_i").as("t")))), x => x.getField("t")),
-          lit(0.0), (a, x) => a + x).as("ss_between"))
+      .agg(OrderedFold.sum(col("ss_i"), col("source")).as("ss_within"),
+        OrderedFold.sum(col("b_i"), col("source")).as("ss_between"))
     val sigma2 = col("ss_within") / (col("n_tot") - col("k"))
     val denom = col("n_tot").cast("double") -
       col("snn").cast("double") / col("n_tot")
@@ -2549,10 +2534,8 @@ object RobustStats extends QueryModule {
     * LL(λ) = −n/2·ln(σ̂²_λ) + (λ−1)·Σln x over y = (x^λ−1)/λ (ln x at
     * λ=0), maximized in λ. Scale shape: one scan collapses to the
     * (lang × distinct length) grid — value-domain-sized — and the λ
-    * sweep runs on that grid; the three moment sums are value-ordered
-    * bounded folds (aggregate(array_sort(collect_list…)) ↔
-    * list_sum(… ORDER BY x)), so the doubles add in the same order in
-    * both engines; powers use only sqrt/·/÷ (see [[BoxCoxLambdas]]);
+    * sweep runs on that grid; the three moment sums are ordered by x;
+    * powers use only sqrt/·/÷ (see [[BoxCoxLambdas]]);
     * σ̂² and LL are single mirrored expressions; best-λ rank breaks ties
     * on λ. */
   def qBoxCox(s: SparkSession, dir: String): DataFrame = {
@@ -2570,16 +2553,13 @@ object RobustStats extends QueryModule {
       .when(col("lam") === 0.5, (sqrt(xd) - 1.0) / 0.5)
       .when(col("lam") === 1.0, xd - 1.0)
       .otherwise((xd * xd - 1.0) / 2.0)
-    def fold(term: org.apache.spark.sql.Column) =
-      aggregate(transform(array_sort(collect_list(struct(col("x"),
-        term.as("t")))), r => r.getField("t")), lit(0.0), (a, t) => a + t)
     val cD = col("c").cast("double")
     val m = dist.crossJoin(broadcast(grid))
       .select(col("lang"), col("lam"), col("x"), col("c"), y.as("y"))
       .groupBy("lang", "lam")
-      .agg(sum(col("c")).as("n"), fold(col("y") * cD).as("sy"),
-        fold(col("y") * col("y") * cD).as("syy"),
-        fold(log(col("x").cast("double")) * cD).as("slx"))
+      .agg(sum(col("c")).as("n"), OrderedFold.sum(col("y") * cD, col("x")).as("sy"),
+        OrderedFold.sum(col("y") * col("y") * cD, col("x")).as("syy"),
+        OrderedFold.sum(log(col("x").cast("double")) * cD, col("x")).as("slx"))
     val nD = col("n").cast("double")
     val varE = col("syy") / nD - (col("sy") / nD) * (col("sy") / nD)
     // var > 0 guard: a single-length group has σ̂² = 0 (or cancellation

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Cert, Oracle, Q, QueryModule}
-import graft.functions.TextFns
+import graft.functions.{OrderedFold, TextFns}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -832,17 +832,15 @@ object ScaleOps extends QueryModule {
     *     DECIMAL from every gated surface in r16, so the raw render is
     *     no longer on the hash-gated projection (r16 verdict task 1);
     *     a SEMANTIC decimal change still trips `dec_ok`;
-    *   - the ordered double fold (aggregate(array_sort(collect_list…)) ↔
-    *     list_sum(list(… ORDER BY …))) rounded at 6, the repo-wide
-    *     determinism idiom for order-sensitive floating sums. */
+    *   - the ordered double fold (`OrderedFold.sum` ↔
+    *     list_sum(list(… ORDER BY …))) rounded at 6 — the expression
+    *     every operator's order-sensitive floating sum uses. */
   def qOracleCanary(s: SparkSession, dir: String): DataFrame = {
     val g = s.range(1, 25).select(col("id").as("i"))
     val agg = g.agg(
       sum(col("i").cast("decimal(38,0)") * col("i")).as("dec_prod_raw"),
-      round(aggregate(
-        array_sort(collect_list(struct(col("i"),
-          (lit(1.0) / col("i").cast("double")).as("x")))),
-        lit(0.0), (acc, r) => acc + r.getField("x")), 6).as("fold_sum"))
+      round(OrderedFold.sum(lit(1.0) / col("i").cast("double"), col("i")), 6)
+        .as("fold_sum"))
     agg.select(
       md5(lit("graft-canary-0")).as("md5_full"),
       conv(substring(md5(lit("graft-canary-0")), 1, 8), 16, 10)

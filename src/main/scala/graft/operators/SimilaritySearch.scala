@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{Cert, Ml, Oracle, Q, QueryModule}
+import graft.functions.OrderedFold
+import graft.functions.VectorMath.{cosine, dot}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -17,14 +19,6 @@ import org.apache.spark.sql.functions._
   * seeded hash), candidates only within matching buckets — q_ann_lsh.
   */
 object SimilaritySearch extends QueryModule {
-
-  /** Codegen vector kernels (graft.functions.VectorMath) — sequential
-    * accumulation, bit-identical to the HOF folds they replaced and to
-    * DuckDB's list_dot_product, but inside whole-stage codegen instead of
-    * CodegenFallback interpretation. */
-  def dot(a: Column, b: Column): Column = graft.functions.VectorMath.dot(a, b)
-
-  def cosine(a: Column, b: Column): Column = graft.functions.VectorMath.cosine(a, b)
 
   /** q_knn_search: top-5 neighbors for query vectors (vec_id < 10) among the
     * rest, ranked by (cos desc, vec_id asc). */
@@ -189,12 +183,9 @@ object SimilaritySearch extends QueryModule {
   /** q_class_centroids: per-label mean embedding (class prototypes — the
     * nearest-centroid classifier's model, SemDeDup's seed points, and the
     * drift monitor's per-class reference). Emitted LONG (label, dim, n,
-    * centroid) so the output is flat-sortable. Determinism: floating sums
-    * are order-sensitive, so each (label, dim) group's values are summed
-    * in vec_id order via a sorted-collect fold — the same ordered-fold
-    * pattern as q_entropy, matched by ORDER BY inside DuckDB's list() —
-    * making both engines run the identical IEEE addition sequence. This is
-    * the exact audit formulation; a production 100 TB run uses plain avg()
+    * centroid) so the output is flat-sortable. Each (label, dim) group's
+    * values are summed in vec_id order. This is the exact audit
+    * formulation; a production 100 TB run uses plain avg()
     * (map-side combining, no per-group collect) and tolerates last-ulp
     * drift. Group state here is bounded by class size at test SF. */
   def qClassCentroids(s: SparkSession, dir: String): DataFrame =
@@ -203,10 +194,7 @@ object SimilaritySearch extends QueryModule {
       .select(col("label"), col("dim"), col("vec_id"), col("v").cast("double").as("v"))
       .groupBy("label", "dim")
       .agg(count(lit(1)).as("n"),
-        aggregate(
-          transform(array_sort(collect_list(struct(col("vec_id"), col("v")))),
-            x => x.getField("v")),
-          lit(0.0), (acc, x) => acc + x).as("s"))
+        OrderedFold.sum(col("v"), col("vec_id")).as("s"))
       .select(col("label"), col("dim"), col("n"),
         round(col("s") / col("n"), 6).as("centroid"))
 
@@ -241,8 +229,7 @@ object SimilaritySearch extends QueryModule {
   def qRocchio(s: SparkSession, dir: String): DataFrame = {
     val cv = qClassCentroids(s, dir)
       .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("centroid")))),
-        x => x.getField("centroid")).as("cv"))
+      .agg(OrderedFold.values(col("centroid"), col("dim")).as("cv"))
       .select(col("label").as("pred_label"), col("cv"))
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label").as("true_label"),
@@ -296,8 +283,7 @@ object SimilaritySearch extends QueryModule {
   def qEmbedOutliers(s: SparkSession, dir: String): DataFrame = {
     val cv = qClassCentroids(s, dir)
       .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("centroid")))),
-        x => x.getField("centroid")).as("cv"))
+      .agg(OrderedFold.values(col("centroid"), col("dim")).as("cv"))
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -666,17 +652,21 @@ object SimilaritySearch extends QueryModule {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val fits = (0 until PqM).map { m =>
-      Future {
-        val sub = base.select(array_to_vector(slice(col("v"), m * PqSubDim + 1, PqSubDim)).as("features"))
-        val km = new org.apache.spark.ml.clustering.KMeans()
-          .setK(PqK).setSeed(seedBase + m).setInitMode("random").setMaxIter(10).fit(sub)
-        km.clusterCenters.zipWithIndex.toSeq
-          .map { case (c, i) => (m, i, c.toArray.toSeq) }
+    // try/finally: a fit that throws must not leave `base` cached for
+    // the rest of the session
+    val rows = try {
+      val fits = (0 until PqM).map { m =>
+        Future {
+          val sub = base.select(array_to_vector(slice(col("v"), m * PqSubDim + 1, PqSubDim))
+            .as("features"))
+          val km = new org.apache.spark.ml.clustering.KMeans()
+            .setK(PqK).setSeed(seedBase + m).setInitMode("random").setMaxIter(10).fit(sub)
+          km.clusterCenters.zipWithIndex.toSeq
+            .map { case (c, i) => (m, i, c.toArray.toSeq) }
+        }
       }
-    }
-    val rows = Await.result(Future.sequence(fits), Duration.Inf).flatten
-    base.unpersist()
+      Await.result(Future.sequence(fits), Duration.Inf).flatten
+    } finally base.unpersist()
     import s.implicits._
     rows.toDF("m", "code", "centroid")
   }
@@ -911,10 +901,7 @@ object SimilaritySearch extends QueryModule {
     top1.crossJoin(broadcast(hits))
       .groupBy("n_hit")
       .agg(count(lit(1)).as("n_queries"),
-        aggregate(
-          transform(array_sort(collect_list(struct(col("q_id"), col("cos_sim").as("t")))),
-            x => x.getField("t")),
-          lit(0.0), (acc, x) => acc + x).as("cos_mass"))
+        OrderedFold.sum(col("cos_sim"), col("q_id")).as("cos_mass"))
       .select(col("n_queries"),
         round(col("cos_mass"), 6).as("exact_top1_cos_mass"),
         (col("n_hit") * AnnAuditRecallDen >= col("n_queries") * AnnAuditRecallNum)
@@ -1182,10 +1169,7 @@ object SimilaritySearch extends QueryModule {
     val dcgTerm = col("rel").cast("double") / log2(col("rank") + 1)
     val agg = top.groupBy("q_id", "q_label")
       .agg(sum(col("rel")).as("n_rel_topk"),
-        aggregate(
-          transform(array_sort(collect_list(struct(col("rank"), dcgTerm.as("term")))),
-            x => x.getField("term")),
-          lit(0.0), (acc, x) => acc + x).as("dcg"))
+        OrderedFold.sum(dcgTerm, col("rank")).as("dcg"))
     val idcg = aggregate(
       transform(sequence(lit(1L), least(lit(k.toLong), col("n_rel_corpus"))),
         i => lit(1.0) / log2(i.cast("double") + 1)),
@@ -1340,10 +1324,7 @@ object SimilaritySearch extends QueryModule {
     val rch = knn.join(kd.select(col("i").as("j"), col("kdist").as("kd_j")),
         Seq("j"))
       .select(col("i"), col("j"), greatest(col("kd_j"), col("d")).as("reach"))
-    def foldBy(by: Column, term: Column) =
-      aggregate(transform(array_sort(collect_list(struct(by,
-        term.as("t")))), r => r.getField("t")), lit(0.0), (a, t) => a + t)
-    val lrd = rch.groupBy("i").agg(foldBy(col("j"), col("reach")).as("sr"))
+    val lrd = rch.groupBy("i").agg(OrderedFold.sum(col("reach"), col("j")).as("sr"))
       .select(col("i"),
         when(col("sr") > 0, lit(LofK.toDouble) / col("sr")).as("lrd"))
     // NULL-lrd neighbors (all-zero reach sums from ≥k duplicate vectors)
@@ -1353,7 +1334,7 @@ object SimilaritySearch extends QueryModule {
     val slrd = knn
       .join(lrd.select(col("i").as("j"), col("lrd").as("lrd_j")), Seq("j"))
       .filter(col("lrd_j").isNotNull)
-      .groupBy("i").agg(foldBy(col("j"), col("lrd_j")).as("slrd"))
+      .groupBy("i").agg(OrderedFold.sum(col("lrd_j"), col("j")).as("slrd"))
     kd.join(lrd, Seq("i")).join(slrd, Seq("i"))
       .select(col("i").as("vec_id"), round(col("kdist"), 6).as("kdist"),
         round(col("lrd"), 6).as("lrd"),
@@ -1859,10 +1840,8 @@ object SimilaritySearch extends QueryModule {
       .filter(col("label_a") < col("label_b"))
       .groupBy(col("label_a"), col("label_b"),
         col("ta").as("n_a"), col("tb").as("n_b"))
-      .agg(round(aggregate(
-        array_sort(collect_list(struct(col("bucket"),
-          ((pa - pb) * log(pa / pb)).as("t")))),
-        lit(0.0), (acc, x) => acc + x.getField("t")), 6).as("psi"))
+      .agg(round(OrderedFold.sum((pa - pb) * log(pa / pb), col("bucket")), 6)
+        .as("psi"))
       .select("label_a", "label_b", "n_a", "n_b", "psi")
   }
 

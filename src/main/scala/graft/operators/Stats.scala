@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Cert, Oracle, Q, QueryModule}
-import graft.functions.Ranks
+import graft.functions.{OrderedFold, Ranks}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -340,10 +340,8 @@ object Stats extends QueryModule {
     val pb = (col("nb") + 1).cast("double") / (col("tb") + 10)
     dense.join(tot, Seq("event_type"))
       .groupBy(col("event_type"), col("ta").as("n_a"), col("tb").as("n_b"))
-      .agg(round(aggregate(
-        array_sort(collect_list(struct(col("bucket"),
-          ((pa - pb) * log(pa / pb)).as("t")))),
-        lit(0.0), (acc, x) => acc + x.getField("t")), 6).as("psi"))
+      .agg(round(OrderedFold.sum((pa - pb) * log(pa / pb), col("bucket")), 6)
+        .as("psi"))
       .select("event_type", "n_a", "n_b", "psi")
   }
 
@@ -1387,20 +1385,18 @@ object Stats extends QueryModule {
           .as("d"))
       .select(col("*"), (col("a") + col("b") + col("c") + col("d")).as("n"))
       .filter(col("n") >= 2)
-    def fold(term: Column, name: String) =
-      aggregate(transform(array_sort(collect_list(struct(col("channel"),
-        term.as("t")))), r => r.getField("t")), lit(0.0), (x, t) => x + t)
-        .as(name)
     val nD = col("n").cast("double")
     val m = cells.groupBy()
       .agg(count(lit(1)).as("k_strata"), sum(col("a")).as("sum_a"),
-        fold(col("a").cast("double") * col("d") / nD, "num"),
-        fold(col("b").cast("double") * col("c") / nD, "den"),
-        fold((col("a") + col("b")).cast("double") * (col("a") + col("c"))
-          / nD, "se"),
-        fold((col("a") + col("b")).cast("double") * (col("c") + col("d"))
+        OrderedFold.sum(col("a").cast("double") * col("d") / nD, col("channel"))
+          .as("num"),
+        OrderedFold.sum(col("b").cast("double") * col("c") / nD, col("channel"))
+          .as("den"),
+        OrderedFold.sum((col("a") + col("b")).cast("double") * (col("a") + col("c"))
+          / nD, col("channel")).as("se"),
+        OrderedFold.sum((col("a") + col("b")).cast("double") * (col("c") + col("d"))
           * (col("a") + col("c")) * (col("b") + col("d"))
-          / (nD * nD * (nD - 1.0)), "sv"))
+          / (nD * nD * (nD - 1.0)), col("channel")).as("sv"))
     val chi2 = (col("sum_a").cast("double") - col("se")) *
       (col("sum_a").cast("double") - col("se")) / col("sv")
     m.select(col("k_strata"), col("sum_a"),
@@ -1472,14 +1468,11 @@ object Stats extends QueryModule {
       pc * (lit(1.0) - pc) / col("n_c")
     val scored = ch.select(col("channel"), (pt - pc).as("theta"), v.as("v"))
       .filter(col("v") > 0)
-    def fold(term: Column, name: String) =
-      aggregate(transform(array_sort(collect_list(struct(col("channel"),
-        term.as("t")))), r => r.getField("t")), lit(0.0), (a, t) => a + t)
-        .as(name)
     val m = scored.groupBy().agg(count(lit(1)).as("k"),
-      fold(lit(1.0) / col("v"), "sw"),
-      fold(col("theta") / col("v"), "swt"),
-      fold(col("theta") * col("theta") / col("v"), "swt2"))
+      OrderedFold.sum(lit(1.0) / col("v"), col("channel")).as("sw"),
+      OrderedFold.sum(col("theta") / col("v"), col("channel")).as("swt"),
+      OrderedFold.sum(col("theta") * col("theta") / col("v"), col("channel"))
+        .as("swt2"))
     val theta = col("swt") / col("sw")
     val q = col("swt2") - col("swt") * col("swt") / col("sw")
     val z = (col("swt") / col("sw")) / sqrt(lit(1.0) / col("sw"))
@@ -1839,12 +1832,9 @@ object Stats extends QueryModule {
       .select(col("test"), col("t"),
         (w * (col("d1").cast("double") - e1)).as("u"),
         (w * w * v).as("wv"))
-    def fold(term: Column, name: String) =
-      aggregate(transform(array_sort(collect_list(struct(col("t"),
-        term.as("x")))), r => r.getField("x")), lit(0.0), (a, x) => a + x)
-        .as(name)
     val agg = terms.groupBy("test")
-      .agg(fold(col("u"), "su"), fold(col("wv"), "sv"))
+      .agg(OrderedFold.sum(col("u"), col("t")).as("su"),
+        OrderedFold.sum(col("wv"), col("t")).as("sv"))
     val z = col("su") / sqrt(col("sv"))
     agg.select(col("test"),
       when(col("sv") > 0, round(z, 6)).as("z"),
@@ -1923,14 +1913,12 @@ object Stats extends QueryModule {
       .select(col("*") +:
         (1 to AcfMaxLag).map(k => lead(col("y"), k).over(w).as(s"y$k")): _*)
       .join(m, Seq("event_type"))
-    def fold(term: Column, name: String) =
-      aggregate(array_sort(collect_list(struct(col("day"), term.as("x")))),
-        lit(0.0), (acc, r) => acc + r.getField("x")).as(name)
     val aggExprs =
-      fold((col("y") - col("ybar")) * (col("y") - col("ybar")), "den") +:
-        (1 to AcfMaxLag).map(k => fold(coalesce(
+      OrderedFold.sum((col("y") - col("ybar")) * (col("y") - col("ybar")), col("day"))
+        .as("den") +:
+        (1 to AcfMaxLag).map(k => OrderedFold.sum(coalesce(
           (col("y") - col("ybar")) * (col(s"y$k") - col("ybar")), lit(0.0)),
-          s"num$k"))
+          col("day")).as(s"num$k"))
     led.groupBy("event_type", "n_days")
       .agg(aggExprs.head, aggExprs.tail: _*)
   }
@@ -2179,15 +2167,13 @@ object Stats extends QueryModule {
       .select(col("*"), lead(col("y"), 1).over(w).as("y1"),
         lead(col("y"), 2).over(w).as("y2"))
       .crossJoin(broadcast(m))
-    def fold(term: Column, name: String) =
-      aggregate(array_sort(collect_list(struct(col("day"), term.as("x")))),
-        lit(0.0), (acc, r) => acc + r.getField("x")).as(name)
     val agg = led.groupBy("n_days").agg(
-      fold((col("y") - col("ybar")) * (col("y") - col("ybar")), "den"),
-      fold(coalesce((col("y") - col("ybar")) * (col("y1") - col("ybar")),
-        lit(0.0)), "num1"),
-      fold(coalesce((col("y") - col("ybar")) * (col("y2") - col("ybar")),
-        lit(0.0)), "num2"))
+      OrderedFold.sum((col("y") - col("ybar")) * (col("y") - col("ybar")), col("day"))
+        .as("den"),
+      OrderedFold.sum(coalesce((col("y") - col("ybar")) * (col("y1") - col("ybar")),
+        lit(0.0)), col("day")).as("num1"),
+      OrderedFold.sum(coalesce((col("y") - col("ybar")) * (col("y2") - col("ybar")),
+        lit(0.0)), col("day")).as("num2"))
     val lastTwo = daily.withColumn("rk",
         row_number().over(Window.orderBy(col("day").desc)))
       .filter(col("rk") <= 2)
@@ -2312,13 +2298,9 @@ object Stats extends QueryModule {
         (lit(1.0) / col("n") +
           (col("x") - col("xbar")) * (col("x") - col("xbar")) / col("sxx"))
           .as("h"))
-    // s² = SSE/(n−2): SSE from the SAME residuals, one more aggregate —
-    // e is a deterministic double per row, summed as a day-ordered fold
-    // (calendar-bounded, the k-bounded ordered-fold rule)
+    // s² = SSE/(n−2): SSE from the SAME residuals, one more aggregate
     val sse = joined.groupBy("event_type")
-      .agg(aggregate(transform(array_sort(collect_list(struct(col("day"),
-        (col("e") * col("e")).as("t")))), r => r.getField("t")),
-        lit(0.0), (acc, t) => acc + t).as("sse"))
+      .agg(OrderedFold.sum(col("e") * col("e"), col("day")).as("sse"))
     joined.join(sse, Seq("event_type"))
       .filter(col("n") > 2.0 && col("h") < 1.0)
       .select(col("event_type"),
@@ -3031,10 +3013,6 @@ object Stats extends QueryModule {
         coalesce(sum(when(col("treat"), col("y"))), zero).as("syt"),
         coalesce(sum(when(!col("treat"), col("y"))), zero).as("syc"))
       .filter(col("nt") > 0 && col("nc") > 0)
-    def fold(term: Column, name: String) =
-      aggregate(transform(array_sort(collect_list(struct(col("xbin"),
-        col("cbin"), term.as("t")))), r => r.getField("t")),
-        lit(0.0), (a, t) => a + t).as(name)
     val naive = perUser.groupBy("treat")
       .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
       .groupBy()
@@ -3044,9 +3022,10 @@ object Stats extends QueryModule {
     strata.groupBy()
       .agg(count(lit(1)).as("n_strata"),
         sum(col("nt")).as("n_treated"), sum(col("nc")).as("n_control"),
-        fold(col("nt").cast("double") *
+        OrderedFold.sum(col("nt").cast("double") *
           (col("syt").cast("double") / col("nt").cast("double") -
-            col("syc").cast("double") / col("nc").cast("double")), "att_num"))
+            col("syc").cast("double") / col("nc").cast("double")),
+          col("xbin"), col("cbin")).as("att_num"))
       .crossJoin(naive)
       .select(col("n_strata"), col("n_treated"), col("n_control"),
         round(col("att_num") / col("n_treated").cast("double"), 6).as("att"),
@@ -3490,9 +3469,7 @@ object Stats extends QueryModule {
       .select(col("brand"), col("supp"), col("n_sup"),
         (col("rev").cast("double") / col("tot").cast("double")).as("sh"))
     val hhi = sh.groupBy("brand", "n_sup")
-      .agg(aggregate(transform(array_sort(collect_list(struct(col("supp"),
-          (col("sh") * col("sh")).as("s2")))), r => r.getField("s2")),
-        lit(0.0), (a, t) => a + t).as("hhi"),
+      .agg(OrderedFold.sum(col("sh") * col("sh"), col("supp")).as("hhi"),
         max(col("sh")).as("top_share"))
     val nD = col("n_sup").cast("double")
     hhi.select(col("brand"), col("n_sup"), round(col("hhi"), 6).as("hhi"),
@@ -4109,11 +4086,11 @@ object Stats extends QueryModule {
         abs(col("h.y") - col("h.fit")).as("e_hw"),
         ((col("h.y") - col("h.fit")) * (col("h.y") - col("h.fit"))).as("e2_hw"),
         abs(col("h.y") - col("y_prev")).as("e_n1"))
-    def fold(c: String) =
-      aggregate(array_sort(collect_list(struct(col("day"), col(c).as("x")))),
-        lit(0.0), (acc, r) => acc + r.getField("x")).as(c + "_sum")
     rows.groupBy("event_type")
-      .agg(count(lit(1)).as("n_eval"), fold("e_hw"), fold("e2_hw"), fold("e_n1"))
+      .agg(count(lit(1)).as("n_eval"),
+        OrderedFold.sum(col("e_hw"), col("day")).as("e_hw_sum"),
+        OrderedFold.sum(col("e2_hw"), col("day")).as("e2_hw_sum"),
+        OrderedFold.sum(col("e_n1"), col("day")).as("e_n1_sum"))
       .select(col("event_type"), col("n_eval"),
         round(col("e_hw_sum") / col("n_eval").cast("double"), 6).as("mae_hw"),
         round(sqrt(col("e2_hw_sum") / col("n_eval").cast("double")), 6)
@@ -4823,14 +4800,11 @@ object Stats extends QueryModule {
         (col("tot").cast("double") - col("a") -
           col("b") * col("t").cast("double")).as("e"))
       .withColumn("ep", lag(col("e"), 1).over(w))
-    def fold(term: Column, name: String) =
-      aggregate(array_sort(collect_list(struct(col("day"), term.as("x")))),
-        lit(0.0), (acc, r) => acc + r.getField("x")).as(name)
     val agg = resid.groupBy("event_type").agg(
       max(col("n")).as("n_days"),
-      fold(col("e") * col("e"), "den"),
-      fold(coalesce((col("e") - col("ep")) * (col("e") - col("ep")),
-        lit(0.0)), "num"))
+      OrderedFold.sum(col("e") * col("e"), col("day")).as("den"),
+      OrderedFold.sum(coalesce((col("e") - col("ep")) * (col("e") - col("ep")),
+        lit(0.0)), col("day")).as("num"))
     val ok = col("n_days") >= 3 && col("den") > 0
     agg.select(col("event_type"), col("n_days"),
       when(ok, round(col("num") / col("den"), 6)).as("dw"),
@@ -4993,8 +4967,7 @@ object Stats extends QueryModule {
       sum(col("nj")).as("n"),
       sum(col("s")).cast("double").as("stot"),
       sum(col("ss")).cast("double").as("sstot"),
-      aggregate(array_sort(collect_list(struct(col("g"), col("term")))),
-        lit(0.0), (acc, x) => acc + x.getField("term")).as("sb"))
+      OrderedFold.sum(col("term"), col("g")).as("sb"))
     val nn = col("n").cast("double")
     val cf = col("stot") * col("stot") / nn
     val ssb = col("sb") - cf
@@ -5051,20 +5024,18 @@ object Stats extends QueryModule {
             col("s").cast("double") * col("s").cast("double") /
               col("nj").cast("double")) /
             (col("nj") - 1).cast("double")).otherwise(lit(0.0)).as("v"))
-    def fold(term: Column, name: String) =
-      aggregate(array_sort(collect_list(struct(col("g"), term.as("t")))),
-        lit(0.0), (acc, x) => acc + x.getField("t")).as(name)
     val m = g.agg(
       count(lit(1)).as("k"), sum(col("nj")).as("n"),
       min(col("v")).as("minv"), min(col("nj")).as("minn"),
-      fold((col("nj") - 1).cast("double") * col("v"), "sw"),
-      fold((col("nj") - 1).cast("double") *
-        log(when(col("v") > 0, col("v")).otherwise(lit(1.0))), "sl"),
+      OrderedFold.sum((col("nj") - 1).cast("double") * col("v"), col("g")).as("sw"),
+      OrderedFold.sum((col("nj") - 1).cast("double") *
+        log(when(col("v") > 0, col("v")).otherwise(lit(1.0))), col("g")).as("sl"),
       // the 1/(nj−1) term needs its own singleton guard: under ANSI
       // mode 1/0 THROWS in Spark (DuckDB yields inf) — the gate below
       // nulls the output either way, but the fold must not error
-      fold(when(col("nj") > 1,
-        lit(1.0) / (col("nj") - 1).cast("double")).otherwise(lit(0.0)), "si"))
+      OrderedFold.sum(when(col("nj") > 1,
+        lit(1.0) / (col("nj") - 1).cast("double")).otherwise(lit(0.0)), col("g"))
+        .as("si"))
     val nk = (col("n") - col("k")).cast("double")
     val t = nk * log(col("sw") / nk) - col("sl")
     val c = lit(1.0) +
@@ -5147,8 +5118,7 @@ object Stats extends QueryModule {
     val m = g.agg(
       count(lit(1)).as("k"), sum(col("nj")).as("n"),
       sum(col("ss")).cast("double").as("sstot"),
-      aggregate(array_sort(collect_list(struct(col("g"), col("term")))),
-        lit(0.0), (acc, x) => acc + x.getField("term")).as("sb"))
+      OrderedFold.sum(col("term"), col("g")).as("sb"))
       .select(col("k"), col("n"),
         // MSW = SSW/(N−k) = (Σss − Σⱼsⱼ²/nⱼ)/(N−k)
         ((col("sstot") - col("sb")) /
@@ -5371,9 +5341,7 @@ object Stats extends QueryModule {
     seg.withColumn("sym", sym)
       .groupBy("event_type", "n")
       .agg(count(lit(1)).as("n_segments"),
-        concat_ws("", transform(
-          array_sort(collect_list(struct(col("seg"), col("sym").as("s")))),
-          x => x.getField("s"))).as("sax"))
+        concat_ws("", OrderedFold.values(col("sym"), col("seg"))).as("sax"))
       .select(col("event_type"), col("n").as("n_days"),
         col("n_segments"), col("sax"))
   }
@@ -5571,8 +5539,7 @@ object Stats extends QueryModule {
       .groupBy("event_type", "day")
       .agg(sum(col("v")).cast("decimal(18,6)").as("y"))
     val series = daily.groupBy("event_type")
-      .agg(transform(array_sort(collect_list(struct(col("day"), col("y")))),
-        r => r.getField("y")).as("ys"))
+      .agg(OrderedFold.values(col("y"), col("day")).as("ys"))
     val pairs = series.select(col("event_type").as("ta"), col("ys").as("a"))
       .crossJoin(series.select(col("event_type").as("tb"), col("ys").as("b")))
       .filter(col("ta") < col("tb"))
@@ -5955,10 +5922,8 @@ object Stats extends QueryModule {
       (count(lit(1)) / k).cast("long").as("n_blocks"))
     val rj = ranked.groupBy("g")
       .agg(sum(col("ar")).cast("decimal(38,1)").as("rj"))
-      .agg(aggregate(array_sort(collect_list(struct(col("g"), col("rj")))),
-        lit(0.0), (acc, x) =>
-          acc + x.getField("rj").cast("double") * x.getField("rj").cast("double"))
-        .as("sr2"))
+      .agg(OrderedFold.sum(col("rj").cast("double") * col("rj").cast("double"),
+        col("g"), col("rj")).as("sr2"))
       .crossJoin(broadcast(ties))
     val nD = col("n_blocks").cast("double")
     val kD = lit(k.toDouble)
@@ -6159,8 +6124,7 @@ object Stats extends QueryModule {
       sum(col("nw")).as("n_days"),
       sum(col("sw")).cast("double").as("stot"),
       sum(col("ssw")).cast("double").as("sstot"),
-      aggregate(array_sort(collect_list(struct(col("weekday"), col("term")))),
-        lit(0.0), (acc, x) => acc + x.getField("term")).as("sb"))
+      OrderedFold.sum(col("term"), col("weekday")).as("sb"))
     val cf = col("stot") * col("stot") / col("n_days").cast("double")
     val fs = (col("sb") - cf) / (col("sstot") - cf)
     m.select(col("event_type"), col("n_days"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Ml, Oracle, Q, QueryModule}
-import graft.functions.TextFns
+import graft.functions.{OrderedFold, TextFns}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -580,10 +580,9 @@ object TextAnalysis extends QueryModule {
     * content signatures can't give. Everything after one corpus scan is
     * bounded (m × k grid, k² pairs): top-m by collection frequency with
     * a deterministic (cf desc, token asc) tie-break; per-token mean/std
-    * across sources and the per-pair |Δz| sums are ordered sorted-array
-    * folds so both engines walk identical IEEE additions; zero-variance
-    * tokens are excluded from the mean (same exact doubles → same
-    * exclusion set cross-engine), their count visible via m_used. */
+    * across sources and the per-pair |Δz| sums are ordered folds;
+    * zero-variance tokens are excluded from the mean (same exact doubles
+    * → same exclusion set cross-engine), their count visible via m_used. */
   def qBurrows(s: SparkSession, dir: String): DataFrame = {
     val toks = TextPrep.rawDocs(s, dir)
       .select(col("source"), explode(col("rtoks")).as("t"))
@@ -604,15 +603,10 @@ object TextAnalysis extends QueryModule {
       .select(col("t"), col("source"),
         (col("c").cast("double") / col("n_s").cast("double")).as("f"))
       .localCheckpoint(true)
-    def fold(src: DataFrame, key: String, ord: String, term: Column,
-        name: String) =
-      src.groupBy(key)
-        .agg(count(lit(1)).as(s"${name}_n"),
-          aggregate(array_sort(collect_list(struct(col(ord), term.as("v")))),
-            lit(0.0), (acc, x) => acc + x.getField("v")).as(name))
-    val sf = fold(grid, "t", "source", col("f"), "sf")
-    val sf2 = fold(grid, "t", "source", col("f") * col("f"), "sf2")
-    val st = sf.join(sf2, Seq("t"))
+    val st = grid.groupBy("t")
+      .agg(count(lit(1)).as("sf_n"),
+        OrderedFold.sum(col("f"), col("source")).as("sf"),
+        OrderedFold.sum(col("f") * col("f"), col("source")).as("sf2"))
       .select(col("t"), col("sf_n").as("k"),
         (col("sf") / col("sf_n").cast("double")).as("mu"),
         sqrt((col("sf_n").cast("double") * col("sf2") - col("sf") * col("sf")) /
@@ -628,8 +622,7 @@ object TextAnalysis extends QueryModule {
         col("a.t").as("t"), abs(col("a.z") - col("b.z")).as("dz"))
     pairs.groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("m_used"),
-        aggregate(array_sort(collect_list(struct(col("t"), col("dz").as("v")))),
-          lit(0.0), (acc, x) => acc + x.getField("v")).as("sd"))
+        OrderedFold.sum(col("dz"), col("t")).as("sd"))
       .select(col("source_a"), col("source_b"), col("m_used"),
         round(col("sd") / col("m_used").cast("double"), 6).as("delta"))
   }
@@ -1913,11 +1906,8 @@ object TextAnalysis extends QueryModule {
     * per-doc running stopword count (doc-bounded window), word stats one
     * (w) aggregation, phrase scores one (phrase) aggregation — all
     * value-domain-sized after the first groupBy; top-k is a distributed
-    * TakeOrdered, never a global single-partition window. Determinism:
-    * the per-phrase double sum is the ordered fold (q_anova discipline,
-    * list_sum(list(… ORDER BY pos)) in the oracle), so ranking compares
-    * byte-identical doubles in both engines; ties break (n_occur desc,
-    * phrase asc). */
+    * TakeOrdered, never a global single-partition window. Ties break
+    * (n_occur desc, phrase asc). */
   def qRake(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stopArr = array(TextFns.Stopwords.map(lit): _*)
@@ -1933,9 +1923,7 @@ object TextAnalysis extends QueryModule {
       .filter(!col("stop"))
       .select(col("doc_id"), col("grp"), col("pos"), col("w"))
     val occ = members.groupBy("doc_id", "grp")
-      .agg(concat_ws(" ",
-          transform(array_sort(collect_list(struct(col("pos"), col("w")))),
-            x => x.getField("w"))).as("phrase"),
+      .agg(concat_ws(" ", OrderedFold.values(col("w"), col("pos"))).as("phrase"),
         count(lit(1)).as("len"))
       .localCheckpoint(true)
     // word stats come from occ ITSELF (r22): a phrase is exactly its
@@ -1955,8 +1943,7 @@ object TextAnalysis extends QueryModule {
       .join(wsc, Seq("w"))
       .groupBy("phrase", "n_occur")
       .agg(count(lit(1)).as("n_words"),
-        aggregate(array_sort(collect_list(struct(col("pos"), col("wscore")))),
-          lit(0.0), (a, x) => a + x.getField("wscore")).as("score"))
+        OrderedFold.sum(col("wscore"), col("pos")).as("score"))
     val top = scored
       .orderBy(col("score").desc, col("n_occur").desc, col("phrase").asc)
       .limit(RakeTopK)

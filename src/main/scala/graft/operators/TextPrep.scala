@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Ml, Oracle, Q, QueryModule}
-import graft.functions.TextFns
+import graft.functions.{OrderedFold, TextFns}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -219,8 +219,7 @@ object TextPrep extends QueryModule {
     val kept = toks.join(vocab.select("tok"), Seq("tok"), "left_semi")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("kept_n"),
-        array_join(transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
-          x => x.getField("tok")), " ").as("english"))
+        array_join(OrderedFold.values(col("tok"), col("pos")), " ").as("english"))
     docs.select(col("doc_id"), size(col("toks")).cast("long").as("n_toks"))
       .join(kept, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
@@ -261,9 +260,8 @@ object TextPrep extends QueryModule {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
-        md5(array_join(transform(
-          array_sort(collect_list(struct(col("doc_id"), col("text")))),
-          x => x.getField("text")), "\n")).as("content_md5"))
+        md5(array_join(OrderedFold.values(col("text"), col("doc_id")), "\n"))
+          .as("content_md5"))
 
   private val qConceptDocsSql =
     """SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars,

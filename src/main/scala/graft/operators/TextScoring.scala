@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.{Oracle, Q, QueryModule}
-import graft.functions.TextFns
+import graft.functions.{OrderedFold, TextFns}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus-scoring operators a large-scale training-data pipeline runs on
@@ -295,9 +295,8 @@ object TextScoring extends QueryModule {
     * correctly rounded by every IEEE implementation, so both engines
     * compute the identical weight (a general pow(x, 0.7) is NOT
     * guaranteed bit-identical across libm builds). The normalizer Z is a
-    * language-count-sized fold summed in sorted-lang order (the
-    * q_class_centroids ordered-fold rule). Complements q_mix_rates'
-    * budget-capped planner with the temperature-law planner. */
+    * language-count-sized fold summed in sorted-lang order. Complements
+    * q_mix_rates' budget-capped planner with the temperature-law planner. */
   def qTempSampling(s: SparkSession, dir: String): DataFrame = {
     val tok = TextPrep.rawDocs(s, dir)
       .select(col("lang"), size(col("rtoks")).cast("long").as("nt"))
@@ -308,10 +307,7 @@ object TextScoring extends QueryModule {
         sqrt(col("toks").cast("double") / col("t")).as("s"),
         (col("toks").cast("double") / col("t")).as("p"))
     val z = withP
-      .agg(aggregate(
-        transform(array_sort(collect_list(struct(col("lang"), col("s")))),
-          x => x.getField("s")),
-        lit(0.0), (acc, x) => acc + x).as("z"))
+      .agg(OrderedFold.sum(col("s"), col("lang")).as("z"))
     withP.crossJoin(broadcast(z))
       .select(col("lang"), col("n_docs"), col("toks"),
         round(col("p"), 6).as("p"),
@@ -326,16 +322,14 @@ object TextScoring extends QueryModule {
     * variance by n/ESS, the standard survey-sampling diagnostic):
     * ESS = (Σ_d w_d)² / Σ_d w_d² with w_d the doc's language boost, so
     * both sums collapse to per-language n_l·b and n_l·b² — k-term
-    * ordered sorted-array folds over the language relation, no fp
-    * outside them. ess_frac = ESS/n ∈ (0, 1]; 1 ⇔ uniform weights. */
+    * ordered folds over the language relation, no fp outside them.
+    * ess_frac = ESS/n ∈ (0, 1]; 1 ⇔ uniform weights. */
   def qEss(s: SparkSession, dir: String): DataFrame = {
     val w = qTempSampling(s, dir).select(col("lang"), col("n_docs"), col("boost"))
-    def fold(term: Column, name: String) =
-      aggregate(array_sort(collect_list(struct(col("lang"), term.as("v")))),
-        lit(0.0), (acc, x) => acc + x.getField("v")).as(name)
     val m = w.agg(count(lit(1)).as("k"), sum(col("n_docs")).as("n"),
-      fold(col("n_docs").cast("double") * col("boost"), "sw"),
-      fold(col("n_docs").cast("double") * col("boost") * col("boost"), "sw2"))
+      OrderedFold.sum(col("n_docs").cast("double") * col("boost"), col("lang")).as("sw"),
+      OrderedFold.sum(col("n_docs").cast("double") * col("boost") * col("boost"),
+        col("lang")).as("sw2"))
     val ess = col("sw") * col("sw") / col("sw2")
     m.select(col("k"), col("n"), round(ess, 6).as("ess"),
       round(ess / col("n").cast("double"), 6).as("ess_frac"))
@@ -562,9 +556,6 @@ object TextScoring extends QueryModule {
     val pbar = col("sp").cast("double") / (col("nk").cast("double") * BrierScale.toDouble)
     val ybk = col("sy").cast("double") / col("nk").cast("double")
     val ybar = col("sum_y").cast("double") / col("n").cast("double")
-    def fold(name: String) =
-      aggregate(array_sort(collect_list(struct(col("bin"), col(name).as("x")))),
-        lit(0.0), (acc, r) => acc + r.getField("x")).as(name + "_sum")
     perBin.crossJoin(broadcast(tot))
       .select(col("bin"), col("n"), col("sum_y"), col("ssq_all"),
         (col("nk").cast("double") * ((pbar - ybk) * (pbar - ybk))).as("rel_t"),
@@ -576,7 +567,10 @@ object TextScoring extends QueryModule {
           col("sp").cast("double") * col("sy").cast("double") / col("nk").cast("double"))
           / BrierScale.toDouble).as("wbc_t"))
       .groupBy(col("n"), col("sum_y"), col("ssq_all"))
-      .agg(fold("rel_t"), fold("res_t"), fold("wbv_t"), fold("wbc_t"))
+      .agg(OrderedFold.sum(col("rel_t"), col("bin")).as("rel_t_sum"),
+        OrderedFold.sum(col("res_t"), col("bin")).as("res_t_sum"),
+        OrderedFold.sum(col("wbv_t"), col("bin")).as("wbv_t_sum"),
+        OrderedFold.sum(col("wbc_t"), col("bin")).as("wbc_t_sum"))
       .select(col("n"), col("sum_y").as("n_pass"),
         round(col("ssq_all").cast("double") /
           (col("n").cast("double") * BrierScaleSq), 6).as("brier"),

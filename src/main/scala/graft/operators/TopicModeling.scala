@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Cert, Ml, Oracle, Q, QueryModule}
-import graft.functions.TextFns
+import graft.functions.{OrderedFold, TextFns}
 import graft.sources.Tables
 import org.apache.spark.ml.clustering.{LDA, LDAModel}
 import org.apache.spark.ml.feature.CountVectorizer
@@ -202,18 +202,15 @@ object TopicModeling extends QueryModule {
 
   /** u_mass per topic over a substrate: mean over ALL ordered pairs
     * (wi, wj), i>j, of ln((D(wi,wj)+1)/D(wj)) — the Mimno 2011 score as
-    * gensim computes it. The cross-pair double sum is an ordered fold
-    * (the q_anova discipline) so the result is byte-stable run to run. */
+    * gensim computes it. */
   private def umassFromParts(pairs: DataFrame): DataFrame =
     pairs
       .select(col("topic"), col("pos_i"), col("pos_j"),
         log((col("codf") + 1).cast("double") / col("df_j")).as("term"))
       .groupBy("topic")
-      .agg(round(
-        aggregate(
-          array_sort(collect_list(struct(col("pos_i"), col("pos_j"), col("term")))),
-          lit(0.0), (a, x) => a + x.getField("term")) / count(lit(1)), 6)
-        .as("u_mass"), count(lit(1)).as("n_pairs"))
+      .agg(round(OrderedFold.sum(col("term"), col("pos_i"), col("pos_j")) /
+          count(lit(1)), 6).as("u_mass"),
+        count(lit(1)).as("n_pairs"))
 
   /** u_mass coherence of arbitrary topic top terms (the model-select
     * sweep scores every k through this). */
@@ -390,34 +387,26 @@ object TopicModeling extends QueryModule {
     * window counting is one distributed interval-union pass, so it runs
     * beside u_mass. Per topic: each top term's context vector is its
     * NPMI row against the topic's term set, φ_i = cos(v_i, Σ_j v_j),
-    * c_v = mean_i φ_i. All cross-term sums are ordered folds (the
-    * q_anova discipline) so the double math is byte-stable run to run.
+    * c_v = mean_i φ_i.
     * Rows-only gate (LDA-derived term sets); q_coherence_cv_audit
     * SQL-anchors the window machinery. */
   def qCoherenceCv(s: SparkSession, dir: String): DataFrame = {
     val (_, _, npmiAll) = cvParts(s, dir)
     val vs = npmiAll.groupBy("topic", "pos_j")
-      .agg(aggregate(array_sort(collect_list(struct(col("pos_i"), col("npmi")))),
-        lit(0.0), (a, x) => a + x.getField("npmi")).as("vs"))
+      .agg(OrderedFold.sum(col("npmi"), col("pos_i")).as("vs"))
     val vn = vs.groupBy("topic")
-      .agg(aggregate(array_sort(collect_list(struct(col("pos_j"), col("vs")))),
-        lit(0.0), (a, x) => a + x.getField("vs") * x.getField("vs")).as("vs2"))
+      .agg(OrderedFold.sum(col("vs") * col("vs"), col("pos_j"), col("vs")).as("vs2"))
     val ci = npmiAll.join(vs, Seq("topic", "pos_j"))
       .groupBy("topic", "pos_i")
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("pos_j"), col("npmi"), col("vs")))),
-        struct(lit(0.0).as("num"), lit(0.0).as("n2")),
-        (a, x) => struct(
-          (a.getField("num") + x.getField("npmi") * x.getField("vs")).as("num"),
-          (a.getField("n2") + x.getField("npmi") * x.getField("npmi")).as("n2")))
-        .as("acc"))
+      .agg(OrderedFold.sum(col("npmi") * col("vs"), col("pos_j"), col("npmi"), col("vs"))
+          .as("num"),
+        OrderedFold.sum(col("npmi") * col("npmi"), col("pos_j"), col("npmi"), col("vs"))
+          .as("n2"))
       .join(vn, Seq("topic"))
       .select(col("topic"), col("pos_i"),
-        (col("acc.num") / sqrt(col("acc.n2") * col("vs2"))).as("cos"))
+        (col("num") / sqrt(col("n2") * col("vs2"))).as("cos"))
     ci.groupBy("topic")
-      .agg(round(
-        aggregate(array_sort(collect_list(struct(col("pos_i"), col("cos")))),
-          lit(0.0), (a, x) => a + x.getField("cos")) / count(lit(1)), 6).as("c_v"),
+      .agg(round(OrderedFold.sum(col("cos"), col("pos_i")) / count(lit(1)), 6).as("c_v"),
         count(lit(1)).as("n_terms"))
   }
 

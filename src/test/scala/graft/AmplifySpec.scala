@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.VectorMath.dot
 import org.apache.spark.sql.functions._
 
 /** Invariants of the scaling-certification amplifier (graft.Amplify) —
@@ -105,7 +106,7 @@ class AmplifySpec extends SparkSpec {
     assert(math.abs(base - c1) < 1e-12 && math.abs(base - c2) < 1e-12,
       s"within-copy cosines must survive the rotation: $base vs $c1 / $c2")
     val norms = e.filter(col("vec_id") % Amplify.KeyShift === 11L)
-      .select(graft.operators.SimilaritySearch.dot(col("v"), col("v")).as("n2"))
+      .select(dot(col("v"), col("v")).as("n2"))
       .collect().map(_.getDouble(0))
     assert(norms.length === k)
     assert(norms.forall(n => math.abs(n - norms.head) < 1e-12),

@@ -56,4 +56,19 @@ class CountsSpec extends AnyFunSuite {
     val m = re.findFirstMatchIn(fake).get
     assert(m.group(1).toInt != registered && m.group(2).toInt != gated)
   }
+
+  test("a query subset runs in registry order and an unknown name throws " +
+    "(Bench and Verify name their queries through SparkEntry.subset)") {
+    val all = SparkEntry.registry.map(_.name)
+    val picked = Seq(all(40), all(3), all(17))
+    assert(SparkEntry.subset(picked) === Seq(all(3), all(17), all(40)))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.subset(Seq(all(3), "q_typo")))
+    assert(e.getMessage.contains("q_typo"))
+    // Verify rejects the name before it dumps anything or starts a session
+    val out = java.nio.file.Files.createTempDirectory("verify-typo").toFile
+    intercept[IllegalArgumentException](
+      Verify.main(Array(TestSession.sfDir, out.getPath, "q_typo")))
+    assert(out.list().isEmpty)
+  }
 }

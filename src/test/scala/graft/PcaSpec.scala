@@ -48,6 +48,19 @@ class PcaSpec extends SparkSpec {
     }
   }
 
+  test("a PQ codebook fit that throws leaves its training frame uncached") {
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("pq-boom")
+      Seq(0.0)
+    }
+    val train = spark.range(0, 64, 1, 2).select(boom(col("id")).as("v"))
+    val e = intercept[Exception](SimilaritySearch.pqCodebooksOf(spark, train, seedBase = 1L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("pq-boom")), e)
+    val base = train.select(col("v")).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    assert(spark.sharedState.cacheManager.lookupCachedData(base).isEmpty)
+  }
+
   test("principal components are orthonormal and reduce reconstruction error with k") {
     val feats = Tables.embeddings(spark, sfDir)
       .select(array_to_vector(transform(col("embedding"), x => x.cast("double"))).as("features"))
