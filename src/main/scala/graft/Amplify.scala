@@ -99,7 +99,7 @@ object Amplify {
       outDir: String, k: Int, chain: Boolean = false): Unit = {
     require(k >= 1 && k <= 9, s"K must be in 1..9 (alien-range headroom), got $k")
 
-    def rd(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
+    def rd(t: String) = sources.Tables.load(spark, srcDir, t)
     def wr(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     def copies(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =
@@ -177,7 +177,7 @@ object Amplify {
     }, "embeddings")
 
     val counts = Seq("lineitem", "orders", "events", "documents", "embeddings")
-      .map(t => s"$t=${spark.read.parquet(s"$outDir/$t.parquet").count()}")
+      .map(t => s"$t=${sources.Tables.load(spark, outDir, t).count()}")
     println(s"amplify: k=$k src=$srcDir out=$outDir ${counts.mkString(" ")}")
   }
 }

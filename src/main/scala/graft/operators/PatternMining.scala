@@ -3,8 +3,9 @@ package graft.operators
 import graft.{Oracle, Q, QueryModule}
 import graft.functions.OrderedFold
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Sequential-pattern and itemset mining over the event stream — the
   * behavioral-analytics complement to q_copurchase (which mines pairs with
@@ -139,13 +140,26 @@ object PatternMining extends QueryModule {
         col("ts"), col("event_id"), col("event_type")).as("sequence"))
 
   /** q_seq_patterns: event-type sequences (length ≤ 3) appearing in ≥ 10%
-    * of user-days, in temporal order, with support counts. */
+    * of user-days, in temporal order, with support counts.
+    *
+    * MLlib's PrefixSpan runs on the cached sequence RDD (the ml wrapper
+    * maps its frame to a fresh, uncached RDD, so MLlib's passes would each
+    * re-derive the grouped sequences from the events scan). The patterns
+    * are collected — bounded by the support cut — so both RDDs are
+    * released before the frame is returned. */
   def qSeqPatterns(s: SparkSession, dir: String): DataFrame = {
     val seqs = sequences(s, dir)
-    new org.apache.spark.ml.fpm.PrefixSpan()
-      .setSequenceCol("sequence")
-      .setMinSupport(0.1).setMaxPatternLength(3)
-      .findFrequentSequentialPatterns(seqs)
+    val data = seqs.select(col("sequence")).rdd
+      .map(_.getSeq[scala.collection.Seq[String]](0).map(_.toArray).toArray).cache()
+    val found = try {
+      val freq = new org.apache.spark.mllib.fpm.PrefixSpan()
+        .setMinSupport(0.1).setMaxPatternLength(3).run(data).freqSequences
+      try freq.map(f => Row(f.sequence, f.freq)).collect()
+      finally freq.unpersist()
+    } finally data.unpersist()
+    s.createDataFrame(java.util.Arrays.asList(found: _*), StructType(Seq(
+        StructField("sequence", seqs.schema("sequence").dataType, nullable = false),
+        StructField("freq", LongType, nullable = false))))
       .select(array_join(flatten(col("sequence")), " ").as("pattern"), col("freq"))
       .orderBy(col("freq").desc, col("pattern").asc)
   }

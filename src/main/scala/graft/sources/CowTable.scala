@@ -262,8 +262,8 @@ object CowTable {
       .map(_.copy(nullable = true))
     val tableSchema = StructType(baseSchema.fields ++ newFields)
     // materialized once (localCheckpoint): the source plan may be an
-    // expensive CDC transform, and it feeds three consumers below (the
-    // key-uniqueness guard, the touched-bucket collect, the merge join)
+    // expensive CDC transform, and it feeds two consumers below (the
+    // guard aggregate and the merge join)
     val srcCast = src.select((tableSchema.fields.map(f =>
       col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq
       ++ deleteCol.map(d => coalesce(col(d).cast("boolean"), lit(false))
@@ -274,15 +274,14 @@ object CowTable {
     // duplicate keys into the table PERMANENTLY (every later merge fans
     // out further). Delta/Iceberg raise on multiple source matches; so
     // does this seam — one delta-sized aggregate, checked before any write.
-    val Array(nSrc, nKeys) = srcCast
-      .agg(count(lit(1)), count_distinct(col(key))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
+    // The same aggregate detects the touched files from the SOURCE KEYS
+    // (≤B driver-side bucket ints).
+    val guard = srcCast.agg(count(lit(1)), count_distinct(col(key)),
+      collect_set(bucketOf(col(key), man.nBuckets))).head()
+    val (nSrc, nKeys) = (guard.getLong(0), guard.getLong(1))
     require(nSrc == nKeys,
       s"MERGE source has duplicate keys ($nSrc rows, $nKeys distinct $key)")
-    // touched-file detection from the SOURCE KEYS: ≤B driver-side ints
-    val touched = srcCast
-      .select(bucketOf(col(key), man.nBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val touched = guard.getSeq[Int](2).toSet
     val (touchedEntries, untouchedEntries) =
       man.entries.partition { case (b, _) => touched(b) }
     val payload = tableSchema.fieldNames.filterNot(_ == key).toIndexedSeq

@@ -1,13 +1,30 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{ContentSummary, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver's parquet tables (see /root/repo/TESTDATA.md).
+/** Loaders for the driver's parquet tables (see TESTDATA.md).
   *
   * At 100 TB these would be partitioned/bucketed catalog tables; the loader
   * keeps the access path in one place so scan options (pushdown, schema
   * pruning) are centralized. All queries select only the columns they need so
-  * parquet column pruning applies.
+  * parquet column pruning applies. Operators read tables only through here.
+  *
+  * Schemas come from the parquet footer, read on the driver (`schemaOf`),
+  * and are handed to the reader (`spark.read.schema(..).parquet(..)`). A
+  * schema-less `spark.read.parquet` submits a one-task schema-merge job per
+  * call just to read that footer; with the schema given, building a loader,
+  * [[validate]], a `Views` registration or a query's DataFrame runs no job
+  * before execution. The footer is converted by the converter Spark's own
+  * inference uses, so `nanosAsLong`, TIMESTAMP_NTZ and the Spark row-metadata
+  * key resolve exactly as inference would. A read costs a listing and one
+  * footer (~ms), so nothing is cached.
   */
 object Tables {
   val All: Seq[String] = Seq(
@@ -37,13 +54,45 @@ object Tables {
     * means the dir satisfies the catalog (extra columns are allowed). */
   def validate(spark: SparkSession, dir: String): Seq[String] =
     All.flatMap { t =>
-      val have = load(spark, dir, t).schema.fieldNames.toSet
+      val have = schemaOf(spark, pathOf(dir, t)).fieldNames.toSet
       val missing = ExpectedColumns(t).filterNot(have)
       if (missing.isEmpty) None else Some(s"$t: missing ${missing.mkString(", ")}")
     }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = pathOf(dir, name)
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private def pathOf(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** The schema Spark's inference gives `path` (mergeSchema off), read
+    * from one footer on the driver. `path` is a single parquet file (the
+    * driver's tables) or a Spark-written directory (`Amplify` output),
+    * where the footer is the one inference picks: `_common_metadata`,
+    * then `_metadata`, then the first data file by path. A missing path
+    * throws `FileNotFoundException` naming it. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val file = footerFile(p.getFileSystem(conf), p)
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val footer = try in.getFooter finally in.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  private def footerFile(fs: FileSystem, p: Path): Path =
+    if (!fs.getFileStatus(p).isDirectory) p
+    else {
+      val files = fs.listStatus(p).filter(_.isFile).map(_.getPath).sortBy(_.toString)
+      def named(n: String) = files.find(_.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(files.find(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")))
+        .getOrElse(throw new java.io.FileNotFoundException(s"no parquet file under $p"))
+    }
 
   /** Spread a SCAN-FUSED pipeline across cores when the input layout
     * under-splits (optimization guide §2.5, "input skew: one huge
@@ -66,50 +115,44 @@ object Tables {
   def spread(df: DataFrame, dir: String, name: String,
       key: org.apache.spark.sql.Column): DataFrame = {
     val spark = df.sparkSession
-    val path = s"$dir/$name.parquet"
-    if (underSplit(spark, path)) {
-      // Partition-count sized by BYTES, not blindly the core count
-      // (guide §2.2: fewer, larger partitions): over-splitting a small
-      // table multiplies every downstream high-cardinality partial
-      // aggregation's emitted rows by the partition count (each
-      // partition emits ~its own copy of the group domain — measured 8×
-      // CPU on the stylometry query at 32 partitions over a 584 KB
-      // corpus). ~64 KB per partition keeps per-row compute parallel
-      // while bounding that blowup; production-sized inputs take the
-      // full core count.
-      val n = math.max(2L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        pathBytes(spark, path) / (64L * 1024))).toInt
-      df.repartition(n, key)
-    } else df
+    contentSummary(spark, pathOf(dir, name)) match {
+      case Some(summary) if underSplit(spark, summary) =>
+        // Partition-count sized by BYTES, not blindly the core count
+        // (guide §2.2: fewer, larger partitions): over-splitting a small
+        // table multiplies every downstream high-cardinality partial
+        // aggregation's emitted rows by the partition count (each
+        // partition emits ~its own copy of the group domain — measured 8×
+        // CPU on the stylometry query at 32 partitions over a 584 KB
+        // corpus). ~64 KB per partition keeps per-row compute parallel
+        // while bounding that blowup; production-sized inputs take the
+        // full core count.
+        val n = math.max(2L, math.min(
+          spark.sparkContext.defaultParallelism.toLong,
+          summary.getLength / (64L * 1024))).toInt
+        df.repartition(n, key)
+      case _ => df
+    }
   }
 
-  private def pathBytes(spark: SparkSession, path: String): Long = {
+  /** One listing of `path`; None when it cannot be listed (no spread). */
+  private def contentSummary(spark: SparkSession, path: String): Option[ContentSummary] =
     try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.getContentSummary(p).getLength
-    } catch { case scala.util.control.NonFatal(_) => 0L }
-  }
+      val p = new Path(path)
+      Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Floor below which a spread cannot pay for its exchange: tables this
     * small are dimension-sized (broadcast fodder). */
   private val SpreadFloorBytes = 256L * 1024
 
-  private def underSplit(spark: SparkSession, path: String): Boolean = {
-    val bytesAndFiles = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val s = fs.getContentSummary(p)
-      Some((s.getLength, math.max(1L, s.getFileCount)))
-    } catch { case scala.util.control.NonFatal(_) => None }
-    bytesAndFiles match {
-      case Some((bytes, files)) if bytes >= SpreadFloorBytes =>
-        val conf = spark.sessionState.conf
-        val splits = 1L + (bytes + files * conf.filesOpenCostInBytes - 1L) /
-          math.max(1L, conf.filesMaxPartitionBytes)
-        splits * 2 <= spark.sparkContext.defaultParallelism
-      case _ => false
+  private def underSplit(spark: SparkSession, summary: ContentSummary): Boolean = {
+    val bytes = summary.getLength
+    val files = math.max(1L, summary.getFileCount)
+    bytes >= SpreadFloorBytes && {
+      val conf = spark.sessionState.conf
+      val splits = 1L + (bytes + files * conf.filesOpenCostInBytes - 1L) /
+        math.max(1L, conf.filesMaxPartitionBytes)
+      splits * 2 <= spark.sparkContext.defaultParallelism
     }
   }
 

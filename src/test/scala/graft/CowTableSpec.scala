@@ -106,6 +106,27 @@ class CowTableSpec extends SparkSpec {
       .filter(col("k") === 3L).select("name").head().getString(0) === "v3")
   }
 
+  test("a duplicate-key MERGE source is rejected before any write: " +
+    "no new commit dir, no new manifest, version unchanged") {
+    val root = tmp()
+    CowTable.create(table(20), root, "k", nBuckets = 4)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listed(sub: String) = fs.listStatus(
+      new org.apache.hadoop.fs.Path(s"$root/$sub")).map(_.getPath.getName).toSet
+    val (commits, manifests) = (listed("data"), listed("manifests"))
+    val src = Seq((3L, "a", java.math.BigDecimal.valueOf(1)),
+      (3L, "b", java.math.BigDecimal.valueOf(2)),
+      (99L, "c", java.math.BigDecimal.valueOf(3))).toDF("k", "name", "bal")
+    val e = intercept[IllegalArgumentException] {
+      CowTable.merge(spark, root, src, "batch-dup")
+    }
+    assert(e.getMessage.contains("duplicate keys (3 rows, 2 distinct k)"), e.getMessage)
+    assert(listed("data") === commits, "a rejected merge must write no commit dir")
+    assert(listed("manifests") === manifests, "a rejected merge must write no manifest")
+    assert(CowTable.currentVersion(spark, root) === 1)
+  }
+
   test("commit atomicity: a snapshot number that got committed between " +
     "version read and manifest write makes the slower committer FAIL, " +
     "never silently overwrite (rename refuses an existing destination)") {
